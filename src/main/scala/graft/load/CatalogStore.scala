@@ -65,8 +65,8 @@ class CatalogStore(spark: SparkSession) {
     val staging = s"${hist}_staging_$pid"
     dropManaged(staging)
     // Branch counts ride the staging write via observe() — zero extra
-    // jobs (same pattern as Scd2Store.runLoad; processId must be unique
-    // per load).
+    // jobs. The whole history is observed and this load's rows are told
+    // apart by process_id, so processId must be unique per load.
     val obs = org.apache.spark.sql.Observation(s"cat_${table}_$pid")
     def branch(rectype: String) = count(
       when(col(ProcessId) === cfg.processId && col(RecType) === rectype, 1))

@@ -1,7 +1,8 @@
 package graft.load
 
 import graft.meta.Meta
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Merge configuration, the union of the reference loader signatures
@@ -62,14 +63,14 @@ case class MergeConfig(
   * DataFrame-out so results are oracle-checkable; [[Scd2Store]] adds the
   * history/current/new/changed/removed parquet layout.
   *
-  * Scale design (100 TB): every join is an equi-join on the uniformly
-  * distributed md5 `entity_id` — no surrogate-key lookup step, so hubs,
-  * satellites and links of one source can load in parallel (the reference's
-  * stated design goal, DataLoader.scala:15-21). The merge reads `existing`
-  * as the *current snapshot* (latest version per entity), not full history:
-  * incoming ⋈ current is bounded by entity count, never by history depth.
-  * Branch counts come from one `observe()` pass instead of the reference's
-  * 4-6 repeated `count()` actions (ParquetDataLoader.scala:493-497).
+  * Scale design (100 TB): the kernel ([[delta]]) reads a *snapshot* —
+  * the latest version per entity — never the full history, so a load
+  * costs O(current + batch), not O(history depth). [[Scd2Store]] hands it
+  * the stored `current.parquet`; the pure [[merge]] derives the snapshot
+  * from the in-memory history it is given. Everything keys on the
+  * uniformly distributed md5 `entity_id` — no surrogate-key lookup step,
+  * so hubs, satellites and links of one source can load in parallel (the
+  * reference's stated design goal, DataLoader.scala:15-21).
   */
 object Scd2Merge {
   import Meta._
@@ -129,9 +130,11 @@ object Scd2Merge {
   def snapshotAsOf(history: DataFrame, asOf: String): DataFrame =
     snapshot(history.filter(col(StartTime) <= lit(asOf).cast("timestamp")))
 
-  /** Dedup + project + rename + stamp metadata columns onto an incoming
-    * batch (reference: ParquetDataLoader.scala:292-322). Output columns:
-    * entity_id, [natural keys unless dropKeys], attrs…, then Meta.StampedCols.
+  /** Project + rename + stamp metadata columns onto an incoming batch
+    * (reference: ParquetDataLoader.scala:292-322). Output columns:
+    * entity_id, [natural keys unless dropKeys], attrs…, then
+    * Meta.StampedCols. Exact duplicates are removed by [[delta]], inside
+    * its per-entity partitioning.
     *
     * The delete-indicator column is *consumed* here (into `__is_delete`),
     * never persisted and never part of the change hash — a flipped flag must
@@ -141,7 +144,6 @@ object Scd2Merge {
     val projected = cfg.projection
       .map(p => incoming.select(p.map(col): _*)).getOrElse(incoming)
       .withColumnsRenamed(cfg.newNames)
-      .distinct()
     val keyCols = cfg.idFields.map(projected(_))
     // Load-metadata columns (delete flag, business-validity sources) are
     // consumed into their stamped forms: they must not ride in the payload
@@ -183,104 +185,111 @@ object Scd2Merge {
         delCol.as("__is_delete")): _*)
   }
 
-  /** Full merge: incoming batch vs existing history (None ⇒ first load). */
+  /** The kernel: the new history rows (I/U/D, versioned) that `incoming`
+    * makes against `snapshot` — the latest version per entity, logical
+    * deletes included (the stored `current.parquet`, or [[snapshot]] of a
+    * history; None ⇒ first load). Output columns are in history order.
+    *
+    * One co-partitioned pass: the snapshot rows and the stamped batch rows
+    * are unioned and grouped by a window on `entity_id` — a single
+    * exchange, and each entity's rows meet in one window partition, which
+    * decides for the entity:
+    *  - a live batch row is an Insert when the entity has no active
+    *    snapshot row, an Update when its change hash differs from the
+    *    active row's, and dropped otherwise;
+    *  - the active snapshot row becomes a Delete, restamped with this
+    *    load's process metadata, when the batch flags the entity — or, on
+    *    a full load, when the batch has no live row for it.
+    * Delete flags take precedence: an entity with both a live and a
+    * flagged row emits only the D row, so no U and D row tie on one
+    * version and the snapshot arg-max stays deterministic. Every emitted
+    * row takes version snapshot+1 (1 for a new lineage), so a re-inserted
+    * entity resumes after its delete instead of being shadowed by the
+    * stale D row. Exact-duplicate rows are removed last; the aggregate
+    * reuses the window's entity_id partitioning, so it adds no exchange.
+    * A full load of an unchanged universe emits nothing. */
+  def delta(incoming: DataFrame, snapshot: Option[DataFrame],
+      cfg: MergeConfig): DataFrame = {
+    val batch = stamp(incoming, cfg)
+      .withColumn(RecType, lit(null).cast("string"))
+      .withColumn(Version, lit(null).cast("int"))
+      .withColumn("__snap", lit(false))
+    val outCols = snapshot.map(_.columns.toSeq).getOrElse(
+      batch.columns.toSeq.filterNot(Seq("__is_delete", "__snap").contains))
+    val rows = snapshot.fold(batch)(_
+      .withColumn("__is_delete", lit(false))
+      .withColumn("__snap", lit(true))
+      .unionByName(batch))
+    val entity = Window.partitionBy(col(EntityId))
+    def fromSnapshot(c: String) = max(when(col("__snap"), col(c))).over(entity)
+    val decided = rows
+      .withColumn("__sn_version", fromSnapshot(Version))
+      .withColumn("__sn_rectype", fromSnapshot(RecType))
+      .withColumn("__sn_hash", fromSnapshot(HashedValue))
+      .withColumn("__flagged", max(col("__is_delete")).over(entity))
+      .withColumn("__live",
+        max(!col("__snap") && !col("__is_delete")).over(entity))
+    val active = col("__sn_rectype").isNotNull &&
+      col("__sn_rectype") =!= Rec.Delete
+    val emit = when(col("__snap"), active &&
+        (col("__flagged") || lit(!cfg.isDelta) && !col("__live")))
+      .otherwise(!col("__flagged") &&
+        (!active || col(HashedValue) =!= col("__sn_hash")))
+    val stamped = Map(
+      RecType -> when(col("__snap"), lit(Rec.Delete))
+        .when(active, lit(Rec.Update)).otherwise(lit(Rec.Insert)),
+      Version -> coalesce(col("__sn_version") + 1, lit(1)),
+      StartTime -> lit(cfg.processTime).cast("timestamp"),
+      ProcessDate -> lit(cfg.processTime).cast("date"),
+      ProcessType -> lit(cfg.processType),
+      ProcessId -> lit(cfg.processId),
+      UserId -> lit(cfg.userId))
+    decided.filter(emit)
+      .select(outCols.map(c => stamped.get(c).fold(col(c))(_.as(c))): _*)
+      .distinct()
+  }
+
+  /** Overwrite mode's rewrite of the old history: the versions `delta`
+    * supersedes (its U and D entities) get their open `end_time` set to
+    * this load's processTime (true SCD2 close-off, reference:
+    * ParquetDataLoader.scala:436-471). The caller appends the delta;
+    * append mode keeps history rows untouched and skips this. */
+  def closeOff(history: DataFrame, delta: DataFrame,
+      cfg: MergeConfig): DataFrame = {
+    val superseded = delta.filter(col(RecType) =!= Rec.Insert)
+      .select(col(EntityId)).distinct()
+    val closed = history.join(superseded, Seq(EntityId), "left_semi")
+      .withColumn(EndTime,
+        when(col(EndTime) === lit(OpenEndDate).cast("timestamp"),
+          lit(cfg.processTime).cast("timestamp"))
+          .otherwise(col(EndTime)))
+    history.join(superseded, Seq(EntityId), "left_anti").unionByName(closed)
+  }
+
+  /** Full merge: incoming batch vs existing history (None ⇒ first load).
+    * The history is reduced to its [[snapshot]] and run through [[delta]];
+    * the branches are filters of that one delta. */
   def merge(incoming: DataFrame, existingHistory: Option[DataFrame],
       cfg: MergeConfig): MergeResult = {
-    val inc = stamp(incoming, cfg)
+    def branches(d: DataFrame) =
+      Seq(Rec.Insert, Rec.Update, Rec.Delete).map(r => d.filter(col(RecType) === r))
     existingHistory match {
       case None =>
-        val first = inc.filter(!col("__is_delete"))
-          .withColumn(RecType, lit(Rec.Insert))
-          .withColumn(Version, lit(1))
-          .drop("__is_delete")
-        MergeResult(first, snapshot(first), first,
-          first.limit(0), first.limit(0))
+        val d = delta(incoming, None, cfg)
+        val Seq(ins, upd, del) = branches(d)
+        MergeResult(d, snapshot(d), ins, upd, del)
 
       case Some(hist) =>
+        // the snapshot feeds the kernel and the new current, the delta
+        // every branch and the new history: each is computed once
         val snap = snapshot(hist).cache()
-        val cur = snap.filter(col(RecType) =!= Rec.Delete)
-        // The stamped batch feeds four branch plans (inserted / changed /
-        // deleteIds / deleteFlagged) — cache it so stamp's distinct()
-        // shuffle runs once per merge, not once per branch.
-        val incC = inc.cache()
-        // Delete markers take precedence: an entity with both a live row and
-        // a delete-marker row in the same batch emits only the D row —
-        // otherwise a changed (U) and a removed (D) row would tie on the new
-        // version number and the snapshot arg-max would be nondeterministic.
-        val deleteFlagged = incC.filter(col("__is_delete"))
-          .select(col(EntityId)).distinct()
-        val incLive = incC.filter(!col("__is_delete")).drop("__is_delete")
-          .join(deleteFlagged, Seq(EntityId), "left_anti")
-        val curKeyed = cur.select(
-          col(EntityId).as("__ex_id"),
-          col(Version).as("__ex_version"),
-          col(HashedValue).as("__ex_hash"))
-
-        // J1: inserts — incoming entities absent from the active current.
-        // Version picks up after any prior (deleted) lineage rather than
-        // restarting at 1, so the snapshot arg-max can never be shadowed by
-        // a stale rectype='D' row.
-        val snapVersions = snap.select(
-          col(EntityId).as("__sn_id"), col(Version).as("__sn_version"))
-        val inserted = incLive
-          .join(curKeyed, col(EntityId) === col("__ex_id"), "left_anti")
-          .join(snapVersions, col(EntityId) === col("__sn_id"), "left")
-          .withColumn(RecType, lit(Rec.Insert))
-          .withColumn(Version, coalesce(col("__sn_version") + 1, lit(1)))
-          .drop("__sn_id", "__sn_version")
-
-        // J2: updates — present with a different change hash.
-        val changed = incLive
-          .join(curKeyed, col(EntityId) === col("__ex_id") &&
-            col(HashedValue) =!= col("__ex_hash"))
-          .withColumn(RecType, lit(Rec.Update))
-          .withColumn(Version, col("__ex_version") + 1)
-          .drop("__ex_id", "__ex_version", "__ex_hash")
-
-        // J3 / delete-indicator: logical deletes, stamped off the existing
-        // current row's attributes with fresh process metadata. Full loads
-        // delete by absence from the live incoming set AND by delete flag;
-        // delta loads only by flag.
-        val deleteIds: DataFrame =
-          if (!cfg.isDelta)
-            cur.select(col(EntityId))
-              .join(incLive.select(col(EntityId)), Seq(EntityId), "left_anti")
-              .unionByName(deleteFlagged).distinct()
-          else
-            deleteFlagged
-        val removed = cur
-          .join(deleteIds, Seq(EntityId), "left_semi")
-          .withColumn(RecType, lit(Rec.Delete))
-          .withColumn(Version, col(Version) + 1)
-          .withColumn(StartTime, lit(cfg.processTime).cast("timestamp"))
-          .withColumn(ProcessDate, lit(cfg.processTime).cast("date"))
-          .withColumn(ProcessType, lit(cfg.processType))
-          .withColumn(ProcessId, lit(cfg.processId))
-          .withColumn(UserId, lit(cfg.userId))
-
-        val outCols = inserted.columns.map(col).toSeq
-        val delta = inserted.select(outCols: _*)
-          .unionByName(changed.select(outCols: _*))
-          .unionByName(removed.select(outCols: _*))
-
-        // Overwrite mode closes superseded versions (true SCD2 close-off,
-        // reference: ParquetDataLoader.scala:436-471); append mode keeps
-        // history rows untouched.
+        val d = delta(incoming, Some(snap), cfg).cache()
         val newHistory =
-          if (cfg.overwrite) {
-            val superseded = changed.select(col(EntityId))
-              .unionByName(removed.select(col(EntityId))).distinct()
-            val closed = hist.join(superseded, Seq(EntityId), "left_semi")
-              .withColumn(EndTime,
-                when(col(EndTime) === lit(OpenEndDate).cast("timestamp"),
-                  lit(cfg.processTime).cast("timestamp"))
-                  .otherwise(col(EndTime)))
-            val untouched = hist.join(superseded, Seq(EntityId), "left_anti")
-            untouched.unionByName(closed).unionByName(delta.select(outCols: _*))
-          } else hist.unionByName(delta.select(outCols: _*))
-
-        MergeResult(newHistory, snapshot(newHistory), inserted, changed,
-          removed, cachedPlans = Seq(snap, incC))
+          if (cfg.overwrite) closeOff(hist, d, cfg).unionByName(d)
+          else hist.unionByName(d)
+        val Seq(ins, upd, del) = branches(d)
+        MergeResult(newHistory, snapshot(snap.unionByName(d)), ins, upd, del,
+          cachedPlans = Seq(snap, d))
     }
   }
 }

@@ -2,24 +2,31 @@ package graft.load
 
 import graft.meta.Meta
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Parquet persistence for SCD2 loads — the reference's on-disk contract
   * (reference: diamond/load/usage.md "Files created"):
   *
-  * `<base>/<table>/history.parquet`   full versioned history
-  * `<base>/<table>/current.parquet`   latest version per entity
+  * `<base>/<table>/history.parquet`   full versioned history, append-only:
+  *                                    each load adds its delta as new part
+  *                                    files (only overwrite mode rewrites it)
+  * `<base>/<table>/current.parquet`   latest version per entity, logical
+  *                                    deletes included; the snapshot each
+  *                                    load merges against, rebuilt per load
   * `<base>/<table>/new.parquet` / `changed.parquet` / `removed.parquet`
   *                                    per-load change tables, partitioned by
   *                                    process_date with N-day retention
   *                                    (reference: ParquetDataLoader.scala:1067-1103)
   * `<base>/<table>/proc.csv`          load-stats log
   *
-  * Scale notes: change tables are `partitionBy(process_date)` so retention
-  * is a driver-side partition-directory delete, not a data rewrite. Load
-  * stats come from `observe()` metrics on the single history write — the
-  * reference re-ran `count()` 4-6 times over the same lineage
+  * Scale notes: a delta load reads current, never history, so it costs
+  * O(current + batch) however deep the history grows. Change tables are
+  * `partitionBy(process_date)` so retention is a driver-side
+  * partition-directory delete, not a data rewrite. Load stats come from
+  * `observe()` metrics on the single delta write — the reference re-ran
+  * `count()` 4-6 times over the same lineage
   * (ParquetDataLoader.scala:493-497).
   */
 class Scd2Store(val spark: SparkSession, base: String) {
@@ -58,74 +65,222 @@ class Scd2Store(val spark: SparkSession, base: String) {
   def readSnapshotAsOf(table: String, asOf: String): DataFrame =
     Scd2Merge.snapshotAsOf(spark.read.parquet(p(table, "history")), asOf)
 
-  /** Run a merge against the stored history and persist all outputs.
+  /** Run a merge against the stored current snapshot and publish it.
     * Returns the per-branch counts (inserted/changed/removed).
     *
-    * Branch counts ride on the history write via `observe()` — rows of
-    * this load are identified by (process_id, rectype), so the metrics
-    * cost zero extra jobs (the reference re-ran `count()` 4-6 times over
-    * the same lineage, ParquetDataLoader.scala:493-497). `processId` must
-    * be unique per load for the attribution to hold. */
+    * The kernel ([[Scd2Merge.delta]]) runs once against `current.parquet`
+    * (a first load against nothing); its cached delta is staged once, in
+    * the stored schema, and appended to history as new part files. The
+    * new current is `snapshot(current ∪ delta)`; the change tables are the
+    * delta split by rectype. Branch counts ride the delta write via
+    * `observe()`, so they cost no extra job. Only overwrite mode, whose
+    * close-off edits old versions, stages a full history rewrite.
+    *
+    * The publish — the one crash window of a load — runs:
+    *  1. stage the new current, then the history rows and the change-table
+    *     rows, under fixed hidden names in the table directory;
+    *  2. swap current — the commit point;
+    *  3. move the staged rows into history and the change tables;
+    *  4. drop the backups.
+    * A recovery preamble runs first and finishes or undoes a publish that a
+    * crash cut short, so a rerun — or a streaming batch replayed after a
+    * crash — never appends a version twice. Single writer per table, like
+    * every store mutation. */
   def runLoad(table: String, incoming: DataFrame, cfg: MergeConfig): Map[String, Long] = {
+    recoverLoad(table)
     requireCompatibleHashEncoding(table)
-    val result = Scd2Merge.merge(incoming, readHistory(table), cfg)
-    // The merge plan reads the OLD history lazily, so the new history is
-    // written to a staging dir and swapped in with a rename — never an
-    // overwrite-in-place of an input path.
-    val conf = spark.sessionState.newHadoopConf()
-    val histPath = new Path(p(table, "history"))
-    val staging = new Path(s"$base/$table/.history_staging_${cfg.processId}")
-    val fs = histPath.getFileSystem(conf)
-    val obs = org.apache.spark.sql.Observation(s"scd2_${table}_${cfg.processId}")
-    def branch(rectype: String) = count(
-      when(col(ProcessId) === cfg.processId && col(RecType) === rectype, 1))
-    result.history
-      .observe(obs,
+    val dir = tableDir(table)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val curPath = new Path(p(table, "current"))
+    val snap =
+      if (fs.exists(curPath)) Some(spark.read.parquet(curPath.toString))
+      else readHistory(table).map(Scd2Merge.snapshot)
+    val delta = inSchemaOf(snap, Scd2Merge.delta(incoming, snap, cfg)).cache()
+    try {
+      // 1. stage — current first: while it is staged, the load is undone
+      Scd2Merge.snapshot(snap.fold(delta)(_.unionByName(delta)))
+        .write.mode("overwrite").parquet(new Path(dir, StagedCurrent).toString)
+      val obs = org.apache.spark.sql.Observation(s"scd2_${table}_${cfg.processId}")
+      def branch(rectype: String) = count(when(col(RecType) === rectype, 1))
+      val counted = delta.observe(obs,
         branch(Rec.Insert).as("inserted"),
         branch(Rec.Update).as("changed"),
         branch(Rec.Delete).as("removed"))
-      .write.mode("overwrite").parquet(staging.toString)
-    val metrics = obs.get
-    val counts = Map(
-      "inserted" -> metrics("inserted").asInstanceOf[Long],
-      "changed" -> metrics("changed").asInstanceOf[Long],
-      "removed" -> metrics("removed").asInstanceOf[Long])
-    if (cfg.writeChangeTables) {
-      result.inserted.write.mode("append").partitionBy(ProcessDate).parquet(p(table, "new"))
-      result.changed.write.mode("append").partitionBy(ProcessDate).parquet(p(table, "changed"))
-      result.removed.write.mode("append").partitionBy(ProcessDate).parquet(p(table, "removed"))
+      val hist = new Path(p(table, "history"))
+      val (rows, staged) =
+        if (cfg.overwrite && fs.exists(hist))
+          Scd2Merge.closeOff(spark.read.parquet(hist.toString), delta, cfg)
+            .unionByName(counted) -> StagedHistory
+        else counted -> StagedDelta
+      // rebalance: AQE sizes the files, so a small delta lands in one
+      // file instead of one per shuffle partition of the kernel
+      rows.hint("rebalance")
+        .write.mode("overwrite").parquet(new Path(dir, staged).toString)
+      val metrics = obs.get
+      val counts = Seq("inserted", "changed", "removed")
+        .map(k => k -> metrics(k).asInstanceOf[Long]).toMap
+      // nothing changed: publish nothing, not even a new current
+      if (counts.values.sum == 0 && snap.nonEmpty) discardStaged(fs, dir)
+      else {
+        if (cfg.writeChangeTables)
+          delta.withColumn(ChangeTableCol,
+              when(col(RecType) === Rec.Insert, "new")
+                .when(col(RecType) === Rec.Update, "changed").otherwise("removed"))
+            .hint("rebalance", col(ChangeTableCol), col(ProcessDate))
+            .write.mode("overwrite").partitionBy(ChangeTableCol, ProcessDate)
+            .parquet(new Path(dir, StagedChanges).toString)
+        // 2. commit
+        swapIn(fs, new Path(dir, StagedCurrent), curPath, new Path(dir, CurrentBackup))
+        // 3. + 4.
+        finishLoad(table)
+      }
+      counts
+    } finally delta.unpersist()
+  }
+
+  // Hidden (dot-prefixed, so invisible to parquet readers) names of the
+  // load publish, fixed per table: any crash leaves findable state.
+  private val StagedCurrent = ".load_current"
+  private val StagedDelta = ".load_delta"
+  private val StagedHistory = ".load_history"
+  private val StagedChanges = ".load_changes"
+  private val CurrentBackup = ".current_backup"
+  private val HistoryBackup = ".history_backup"
+  private val ChangeTableCol = "__change_table"
+
+  private def tableDir(table: String) = new Path(s"$base/$table")
+
+  /** `delta` in the stored tables' column order and types: its files land
+    * beside those of earlier loads, so the schema must match theirs.
+    * (current.parquet and history.parquet share one schema.) A batch
+    * column of a wider type than the stored one fails loud rather than
+    * narrowing silently. */
+  private def inSchemaOf(stored: Option[DataFrame], delta: DataFrame): DataFrame =
+    stored.fold(delta) { s =>
+      delta.select(s.schema.fields.toSeq.map { f =>
+        val have = delta.schema(f.name).dataType
+        if (have.catalogString == f.dataType.catalogString) col(f.name)
+        else {
+          require(Cast.canUpCast(have, f.dataType),
+            s"column ${f.name} is ${have.catalogString} in this batch but " +
+              s"${f.dataType.catalogString} in the stored table")
+          col(f.name).cast(f.dataType).as(f.name)
+        }
+      }: _*)
     }
-    result.unpersist()
-    // Swap via backup, never delete-then-rename: HDFS `rename` reports
-    // failure as `false` rather than throwing, and a crash between a delete
-    // and a rename would permanently lose the history table.
-    val backup = new Path(s"$base/$table/.history_backup_${cfg.processId}")
-    if (fs.exists(backup)) fs.delete(backup, true)
-    val hadOld = fs.exists(histPath)
-    if (hadOld && !fs.rename(histPath, backup))
+
+  /** Rename `staged` to `live`, moving an existing `live` aside to
+    * `backup` first — never delete-then-rename: HDFS `rename` reports
+    * failure as `false` rather than throwing, and a crash between a delete
+    * and a rename would lose the table. */
+  private def swapIn(fs: FileSystem, staged: Path, live: Path, backup: Path): Unit = {
+    if (fs.exists(live) && !fs.rename(live, backup))
       throw new java.io.IOException(
-        s"could not move $histPath aside to $backup; history left untouched")
-    if (!fs.rename(staging, histPath)) {
-      if (hadOld) fs.rename(backup, histPath)
-      throw new java.io.IOException(
-        s"could not publish $staging to $histPath; old history restored")
+        s"could not move $live aside to $backup; $live left untouched")
+    if (!fs.rename(staged, live)) {
+      if (!fs.exists(live) && fs.exists(backup)) fs.rename(backup, live)
+      throw new java.io.IOException(s"could not publish $staged to $live")
     }
-    val hist = spark.read.parquet(histPath.toString)
-    Scd2Merge.snapshot(hist).write.mode("overwrite").parquet(p(table, "current"))
-    if (hadOld) fs.delete(backup, true)
-    counts
+  }
+
+  /** Move the part files of `from` into `to` (the whole directory when `to`
+    * does not exist yet), then drop `from`. Part names carry the writing
+    * job's UUID, so they never collide with files already in `to`; a
+    * rerun after a crash moves only the files still left in `from`. */
+  private def moveParts(fs: FileSystem, from: Path, to: Path): Unit = {
+    if (!fs.exists(to)) {
+      fs.mkdirs(to.getParent)
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"could not move $from to $to")
+    } else {
+      fs.listStatus(from).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).foreach { f =>
+          if (!fs.rename(f, new Path(to, f.getName)))
+            throw new java.io.IOException(s"could not move $f into $to")
+        }
+      fs.delete(from, true)
+    }
+  }
+
+  private def discardStaged(fs: FileSystem, dir: Path): Unit =
+    Seq(StagedCurrent, StagedDelta, StagedHistory, StagedChanges)
+      .foreach(n => fs.delete(new Path(dir, n), true))
+
+  /** Steps 3–4 of a committed load: move the staged rows into history
+    * (overwrite mode: swap the staged rewrite in) and into the change
+    * tables, then drop the backups. Every step is idempotent. */
+  private def finishLoad(table: String): Unit = {
+    val dir = tableDir(table)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val hist = new Path(p(table, "history"))
+    val stagedHistory = new Path(dir, StagedHistory)
+    if (fs.exists(stagedHistory))
+      swapIn(fs, stagedHistory, hist, new Path(dir, HistoryBackup))
+    val stagedDelta = new Path(dir, StagedDelta)
+    if (fs.exists(stagedDelta)) moveParts(fs, stagedDelta, hist)
+    val changes = new Path(dir, StagedChanges)
+    if (fs.exists(changes)) {
+      for {
+        t <- fs.listStatus(changes) if t.isDirectory
+        part <- fs.listStatus(t.getPath) if part.isDirectory
+      } moveParts(fs, part.getPath, new Path(
+        p(table, t.getPath.getName.stripPrefix(s"$ChangeTableCol=")),
+        part.getPath.getName))
+      fs.delete(changes, true)
+    }
+    fs.listStatus(dir).map(_.getPath).filter { b =>
+      b.getName == CurrentBackup || b.getName.startsWith(HistoryBackup) ||
+        b.getName.startsWith(".history_staging_")
+    }.foreach(fs.delete(_, true))
+  }
+
+  /** The recovery preamble of [[runLoad]]: bring a table whose last load
+    * crashed mid-publish back to a consistent history/current pair.
+    *  - A history backup with no live history — an overwrite swap cut
+    *    between its two renames, or the `.history_backup_<processId>` that
+    *    the full-history rewrite of earlier versions left when cut the
+    *    same way — is restored first, so the next load can never take the
+    *    first-load path over an orphaned history.
+    *  - A staged current means the load never committed: current is
+    *    restored from its backup if the swap was cut between its renames,
+    *    and every staged output is dropped (a rerun redoes the load).
+    *  - A `.history_backup_<processId>` beside a live history is that
+    *    earlier rewrite cut after its history swap, before or while it
+    *    rewrote current: current may lag history, so it is rebuilt.
+    *  - Then a committed load is rolled forward ([[finishLoad]]). */
+  private def recoverLoad(table: String): Unit = {
+    val dir = tableDir(table)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(dir)) {
+      val hist = new Path(p(table, "history"))
+      val cur = new Path(p(table, "current"))
+      def backups = fs.listStatus(dir).map(_.getPath)
+        .filter(_.getName.startsWith(HistoryBackup))
+      backups.foreach(b => if (!fs.exists(hist)) fs.rename(b, hist))
+      if (fs.exists(new Path(dir, StagedCurrent))) {
+        val backup = new Path(dir, CurrentBackup)
+        if (!fs.exists(cur) && fs.exists(backup)) fs.rename(backup, cur)
+        discardStaged(fs, dir)
+      }
+      if (backups.exists(_.getName != HistoryBackup)) {
+        val staged = new Path(dir, StagedCurrent)
+        Scd2Merge.snapshot(spark.read.parquet(hist.toString))
+          .write.mode("overwrite").parquet(staged.toString)
+        swapIn(fs, staged, cur, new Path(dir, CurrentBackup))
+      }
+      finishLoad(table)
+    }
   }
 
   /** Publish the stored history and current views as catalog tables
     * BUCKETED (and sorted) on entity_id
     * ([[graft.relational.Joins.writeBucketed]]) — the storage layout for
-    * a table merged every day. Every join in the merge kernel keys on
-    * entity_id (inserts anti-join, changed-detection join, delete
-    * semi-join), so against a staged batch bucketed the same way they run
-    * EXCHANGE-FREE (plan-guarded in PlanGuardSpec), and against a plain
-    * unbucketed delta only the small batch side shuffles — the 100 TB
-    * history/current side is never re-partitioned, load after load.
-    * Returns the (history, current) catalog table names. */
+    * tables joined on entity_id every day: a join against a staged batch
+    * bucketed the same way runs EXCHANGE-FREE (plan-guarded in
+    * PlanGuardSpec), and against a plain unbucketed batch only the small
+    * batch side shuffles — the 100 TB history/current side is never
+    * re-partitioned, load after load. Returns the (history, current)
+    * catalog table names. */
   def publishBucketed(table: String, buckets: Int): (String, String) = {
     val histT = s"${table}_history_bucketed"
     val curT = s"${table}_current_bucketed"
@@ -214,16 +369,8 @@ class Scd2Store(val spark: SparkSession, base: String) {
     val out = fs.create(tmp, true)
     try out.write((existing + line).getBytes("UTF-8")) finally out.close()
     val aside = new Path(f, s".proc_$tag.old")
-    val hadOld = fs.exists(procPath)
-    if (hadOld && !fs.rename(procPath, aside))
-      throw new java.io.IOException(
-        s"could not move $procPath aside to $aside; log left untouched")
-    if (!fs.rename(tmp, procPath)) {
-      if (hadOld) fs.rename(aside, procPath)
-      throw new java.io.IOException(
-        s"could not publish $tmp to $procPath; old log restored")
-    }
-    if (hadOld) fs.delete(aside, false)
+    swapIn(fs, tmp, procPath, aside)
+    fs.delete(aside, false)
   }
 
   /** S15 meta-file sink: load parameters as `<base>/<table>/meta.json`
@@ -260,7 +407,7 @@ class Scd2Store(val spark: SparkSession, base: String) {
   /** Crash-safe in-place consolidation of one parquet directory: rows are
     * rewritten into `targetFiles` files in a dot-prefixed staging dir
     * (invisible to parquet readers), then swapped in via the same
-    * rename-aside discipline as [[runLoad]]'s history publish. The swap
+    * rename-aside discipline as [[runLoad]]'s current swap. The swap
     * itself is two renames; a crash exactly between them leaves the data
     * at the DETERMINISTIC backup name (tags are content-addressed, never
     * timestamped), and the recovery preamble of the next call — or of
@@ -285,14 +432,7 @@ class Scd2Store(val spark: SparkSession, base: String) {
       .drop(dropCols: _*)
       .repartition(targetFiles)
       .write.mode("overwrite").parquet(staging.toString)
-    if (!fs.rename(dir, backup))
-      throw new java.io.IOException(
-        s"could not move $dir aside to $backup; data left untouched")
-    if (!fs.rename(staging, dir)) {
-      fs.rename(backup, dir)
-      throw new java.io.IOException(
-        s"could not publish $staging to $dir; old data restored")
-    }
+    swapIn(fs, staging, dir, backup)
     fs.delete(backup, true)
   }
 
@@ -303,11 +443,11 @@ class Scd2Store(val spark: SparkSession, base: String) {
   }
 
   /** Consolidate the history and current tables to `targetFiles` files
-    * each. Every load's full-history rewrite emits one file per shuffle
-    * partition regardless of data size, so a long-lived small table
-    * carries hundreds of KB-sized files whose open/footer cost dominates
-    * reads (the classic small-file problem; the reference's README asks
-    * for the same "stitching function"). Run in a maintenance window —
+    * each. Every load appends its delta to history as new part files,
+    * however few rows changed, so a long-lived table carries hundreds of
+    * KB-sized files whose open/footer cost dominates reads (the classic
+    * small-file problem; the reference's README asks for the same
+    * "stitching function"). Run in a maintenance window —
     * single-writer-per-table, like every store mutation. */
   def compactHistory(table: String, targetFiles: Int = 8): Unit = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")

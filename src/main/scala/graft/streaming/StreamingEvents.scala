@@ -65,11 +65,14 @@ object StreamingEvents {
   /** SCD2 streaming ingest (the reference's "reactive pipeline" roadmap
     * item realized): each micro-batch runs through the SAME
     * [[graft.load.Scd2Store.runLoad]] merge the batch path uses, via
-    * `foreachBatch` — history/current parquet stay transactionally
-    * published per batch, and the merge semantics (I/U/D, versioning,
-    * delete detection) are literally the batch kernel's, not a parallel
-    * implementation. `mkConfig` stamps each batch with a UNIQUE processId
-    * (required for the observe()-metric attribution in runLoad).
+    * `foreachBatch`, and the merge semantics (I/U/D, versioning, delete
+    * detection) are literally the batch kernel's, not a parallel
+    * implementation. Each batch's delta is appended to history and
+    * current swapped through the store's one publish protocol; a batch
+    * replayed after a crash first has the interrupted publish finished or
+    * undone by runLoad's recovery preamble, then merges against the
+    * resulting current, so it appends no duplicate versions. `mkConfig`
+    * stamps each batch's processId (the `process_id` column of its rows).
     *
     * Returns the started query; callers own checkpointing/termination.
     * Delta loads only — a stream never sees the "full" universe, so

@@ -328,10 +328,41 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  it should "merge a delta load against the stored current in one exchange" in {
+    // the SCD2 kernel co-groups the stamped batch with the stored
+    // snapshot in ONE entity_id exchange; its window and its duplicate
+    // removal reuse that partitioning. Per-branch joins (inserts,
+    // changes, deletes each joining the batch to current) would add
+    // exchanges per branch — this bound keeps the kernel one pass.
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.load.{MergeConfig, Scd2Merge, Scd2Store}
+    withStaticShufflePlans {
+      val dir = java.nio.file.Files.createTempDirectory("graft_kernel").toString
+      val store = new Scd2Store(spark, dir)
+      val cfg = MergeConfig(idFields = Seq("cid"), idType = "cust",
+        entityType = "cust", source = "unit", processType = "load",
+        processId = "p1", userId = "t",
+        processTime = "2024-03-01 00:00:00", isDelta = true,
+        deleteIndicatorField = Some(("del", Seq("Y"))))
+      store.runLoad("k", (1 to 20).map(i => (i, s"v$i", "N"))
+        .toDF("cid", "v", "del"), cfg)
+      val delta = Scd2Merge.delta(
+        Seq((1, "w1", "N"), (2, "v2", "Y"), (30, "v30", "N"))
+          .toDF("cid", "v", "del"),
+        Some(spark.read.parquet(s"$dir/k/current.parquet")),
+        cfg.copy(processId = "p2", processTime = "2024-03-02 00:00:00"))
+      val plan = delta.queryExecution.executedPlan
+      plan.collect { case e: ShuffleExchangeExec => e } should have size 1
+      planOf(delta) should not include "Join"
+      delta.select("cid", "rectype", "version").as[(Int, String, Int)]
+        .collect().sorted shouldBe Array((1, "U", 2), (2, "D", 2), (30, "I", 1))
+    }
+  }
+
   it should "run the SCD2 changed-detection join exchange-free on bucketed tables" in {
-    // the daily-merge layout: history/current published bucketed on
-    // entity_id, the staged batch bucketed the same way — every merge
-    // join keys on entity_id, so neither side shuffles, load after load
+    // the publishBucketed layout: history/current published bucketed on
+    // entity_id, a staged batch bucketed the same way — a join of the
+    // two on entity_id shuffles neither side, load after load
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import graft.load.{MergeConfig, Scd2Merge, Scd2Store}
     import graft.meta.Meta
@@ -353,8 +384,7 @@ class PlanGuardSpec extends SparkSpec {
         .history
       graft.relational.Joins.writeBucketed(staged, "bt_staged",
         Seq(Meta.EntityId), buckets = 4)
-      // the merge kernel's J2 shape: incoming ⋈ current on entity_id
-      // with a change-hash mismatch
+      // incoming ⋈ current on entity_id with a change-hash mismatch
       val changed = spark.table("bt_staged").join(
         spark.table(curT).select(col(Meta.EntityId).as("__ex_id"),
           col(Meta.HashedValue).as("__ex_hash")),

@@ -1,8 +1,10 @@
 package graft
 
-import graft.load.{MergeConfig, Scd2Store}
+import graft.load.{MergeConfig, Scd2Merge, Scd2Store}
+import graft.meta.Meta
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 /** On-disk lifecycle of the SCD2 store: history/current/change tables,
   * counts, retention (reference contract: diamond/load/usage.md
@@ -33,9 +35,179 @@ class Scd2StoreSpec extends SparkSpec {
     cur.filter(col("cid") === 1).select("v").as[String].head() shouldBe "a2"
     // full history retained
     spark.read.parquet(s"$dir/t1/history.parquet").count() shouldBe 4
-    // no leftover staging/backup dirs after a successful swap
-    new java.io.File(s"$dir/t1").listFiles().map(_.getName)
-      .filter(n => n.startsWith(".history_")) shouldBe empty
+    // no leftover staging/backup dirs after a successful publish
+    hiddenDirs(s"$dir/t1") shouldBe empty
+  }
+
+  private def hiddenDirs(table: String): Seq[String] =
+    new java.io.File(table).listFiles().toSeq
+      .filter(f => f.isDirectory && f.getName.startsWith(".")).map(_.getName)
+
+  private def rows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+
+  private def copyTree(from: Path, to: Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.iterator().asScala.foreach { src =>
+      val dst = to.resolve(from.relativize(src).toString)
+      if (Files.isDirectory(src)) Files.createDirectories(dst)
+      else Files.copy(src, dst)
+    } finally walk.close()
+  }
+
+  private def partFiles(dir: Path): Set[String] =
+    if (!Files.isDirectory(dir)) Set.empty
+    else {
+      val l = Files.list(dir)
+      try l.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("part-")).toSet
+      finally l.close()
+    }
+
+  /** The store invariants a crash must never break: current is the
+    * active snapshot of history, and no version was appended twice. */
+  private def assertConsistent(store: Scd2Store, dir: String, table: String): Unit = {
+    val hist = spark.read.parquet(s"$dir/$table/history.parquet")
+    store.readCurrent(table).collect().map(_.toString).sorted shouldBe
+      Scd2Merge.currentActive(hist).collect().map(_.toString).sorted
+    hist.groupBy(Meta.EntityId, Meta.Version).count()
+      .filter(col("count") > 1).count() shouldBe 0
+    hiddenDirs(s"$dir/$table") shouldBe empty
+  }
+
+  it should "finish or undo a load publish cut at any step, and replay it as a no-op" in {
+    val del = Some(("del", Seq("Y")))
+    def load(store: Scd2Store, pid: String, day: Int,
+        rows: Seq[(Int, String, String)]): Map[String, Long] =
+      store.runLoad("t", rows.toDF("cid", "v", "del"), cfg(pid).copy(
+        processTime = f"2024-04-$day%02d 00:00:00", deleteIndicatorField = del))
+    val s0 = Files.createTempDirectory("scd2crash_s0")
+    load(new Scd2Store(spark, s0.toString), "p1", 1,
+      Seq((1, "a", "N"), (2, "b", "N"), (3, "c", "N"), (4, "d", "N")))
+    load(new Scd2Store(spark, s0.toString), "p2", 2,
+      Seq((4, "d", "Y"), (5, "e", "N")))
+    // the load under test: an update, an insert, a delete flag and a
+    // re-insert of the entity deleted by p2
+    val batch = Seq((1, "a2", "N"), (6, "f", "N"), (2, "b", "Y"), (4, "d2", "N"))
+    // reference: the same load run uninterrupted on a copy of the store
+    val s1 = Files.createTempDirectory("scd2crash_s1")
+    copyTree(s0.resolve("t"), s1.resolve("t"))
+    val want = load(new Scd2Store(spark, s1.toString), "p3", 3, batch)
+    want shouldBe Map("inserted" -> 2L, "changed" -> 1L, "removed" -> 1L)
+    val changeTables = Seq("new", "changed", "removed")
+    def snapshotOf(d: Path): Seq[Seq[String]] =
+      ("history" +: changeTables).map(n => rows(s"$d/t/$n.parquet")) :+
+        rows(s"$d/t/current.parquet")
+    val reference = snapshotOf(s1)
+    val day = "process_date=2024-04-03"
+    // what the publish staged, recovered from the reference: its history
+    // delta and its change-table files are the part files p3 added
+    val deltaFiles = partFiles(s1.resolve("t/history.parquet")) --
+      partFiles(s0.resolve("t/history.parquet"))
+    deltaFiles should not be empty
+    def stage(t: Path, committed: Boolean, deltaMoved: Int,
+        changesMoved: Boolean): Unit = {
+      Files.createDirectories(t.resolve(".load_delta"))
+      deltaFiles.toSeq.sorted.zipWithIndex.foreach { case (f, i) =>
+        copyTree(s1.resolve(s"t/history.parquet/$f"),
+          if (i < deltaMoved) t.resolve(s"history.parquet/$f")
+          else t.resolve(s".load_delta/$f"))
+      }
+      for (n <- changeTables) {
+        val part = s1.resolve(s"t/$n.parquet/$day")
+        val into =
+          if (changesMoved) t.resolve(s"$n.parquet/$day")
+          else t.resolve(s".load_changes/__change_table=$n/$day")
+        copyTree(part, into)
+      }
+      if (committed) {
+        Files.move(t.resolve("current.parquet"), t.resolve(".current_backup"))
+        copyTree(s1.resolve("t/current.parquet"), t.resolve("current.parquet"))
+      } else copyTree(s1.resolve("t/current.parquet"), t.resolve(".load_current"))
+    }
+    // every state the publish can be cut in, built by hand from the
+    // pre-load store; `true` marks the states past the commit point
+    val states: Seq[(String, Boolean, Path => Unit)] = Seq(
+      ("staged, not committed", false,
+        t => stage(t, committed = false, 0, changesMoved = false)),
+      ("cut inside the current swap", false, { t =>
+        stage(t, committed = false, 0, changesMoved = false)
+        Files.move(t.resolve("current.parquet"), t.resolve(".current_backup"))
+      }),
+      ("committed, nothing moved", true,
+        t => stage(t, committed = true, 0, changesMoved = false)),
+      ("committed, delta partly moved", true,
+        t => stage(t, committed = true, deltaFiles.size - 1, changesMoved = false)),
+      ("committed, change tables pending", true,
+        t => stage(t, committed = true, deltaFiles.size, changesMoved = false)),
+      ("committed, only the backup left", true, { t =>
+        stage(t, committed = true, deltaFiles.size, changesMoved = true)
+        Files.delete(t.resolve(".load_delta"))
+      }))
+    for ((state, committed, build) <- states) withClue(s"$state: ") {
+      val d = Files.createTempDirectory("scd2crash")
+      copyTree(s0.resolve("t"), d.resolve("t"))
+      build(d.resolve("t"))
+      hiddenDirs(s"$d/t") should not be empty
+      val store = new Scd2Store(spark, d.toString)
+      // the replayed batch: recovery finishes a committed publish (the
+      // replay then changes nothing) or undoes an uncommitted one (the
+      // replay then is the load itself)
+      load(store, "p3", 3, batch) shouldBe
+        (if (committed) want.map { case (k, _) => k -> 0L } else want)
+      snapshotOf(d) shouldBe reference
+      assertConsistent(store, d.toString, "t")
+      // a further replay is a no-op
+      load(store, "p3", 3, batch).values.sum shouldBe 0
+      snapshotOf(d) shouldBe reference
+    }
+  }
+
+  it should "recover the states a cut full-history rewrite left behind" in {
+    // the publish this store used before loads became append-only:
+    // history rewritten to a staging dir, moved aside to
+    // `.history_backup_<processId>`, the staging renamed in, then current
+    // rewritten from history and the backup dropped
+    def twoLoads(): (Path, Scd2Store) = {
+      val dir = Files.createTempDirectory("scd2legacy")
+      val store = new Scd2Store(spark, dir.toString)
+      store.runLoad("t", Seq((1, "a"), (2, "b")).toDF("cid", "v"), cfg("p1"))
+      copyTree(dir.resolve("t"), dir.resolve("after_p1"))
+      store.runLoad("t", Seq((1, "a2")).toDF("cid", "v"),
+        cfg("p2").copy(processTime = "2024-03-02 00:00:00"))
+      (dir, store)
+    }
+    // the load after the crash, by another process: re-sends entity 1's
+    // p2 value and adds entity 3
+    def load3(store: Scd2Store) = store.runLoad("t",
+      Seq((1, "a2"), (3, "c")).toDF("cid", "v"),
+      cfg("p3").copy(processTime = "2024-03-03 00:00:00"))
+    val expected = Map("inserted" -> 1L, "changed" -> 0L, "removed" -> 0L)
+
+    // cut between the two renames: the history sits at the backup name,
+    // nothing live — the load must merge onto the restored history, not
+    // take the first-load path and orphan it
+    val (d1, s1) = twoLoads()
+    val before = rows(s"$d1/t/history.parquet")
+    Files.move(d1.resolve("t/history.parquet"), d1.resolve("t/.history_backup_p2"))
+    load3(s1) shouldBe expected
+    rows(s"$d1/t/history.parquet").filterNot(before.contains) should have size 1
+    assertConsistent(s1, d1.toString, "t")
+
+    // cut after the history swap, before current was rewritten: the
+    // backup holds p1's history beside p2's, and current is p1's — the
+    // load must not merge against that stale current
+    val (d2, s2) = twoLoads()
+    copyTree(d2.resolve("after_p1/history.parquet"), d2.resolve("t/.history_backup_p2"))
+    val stale = d2.resolve("t/current.parquet")
+    val walk = Files.walk(stale)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(f => Files.delete(f))
+    finally walk.close()
+    copyTree(d2.resolve("after_p1/current.parquet"), stale)
+    load3(s2) shouldBe expected
+    rows(s"$d2/t/history.parquet") should have size 4
+    assertConsistent(s2, d2.toString, "t")
   }
 
   it should "compact history, current and change tables without changing read-backs" in {
@@ -45,8 +217,8 @@ class Scd2StoreSpec extends SparkSpec {
       store.runLoad("t1", rows.toDF("cid", "v"),
         cfg(pid).copy(processTime = f"2024-03-$day%02d 00:00:00"))
     // five loads, three of them on one process_date so that partition
-    // accumulates per-load part files; each history rewrite leaves one
-    // file per shuffle partition
+    // accumulates per-load part files; each load appends its delta to
+    // history as new part files
     load("p1", 1, Seq(1 -> "a", 2 -> "b"))
     load("p2", 1, Seq(1 -> "a2", 3 -> "c"))
     load("p3", 1, Seq(4 -> "d"))
