@@ -813,66 +813,31 @@ object Similarity {
 
   /** Compact a `batch_id=`-partitioned streamed IVF index
     * ([[graft.streaming.StreamingEvents.ivfIndexSink]]'s layout) back to
-    * ONE batch directory with one file per bucket —
-    * [[graft.text.Dedup.compactDedupIndex]]'s sibling: a long-running
-    * sink grows one file per bucket per batch, and listing cost
-    * eventually dominates queries. Crash-safe the same way: the
-    * consolidated partition (`batch_id = min - 1`, counting DOWN so it
-    * can never collide with stream-assigned ids) is fully written
-    * before old directories are deleted; a crash between the two leaves
-    * duplicate rows that the next compaction's `distinct()` absorbs and
-    * that query results are insensitive to (duplicate candidates rank
-    * identically; row_number keeps one). Returns the consolidated
-    * batch id. */
+    * ONE batch directory with one file per bucket: a long-running sink
+    * grows one file per bucket per batch, and listing cost eventually
+    * dominates queries. Crash window, target id and ledger handling
+    * follow [[graft.store.BatchStore]]; crash-window duplicates do not
+    * change query results (duplicate candidates rank identically;
+    * row_number keeps one) and this compaction's `distinct` absorbs
+    * them. Returns the consolidated batch id. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path), s"compactIvfIndex: no index at $indexDir")
-    val batchDirs = fs.listStatus(path).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("batch_id="))
-    require(batchDirs.nonEmpty,
-      s"compactIvfIndex: $indexDir has no batch_id=* partitions — not a " +
-        "streamed IVF index (write batches via ivfIndexSink)")
-    val ids = batchDirs.map(_.getName.stripPrefix("batch_id=").toLong)
-    val tombs = ivfTombstones(spark, indexDir)
-    // a pending tombstone ledger always needs applying, even when the
-    // layout is already a single directory
-    if (batchDirs.length == 1 && tombs.isEmpty)
-      return ids.head // already compact
-    val compactTo = ids.min - 1
-    val all = spark.read.schema(ivfBatchedSchema).parquet(indexDir)
-      .drop("batch_id") // re-materialized by the target directory name
-    // apply + (below) clear the X191 delete ledger — the compacted
-    // index lacks the deleted points, so every crash window stays
-    // correct (the vec_id anti-join is idempotent against it) and a
-    // cleared ledger re-opens the ids for legitimate re-ingestion
-    val alive = tombs.fold(all)(t => all.join(
-      t.select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti"))
-    alive
-      .distinct()       // absorb crash-window leftovers (see scaladoc)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir/batch_id=$compactTo")
-    batchDirs.foreach(d => fs.delete(d, true))
-    val tombDir = new org.apache.hadoop.fs.Path(s"${indexDir}__tombstones")
-    if (fs.exists(tombDir)) fs.delete(tombDir, true)
-    compactTo
+    val side = graft.store.BatchStore.batches(spark, indexDir,
+      "compactIvfIndex",
+      "a streamed IVF index (write batches via ivfIndexSink)")
+    val ledger = ivfLedger(spark, indexDir)
+    graft.store.BatchStore.compact(ledger, Seq(side)) { case Seq(to) =>
+      writeIvfIndex(ledger.minus(spark.read.schema(ivfBatchedSchema)
+          .parquet(indexDir).drop("batch_id")).distinct(),
+        side.batchDir(to), mode = "overwrite")
+    }.head
   }
 
-  /** The tombstone ledger of a delete-maintained IVF index — `None`
-    * until the first [[deleteFromIvfIndex]]. Sibling directory (the
-    * [[graft.text.Dedup.dedupTombstones]] layout: a subdir inside the
-    * index root would break its partition discovery). */
-  private[graft] def ivfTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"${indexDir}__tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.schema(ivfTombstoneSchema).parquet(p.toString))
-    else None
-  }
+  /** The tombstone ledger of a delete-maintained IVF index, beside the
+    * index directory. */
+  private[graft] def ivfLedger(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String) =
+    graft.store.Ledger.beside(spark, indexDir, "vec_id")
 
   // Explicit IVF store schemas — the same footer-inference-skipping
   // discipline as the k-NN store's readKnnIndex/readKnnEdges (guide §6:
@@ -882,7 +847,7 @@ object Similarity {
   // [[writeIvfIndex]] batch table (`centroid_id=C/` at the top level)
   // and the [[graft.streaming.StreamingEvents.ivfIndexSink]] streamed
   // form (`batch_id=B/centroid_id=C/`). The first-level directory name
-  // IS the layout tag — one listStatus at open (no manifest file, no
+  // IS the layout tag — one listing at open (no manifest file, no
   // migration of existing stores) picks the pinned schema. Partition
   // columns are declared LONG, so the int-narrowing of inferred
   // partition values never reaches consumers.
@@ -900,11 +865,6 @@ object Similarity {
         "batch_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField(
         "centroid_id", org.apache.spark.sql.types.LongType)))
-  private val ivfTombstoneSchema = org.apache.spark.sql.types.StructType(
-    Seq(org.apache.spark.sql.types.StructField(
-      "vec_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(
-        "batch_id", org.apache.spark.sql.types.LongType)))
 
   /** Schema-pinned open of an IVF index directory: reads the layout tag
     * (the first-level partition directory name) and applies the matching
@@ -912,43 +872,32 @@ object Similarity {
     * inference rather than failing a foreign table. */
   private[graft] def openIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val firstDir = fs.listStatus(p).filter(_.isDirectory)
-      .map(_.getPath.getName).find(n => n.contains("="))
-    firstDir match {
+      indexDir: String): DataFrame =
+    graft.store.BatchStore.firstPartition(spark, indexDir) match {
       case Some(n) if n.startsWith("centroid_id=") =>
         spark.read.schema(ivfFlatSchema).parquet(indexDir)
       case Some(n) if n.startsWith("batch_id=") =>
         spark.read.schema(ivfBatchedSchema).parquet(indexDir)
       case _ => spark.read.parquet(indexDir)
     }
-  }
 
   /** X191: TOMBSTONE DELETES in the persisted IVF embedding index —
     * the X188/X190 lifecycle leg for the retrieval store: a taken-down
     * embedding must stop surfacing as a neighbor, and the append-only
     * X76 index would return it forever. No recompute is needed (bucket
-    * rows are independent), so a delete is ONE ledger write;
-    * [[readIvfIndex]] is the canonical tombstone-aware read,
-    * [[compactIvfIndex]] applies + clears the ledger, and the
-    * streaming sink fails loud on resurrecting a tombstoned id
-    * pre-compaction — the shared maintained-store contract:
-    * append / tombstone-delete / compact(applies+clears). Works for
-    * both index layouts (the [[writeIvfIndex]] bucket-partitioned
-    * table and the streamed `batch_id=N` form). Replays overwrite
-    * their own batch directory: idempotent. */
+    * rows are independent), so a delete is ONE ledger write under the
+    * [[graft.store.BatchStore]] contract: [[readIvfIndex]] anti-joins
+    * it, the streaming sink fails loud on re-ingesting a tombstoned id,
+    * and [[compactIvfIndex]] applies + clears it. Works for both index
+    * layouts (the [[writeIvfIndex]] bucket-partitioned table and the
+    * streamed `batch_id=N` form). */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, deleted: DataFrame, idCol: String,
       batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"deleteFromIvfIndex: no index at $indexDir")
-    deleted.select(col(idCol).cast("long").as("vec_id")).distinct()
-      .write.mode("overwrite")
-      .parquet(s"${indexDir}__tombstones/batch_id=$batchId")
-    ()
+    require(graft.store.BatchStore.exists(spark, indexDir),
+      s"deleteFromIvfIndex: no index at $indexDir")
+    val ledger = ivfLedger(spark, indexDir)
+    ledger.write(ledger.keys(deleted, idCol), batchId)
   }
 
   /** The canonical read of a delete-maintained IVF index: the stored
@@ -957,12 +906,8 @@ object Similarity {
     * survives the anti-join (the tombstone side is a broadcast of
     * ids, joined after the pruned scan). */
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val idx = openIvfIndex(spark, indexDir)
-    ivfTombstones(spark, indexDir).fold(idx)(t =>
-      idx.join(broadcast(t.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti"))
-  }
+      indexDir: String): DataFrame =
+    ivfLedger(spark, indexDir).minus(openIvfIndex(spark, indexDir))
 
   /** Top-k over a PERSISTED index for a (bounded) query batch: queries
     * are probe-assigned row-locally (same broadcast-centroid scan —
@@ -1677,6 +1622,45 @@ object Similarity {
       .orderBy(col("vec_id"))
   }
 
+  /** The maintained k-NN store's FIXED shard count for the physical
+    * layout — partitioning by the raw centroid_id looks right but is a
+    * scale killer the gate caught at its first sf1 probe (exponent
+    * 0.84): data-proportional centroids mean 10× data = 10× partition
+    * DIRECTORIES of ever-smaller files, and the per-file metadata cost
+    * turns the store linear-in-nlist. A capped shard keeps directory
+    * count CONSTANT as the corpus grows; cell pruning survives as shard
+    * pruning (×1/shards) plus the pushed centroid_id filter inside each
+    * shard's row groups. */
+  private val KnnShards = 64
+
+  private def withShard(asg: DataFrame): DataFrame =
+    asg.withColumn("__shard", pmod(col("centroid_id"), lit(KnnShards)))
+
+  private def shardsOf(cells: Array[Long]): Array[Long] =
+    cells.map(c => ((c % KnnShards) + KnnShards) % KnnShards).distinct
+
+  /** Writes an assignment as the store's `index/batch_id=N/__shard=S`. */
+  private def writeKnnIndex(asg: DataFrame, storeDir: String,
+      batchId: Long): Unit =
+    withShard(asg).repartition(col("__shard"))
+      .write.mode("overwrite").partitionBy("__shard")
+      .parquet(s"$storeDir/index/batch_id=$batchId")
+
+  private def writeKnnEdges(edges: DataFrame, storeDir: String,
+      batchId: Long): Unit =
+    edges.write.mode("overwrite").parquet(s"$storeDir/edges/batch_id=$batchId")
+
+  /** The store's tombstone ledger. Deletes and increments share one
+    * batch sequence, so batch N reads only the ledger before N. */
+  private def knnLedger(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String) =
+    graft.store.Ledger.within(spark, storeDir, "vec_id")
+
+  private def knnSide(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String, side: String, who: String) =
+    graft.store.BatchStore.batches(spark, s"$storeDir/$side", who,
+      "a knnGraphIncrement store")
+
   /** X185: ONE increment of the MAINTAINED k-NN graph — the production
     * shape the one-shot [[knnGraph]] lacks: a growing embedding corpus
     * updates the edge list WITHOUT a full rebuild. The new batch is
@@ -1718,16 +1702,7 @@ object Similarity {
     require(probes >= 1, s"probes must be >= 1, got $probes")
     val spark = newPoints.sparkSession
     ensureNative(newPoints)
-    // FIXED shard count for the physical layout — partitioning by the
-    // raw centroid_id looks right but is a scale killer the gate
-    // caught at its first sf1 probe (exponent 0.84): data-proportional
-    // centroids mean 10× data = 10× partition DIRECTORIES of
-    // ever-smaller files, and the per-file metadata cost turns the
-    // store linear-in-nlist. A capped shard keeps directory count
-    // CONSTANT as the corpus grows; cell pruning survives as shard
-    // pruning (×1/shards) plus the pushed centroid_id filter inside
-    // each shard's row groups.
-    val shards = 64
+    val ledger = knnLedger(spark, storeDir)
     // persisted LOCALLY and released in the finally below — the
     // streaming sink invokes this once per micro-batch with no harness
     // release point, so session-lifetime tracking
@@ -1739,36 +1714,18 @@ object Similarity {
     var allMeta: DataFrame = null
     var slice: DataFrame = null
     try {
-    newA.withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-      .repartition(col("__shard"))
-      .write.mode("overwrite").partitionBy("__shard")
-      .parquet(s"$storeDir/index/batch_id=$batchId")
+    // the resurrection guard runs BEFORE the index write: a refused
+    // batch must leave no rows for later batches to read as corpus
+    ledger.guard(newA, "vec_id", "knnGraphIncrement",
+      "compactKnnStore (or knnGraphRefresh)", Some(batchId))
+    writeKnnIndex(newA, storeDir, batchId)
     // prior corpus = strictly earlier batches (replay-idempotent),
     // minus earlier tombstones ([[knnGraphDelete]]); the index dir
     // always exists — this batch just wrote to it
-    val dead = knnTombstones(spark, storeDir)
-      .map(_.filter(col("batch_id") < batchId).select(col("vec_id")))
-    dead.foreach { d =>
-      // re-ingesting a tombstoned id would resurrect a point the view
-      // anti-joins away — silent wrongness; the contract is fail loud
-      // (compact or refresh clears tombstones, after which the id may
-      // return). Bounded: limit(1).
-      val re = newA.select(col("vec_id")).distinct()
-        .join(d, Seq("vec_id")).limit(1).collect()
-      require(re.isEmpty,
-        s"knnGraphIncrement: id ${re.head.getLong(0)} was tombstoned " +
-          "by knnGraphDelete — run compactKnnStore (or knnGraphRefresh) " +
-          "before re-ingesting a deleted id")
-    }
-    val prior0 = readKnnIndex(spark, storeDir)
+    val prior = ledger.minus(readKnnIndex(spark, storeDir)
       .filter(col("batch_id") < batchId)
-      .drop("batch_id")
-    val prior = dead.fold(prior0)(d =>
-      prior0.join(d, Seq("vec_id"), "left_anti"))
-    val all = prior
-      .withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-      .unionByName(
-        newA.withColumn("__shard", pmod(col("centroid_id"), lit(shards))))
+      .drop("batch_id"), Some(batchId))
+    val all = withShard(prior).unionByName(withShard(newA))
     // touched cells stay a (≤ nlist row) DataFrame derived from the
     // cached newA (recomputed per consumer — a distinct over the cache,
     // not itself persisted; cheap enough that pinning it never paid in
@@ -1776,8 +1733,6 @@ object Similarity {
     // collected array cost one driver round-trip per increment and was
     // only a pruning hint on scans that now read the metadata cache
     val touchedCells = newA.select(col("centroid_id")).distinct()
-    def shardsOf(cs: Array[Long]): Array[Long] =
-      cs.map(c => ((c % shards) + shards) % shards).distinct
     // discovery runs over ONE persisted metadata-width projection
     // (vec_id, centroid_id, __shard — no vector bytes): the store is
     // scanned once for discovery instead of once per derived question
@@ -1816,8 +1771,7 @@ object Similarity {
     // cache instead of re-scanning the store
     val src = slice.join(touchedCells, Seq("centroid_id"), "left_semi")
       .select(col("vec_id")).distinct()
-    recomputeKnnEdges(slice, src, k)
-      .write.mode("overwrite").parquet(s"$storeDir/edges/batch_id=$batchId")
+    writeKnnEdges(recomputeKnnEdges(slice, src, k), storeDir, batchId)
     } finally {
       newA.unpersist(true)
       if (allMeta != null) allMeta.unpersist(true)
@@ -1875,20 +1829,6 @@ object Similarity {
   private def knnEdgesAll(asg: DataFrame, k: Int): DataFrame =
     knnRankTopK(knnPairCosines(asg), k)
 
-  /** The tombstone ledger of a [[knnGraphDelete]]-maintained store —
-    * `None` until the first delete. One (vec_id, batch_id) row per
-    * deleted id; cleared by [[compactKnnStore]]/[[knnGraphRefresh]]
-    * once applied. */
-  private[graft] def knnTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$storeDir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.schema(knnTombstoneSchema).parquet(p.toString))
-    else None
-  }
-
   // Explicit store schemas: the maintained-store layout is module-owned
   // and fixed, so every read skips the parquet footer-inference job a
   // bare spark.read.parquet pays per call — the lifecycle composites
@@ -1916,12 +1856,6 @@ object Similarity {
       StructField("cosine", DoubleType),
       StructField("batch_id", LongType)))
   }
-  private val knnTombstoneSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("batch_id", LongType)))
-  }
 
   /** Schema-pinned read of a maintained store's assignment index. */
   private[graft] def readKnnIndex(
@@ -1943,8 +1877,9 @@ object Similarity {
     * cell (any source holding a stale edge to a deleted neighbor
     * shares a probed cell with it, so the touched-cell frontier covers
     * exactly the stale rows) over its complete candidate set from the
-    * surviving index; the ids land in a `tombstones/batch_id=N` ledger
-    * that [[knnGraphIncrement]] and the published view anti-join.
+    * surviving index; the ids land in the store's
+    * [[graft.store.Ledger]], which [[knnGraphIncrement]] and the
+    * published view anti-join.
     *
     * A source recomputed to EMPTY (its last co-bucketed neighbor died)
     * writes a `rk = 0` SENTINEL row — "latest batch per source" alone
@@ -1956,30 +1891,24 @@ object Similarity {
     * oracle): the view after a delete equals a full [[knnGraph]]
     * rebuild over corpus-minus-deleted. Replays re-read only earlier
     * batches and overwrite their own directories: idempotent. The
-    * ledger is written AFTER the edges commit (the friedman-ledger
-    * lesson: never publish state the view trusts before the guarded
-    * write succeeds). Deleting an unknown id is a no-op tombstone.
-    * Scale: touched cells ≤ nlist; cost is the affected sources'
-    * cells only, never N². */
+    * ledger is written AFTER the edges commit: the view must never
+    * trust state before the guarded write succeeds. Deleting an
+    * unknown id is a no-op tombstone. Scale: touched cells ≤ nlist;
+    * cost is the affected sources' cells only, never N². */
   def knnGraphDelete(deleted: DataFrame, idCol: String,
       storeDir: String, batchId: Long, k: Int,
       maxBucketPoints: Long = 100000L): Unit = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = deleted.sparkSession
-    val shards = 64
-    val del = deleted.select(col(idCol).cast("long").as("vec_id"))
-      .distinct().persist()
+    val ledger = knnLedger(spark, storeDir)
+    val del = ledger.keys(deleted, idCol).persist()
     var aliveMeta: DataFrame = null
     var slice: DataFrame = null
     var recomputed: DataFrame = null
     try {
-      val dead = knnTombstones(spark, storeDir)
-        .map(_.filter(col("batch_id") < batchId).select(col("vec_id")))
-      val idx0 = readKnnIndex(spark, storeDir)
+      val alive0 = ledger.minus(readKnnIndex(spark, storeDir)
         .filter(col("batch_id") < batchId)
-        .drop("batch_id")
-      val alive0 = dead.fold(idx0)(d =>
-        idx0.join(d, Seq("vec_id"), "left_anti"))
+        .drop("batch_id"), Some(batchId))
       // discovery runs over ONE persisted metadata-width projection
       // (vec_id, centroid_id — no vector bytes): the store is scanned
       // once for the touched/cells/census questions instead of once
@@ -1991,10 +1920,7 @@ object Similarity {
       val touched = aliveMeta.join(del, Seq("vec_id"))
         .select(col("centroid_id")).distinct()
         .collect().map(_.getLong(0))
-      val alive = alive0.join(del, Seq("vec_id"), "left_anti")
-        .withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-      def shardsOf(cs: Array[Long]): Array[Long] =
-        cs.map(c => ((c % shards) + shards) % shards).distinct
+      val alive = withShard(alive0.join(del, Seq("vec_id"), "left_anti"))
       if (touched.nonEmpty) {
         // affected sources: surviving points probing a touched cell
         val srcIds = aliveMeta.join(del, Seq("vec_id"), "left_anti")
@@ -2036,12 +1962,9 @@ object Similarity {
           .select(col("vec_id"), lit(0L).as("rk"),
             lit(null).cast("long").as("neighbor_id"),
             lit(null).cast("double").as("cosine"))
-        recomputed.unionByName(sentinels)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/edges/batch_id=$batchId")
+        writeKnnEdges(recomputed.unionByName(sentinels), storeDir, batchId)
       }
-      del.write.mode("overwrite")
-        .parquet(s"$storeDir/tombstones/batch_id=$batchId")
+      ledger.write(del, batchId)
     } finally {
       del.unpersist(true)
       if (aliveMeta != null) aliveMeta.unpersist(true)
@@ -2051,83 +1974,54 @@ object Similarity {
     ()
   }
 
-  /** Compact a [[knnGraphIncrement]]/[[knnGraphDelete]]-maintained
-    * store back to ONE batch directory per side and ZERO tombstones —
-    * [[compactIvfIndex]]'s sibling for the X185 store. The store grows
-    * one `index/batch_id=N` and `edges/batch_id=N` directory per
-    * micro-batch FOREVER, and the view lists every one of them —
-    * linear-in-batch-count metadata cost that the sf-probe cannot see
-    * (it scales rows, not batch count; the r15 verdict's exact
-    * warning). Compaction collapses: index → surviving assignments
-    * (tombstones applied, crash-window duplicates absorbed by
-    * `distinct`) into `index/batch_id=<min-1>`; edges → each surviving
-    * source's LATEST rows (the view's own selection, `rk = 0`
-    * sentinels dropped — with pre-sentinel history gone they mask
-    * nothing) into `edges/batch_id=<min-1>`; tombstone ledger →
-    * deleted (applied). Ids count DOWN from the side's own min so they
-    * can never collide with stream-assigned ids, and
-    * [[knnGraphIncrement]]'s `batch_id < N` prior-corpus read keeps
-    * working unchanged.
-    *
-    * Crash-safe like its siblings: both consolidated directories are
-    * fully written before anything is deleted; leftovers from a crash
-    * window are absorbed (old edge dirs outrank the consolidated one
-    * per source with IDENTICAL rows; duplicate index rows fall to the
-    * pair join's `distinct`; an undeleted ledger anti-joins ids the
-    * compacted store no longer contains). Run while the sink is idle
-    * (the [[compactIvfIndex]] contract). Returns the consolidated
-    * edges batch id. */
-  def compactKnnStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Long = {
-    val shards = 64
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def batchDirs(side: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$storeDir/$side")
-      require(fs.exists(p), s"compactKnnStore: no $side at $storeDir")
-      val ds = fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath).filter(_.getName.startsWith("batch_id="))
-      require(ds.nonEmpty, s"compactKnnStore: $storeDir/$side has no " +
-        "batch_id=* partitions — not a knnGraphIncrement store")
-      ds
-    }
-    val idxDirs = batchDirs("index")
-    val edgeDirs = batchDirs("edges")
-    def ids(ds: Array[org.apache.hadoop.fs.Path]) =
-      ds.map(_.getName.stripPrefix("batch_id=").toLong)
-    val tombs = knnTombstones(spark, storeDir)
-    val tombDir = new org.apache.hadoop.fs.Path(s"$storeDir/tombstones")
-    if (idxDirs.length == 1 && edgeDirs.length == 1 && tombs.isEmpty)
-      return ids(edgeDirs).head // already compact
-    val dead = tombs.map(_.select(col("vec_id")).distinct())
-    val idxTo = ids(idxDirs).min - 1
-    val aliveIdx = {
-      val i0 = readKnnIndex(spark, storeDir).drop("batch_id")
-      dead.fold(i0)(d => i0.join(d, Seq("vec_id"), "left_anti"))
-    }
-    aliveIdx.drop("__shard").distinct()
-      .withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-      .repartition(col("__shard"))
-      .write.mode("overwrite").partitionBy("__shard")
-      .parquet(s"$storeDir/index/batch_id=$idxTo")
-    val edgeTo = ids(edgeDirs).min - 1
-    val e0 = readKnnEdges(spark, storeDir)
-    val live = dead.fold(e0)(d => e0.join(d, Seq("vec_id"), "left_anti"))
-    // latest batch per source via ONE window over ONE scan — the old
-    // groupBy(max) + join-back read the edge store twice and shuffled
-    // twice for the same row set
-    live.withColumn("__mx",
+  /** Each surviving source's edges from the LATEST batch that
+    * recomputed it, tombstoned sources removed — the store's published
+    * edge set, shared by [[graft.streaming.StreamingEvents.knnGraphView]]
+    * and [[compactKnnStore]]. Deleted NEIGHBORS need no handling here:
+    * any source holding a stale edge to a deleted point shared a probed
+    * cell with it, so the delete recomputed that source's rows. The
+    * `rk = 0` rows are [[knnGraphDelete]]'s empty-recompute sentinels:
+    * they win the latest-batch selection (masking the stale pre-delete
+    * rows) and are then dropped. */
+  private[graft] def knnLatestEdges(
+      spark: org.apache.spark.sql.SparkSession,
+      storeDir: String): DataFrame =
+    // latest batch per source via ONE window over ONE scan — a
+    // groupBy(max) + join-back would scan the edge store twice and
+    // shuffle twice for the same row set
+    knnLedger(spark, storeDir).minus(readKnnEdges(spark, storeDir))
+      .withColumn("__mx",
         max(col("batch_id")).over(Window.partitionBy(col("vec_id"))))
       .filter(col("batch_id") === col("__mx"))
       .filter(col("rk") >= 1)
       .select(col("vec_id"), col("rk"), col("neighbor_id"),
         col("cosine"))
-      .write.mode("overwrite")
-      .parquet(s"$storeDir/edges/batch_id=$edgeTo")
-    idxDirs.foreach(d => fs.delete(d, true))
-    edgeDirs.foreach(d => fs.delete(d, true))
-    if (fs.exists(tombDir)) fs.delete(tombDir, true)
-    edgeTo
+
+  /** Compact a [[knnGraphIncrement]]/[[knnGraphDelete]]-maintained
+    * store back to ONE batch directory per side and ZERO tombstones.
+    * The store grows one `index/batch_id=N` and `edges/batch_id=N`
+    * directory per micro-batch FOREVER, and the view lists every one of
+    * them — linear-in-batch-count metadata cost that the sf-probe cannot
+    * see (it scales rows, not batch count; the r15 verdict's exact
+    * warning). Compaction collapses: index → surviving assignments
+    * (tombstones applied, crash-window duplicates absorbed by
+    * `distinct`); edges → [[knnLatestEdges]] (`rk = 0` sentinels
+    * dropped — with pre-sentinel history gone they mask nothing).
+    * Crash window, target ids and ledger handling follow
+    * [[graft.store.BatchStore]]; after a crash the old edge directories
+    * outrank the consolidated one per source with IDENTICAL rows, and
+    * [[knnGraphIncrement]]'s `batch_id < N` prior-corpus read keeps
+    * working unchanged. Returns the consolidated edges batch id. */
+  def compactKnnStore(spark: org.apache.spark.sql.SparkSession,
+      storeDir: String): Long = {
+    val ledger = knnLedger(spark, storeDir)
+    val sides = Seq("index", "edges")
+      .map(knnSide(spark, storeDir, _, "compactKnnStore"))
+    graft.store.BatchStore.compact(ledger, sides) { case Seq(idxTo, edgeTo) =>
+      writeKnnIndex(ledger.minus(readKnnIndex(spark, storeDir)
+        .drop("batch_id")).drop("__shard").distinct(), storeDir, idxTo)
+      writeKnnEdges(knnLatestEdges(spark, storeDir), storeDir, edgeTo)
+    }.last
   }
 
   /** CENTROID-REFRESH EPOCH for the maintained k-NN store (the third
@@ -2137,9 +2031,10 @@ object Similarity {
     * crowd a few cells, recall erodes. A refresh re-assigns the ENTIRE
     * surviving corpus (read back from the store's own index — vectors
     * live there) to `newCentroids`, rebuilds the full edge list with
-    * the one-shot [[knnGraph]], writes both sides into rebased
-    * `batch_id=<min-1>` directories, and clears the tombstone ledger.
-    * When `recallSample > 0` the epoch SELF-VERIFIES: view top-k
+    * the one-shot [[knnGraph]] kernel, and commits both sides through
+    * the [[graft.store.BatchStore]] compaction protocol (rebased
+    * `batch_id=<min-1>` directories, ledger cleared). When
+    * `recallSample > 0` the epoch SELF-VERIFIES: view top-k
     * recall for a deterministic source sample is re-measured against
     * exact brute-force over the surviving corpus and must reach
     * `recallFloor`, else the refresh fails loud (directories are
@@ -2165,63 +2060,43 @@ object Similarity {
       maxBucketPoints: Long = 100000L, recallFloor: Double = 0.0,
       recallSample: Int = 0): Long = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val shards = 64
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dirs(side: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$storeDir/$side")
-      require(fs.exists(p), s"knnGraphRefresh: no $side at $storeDir")
-      fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath).filter(_.getName.startsWith("batch_id="))
-    }
-    val idxDirs = dirs("index")
-    val edgeDirs = dirs("edges")
-    require(idxDirs.nonEmpty && edgeDirs.nonEmpty,
-      s"knnGraphRefresh: $storeDir is not a knnGraphIncrement store")
+    val sides = Seq("index", "edges")
+      .map(knnSide(spark, storeDir, _, "knnGraphRefresh"))
     val cents = newCentroids.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).cast("array<double>").as("v"))
     val corpus = knnStoreCorpus(spark, storeDir).persist()
     var asg: DataFrame = null
     try {
-      val idxTo = idxDirs.map(_.getName.stripPrefix("batch_id=").toLong)
-        .min - 1
-      val edgeTo = edgeDirs.map(_.getName.stripPrefix("batch_id=").toLong)
-        .min - 1
-      // the corpus is assigned to the new centroids exactly ONCE: the
-      // index write and the edge rebuild share the persisted
-      // assignment (the old shape ran ivfAssignProbes twice — once for
-      // the index, once inside knnGraph)
-      asg = ivfAssignProbes(corpus, "vec_id", "v", cents, dim, probes)
-        .persist()
-      asg.withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-        .repartition(col("__shard"))
-        .write.mode("overwrite").partitionBy("__shard")
-        .parquet(s"$storeDir/index/batch_id=$idxTo")
-      // the one-shot knnGraph's O(m²) census guard, over the shared
-      // assignment (one job on the cache); same failure contract
-      val over = asg.groupBy(col("centroid_id"))
-        .agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > maxBucketPoints)
-        .limit(1).collect()
-      require(over.isEmpty,
-        s"knnGraphRefresh: cell ${over.head.get(0)} holds " +
-          s"${over.head.getLong(1)} probe-assigned points > " +
-          s"maxBucketPoints=$maxBucketPoints — the per-cell pair join " +
-          "is O(m²); train more centroids, lower probes, or sample")
-      knnEdgesAll(asg, k)
-        .write.mode("overwrite")
-        .parquet(s"$storeDir/edges/batch_id=$edgeTo")
-      idxDirs.foreach(d => fs.delete(d, true))
-      edgeDirs.foreach(d => fs.delete(d, true))
-      val tombDir = new org.apache.hadoop.fs.Path(s"$storeDir/tombstones")
-      if (fs.exists(tombDir)) fs.delete(tombDir, true)
+      val edgeTo = graft.store.BatchStore.compact(knnLedger(spark, storeDir),
+          sides, force = true) { case Seq(idxTo, edgeTo) =>
+        // the corpus is assigned to the new centroids exactly ONCE: the
+        // index write and the edge rebuild share the persisted
+        // assignment (the old shape ran ivfAssignProbes twice — once
+        // for the index, once inside knnGraph)
+        asg = ivfAssignProbes(corpus, "vec_id", "v", cents, dim, probes)
+          .persist()
+        writeKnnIndex(asg, storeDir, idxTo)
+        // the one-shot knnGraph's O(m²) census guard, over the shared
+        // assignment (one job on the cache); same failure contract
+        val over = asg.groupBy(col("centroid_id"))
+          .agg(count(lit(1)).as("__n"))
+          .filter(col("__n") > maxBucketPoints)
+          .limit(1).collect()
+        require(over.isEmpty,
+          s"knnGraphRefresh: cell ${over.head.get(0)} holds " +
+            s"${over.head.getLong(1)} probe-assigned points > " +
+            s"maxBucketPoints=$maxBucketPoints — the per-cell pair join " +
+            "is O(m²); train more centroids, lower probes, or sample")
+        writeKnnEdges(knnEdgesAll(asg, k), storeDir, edgeTo)
+      }.last
       if (recallSample > 0) {
         // deterministic sample: the recallSample smallest source ids —
         // reproducible across reruns, no RNG in the gate
         val sample = corpus.orderBy(col("vec_id")).limit(recallSample)
         val truth = bruteForceTopK(sample, corpus, "vec_id", "v", k, dim)
           .select(col("vec_id"), col("neighbor_id"))
-        val got = spark.read.parquet(s"$storeDir/edges/batch_id=$edgeTo")
+        val got = readKnnEdges(spark, storeDir)
+          .filter(col("batch_id") === edgeTo)
           .join(sample.select(col("vec_id")), Seq("vec_id"), "left_semi")
           .select(col("vec_id"), col("neighbor_id"))
         val hit = truth.join(got, Seq("vec_id", "neighbor_id")).count()
@@ -2246,12 +2121,9 @@ object Similarity {
     * one row per point (multi-probe rows collapse). */
   private[graft] def knnStoreCorpus(
       spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val idx = readKnnIndex(spark, storeDir)
-      .select(col("vec_id"), col("v")).dropDuplicates("vec_id")
-    knnTombstones(spark, storeDir).fold(idx)(t =>
-      idx.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti"))
-  }
+      storeDir: String): DataFrame =
+    knnLedger(spark, storeDir).minus(readKnnIndex(spark, storeDir)
+      .select(col("vec_id"), col("v")).dropDuplicates("vec_id"))
 
   /** [[knnGraphRefresh]] gated on a MEASURED drift signal instead of a
     * schedule: the store's surviving corpus is compared to the frozen

@@ -403,12 +403,10 @@ object AnnQueries {
       val b2 = emb.filter(col("vec_id") % 4 === 3)
       val path = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft_ivf_index_x191_${s.sparkContext.applicationId}"
-      val hc = s.sessionState.newHadoopConf()
-      for (p <- Seq(path, s"${path}__tombstones")) {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(hc)
-        if (fs.exists(hp)) fs.delete(hp, true)
-      }
+      val hp = new org.apache.hadoop.fs.Path(path)
+      val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
+      if (fs.exists(hp)) fs.delete(hp, true)
+      Similarity.ivfLedger(s, path).clear()
       Similarity.writeIvfIndex(
         Similarity.buildIvfIndex(b1, "vec_id", "embedding", centroids,
           Dim), path, mode = "overwrite")

@@ -291,12 +291,10 @@ object TextQueries {
         .select(col("doc_id"), col("text"))
       val idx = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft_dedup_index_x190_${s.sparkContext.applicationId}"
-      val hc = s.sessionState.newHadoopConf()
-      for (p <- Seq(idx, s"${idx}__tombstones")) {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val fs = hp.getFileSystem(hc)
-        if (fs.exists(hp)) fs.delete(hp, true)
-      }
+      val hp = new org.apache.hadoop.fs.Path(idx)
+      val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
+      if (fs.exists(hp)) fs.delete(hp, true)
+      Dedup.dedupLedger(s, idx).clear()
       Dedup.buildDedupIndex(corpus.filter(col("doc_id") % 2 === 1),
           "doc_id", "text")
         .write.parquet(s"$idx/batch_id=0")

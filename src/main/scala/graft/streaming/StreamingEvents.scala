@@ -150,25 +150,12 @@ object StreamingEvents {
       idCol: String, textCol: String, indexDir: String, verdictDir: String,
       shingleN: Int, k: Int, bands: Int, minMatch: Int): Unit = {
     val spark = batch.sparkSession
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // re-ingesting a tombstoned id ([[graft.text.Dedup
-    // .deleteFromDedupIndex]]) would index rows the canonical read
-    // anti-joins away — silent wrongness; fail loud until
-    // compactDedupIndex applies + clears the ledger (the X188
-    // resurrection contract). Bounded: limit(1).
-    graft.text.Dedup.dedupTombstones(spark, indexDir).foreach { t =>
-      val re = batch.select(col(idCol).cast("long").as("doc_id"))
-        .distinct()
-        .join(t.select(col("doc_id")).distinct(), Seq("doc_id"))
-        .limit(1).collect()
-      require(re.isEmpty,
-        s"incrementalDedupSink: doc ${re.head.getLong(0)} was " +
-          "tombstoned by deleteFromDedupIndex — run compactDedupIndex " +
-          "before re-ingesting a deleted id")
-    }
+    // the [[graft.store.BatchStore]] resurrection guard: a doc deleted
+    // by deleteFromDedupIndex must not return before compactDedupIndex
+    graft.text.Dedup.dedupLedger(spark, indexDir).guard(batch, idCol,
+      "incrementalDedupSink", "compactDedupIndex")
     val index =
-      if (fs.exists(path))
+      if (graft.store.BatchStore.exists(spark, indexDir))
         graft.text.Dedup.readDedupIndex(spark, indexDir)
           // a failed attempt of THIS batch may have appended its rows
           // already; they must not verdict the replay
@@ -277,25 +264,14 @@ object StreamingEvents {
       idCol: String, vecCol: String, centroids: DataFrame, dim: Int,
       indexDir: String): Unit = {
     val spark = batch.sparkSession
-    // the X191 resurrection contract (see deleteFromIvfIndex): a
-    // tombstoned id must not be re-ingested until compactIvfIndex
-    // applies + clears the ledger. Bounded: limit(1).
-    graft.ann.Similarity.ivfTombstones(spark, indexDir).foreach { t =>
-      val re = batch.select(col(idCol).cast("long").as("vec_id"))
-        .distinct()
-        .join(t.select(col("vec_id")).distinct(), Seq("vec_id"))
-        .limit(1).collect()
-      require(re.isEmpty,
-        s"ivfIndexSink: vec ${re.head.getLong(0)} was tombstoned by " +
-          "deleteFromIvfIndex — run compactIvfIndex before " +
-          "re-ingesting a deleted id")
-    }
-    graft.ann.Similarity
-      .buildIvfIndex(batch, idCol, vecCol, centroids, dim)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir/batch_id=$batchId")
-    ()
+    // the [[graft.store.BatchStore]] resurrection guard: a vector
+    // deleted by deleteFromIvfIndex must not return before
+    // compactIvfIndex
+    graft.ann.Similarity.ivfLedger(spark, indexDir).guard(batch, idCol,
+      "ivfIndexSink", "compactIvfIndex")
+    graft.ann.Similarity.writeIvfIndex(graft.ann.Similarity
+      .buildIvfIndex(batch, idCol, vecCol, centroids, dim),
+      s"$indexDir/batch_id=$batchId", mode = "overwrite")
   }
 
   /** X45 streaming: CCNet line dedup maintained over micro-batches —
@@ -2346,30 +2322,9 @@ object StreamingEvents {
     * changed, so this equals the full-rebuild [[graft.ann.Similarity
     * .knnGraph]] over the union corpus. */
   def knnGraphView(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val edges = graft.ann.Similarity.readKnnEdges(spark, storeDir)
-    // tombstoned sources ([[graft.ann.Similarity.knnGraphDelete]])
-    // vanish; deleted NEIGHBORS need no handling here — any source
-    // holding a stale edge to a deleted point shared a probed cell
-    // with it, so the delete recomputed that source's rows
-    val live = graft.ann.Similarity.knnTombstones(spark, storeDir)
-      .fold(edges)(t => edges.join(t.select(col("vec_id")).distinct(),
-        Seq("vec_id"), "left_anti"))
-    // latest batch per source via ONE window over ONE scan — the old
-    // groupBy(max) + join-back scanned the edge store twice and
-    // shuffled twice for the same row set
-    import org.apache.spark.sql.expressions.Window
-    live.withColumn("__mx", max(col("batch_id"))
-        .over(Window.partitionBy(col("vec_id"))))
-      .filter(col("batch_id") === col("__mx"))
-      // rk = 0 rows are the delete's EMPTY-recompute sentinels: they
-      // win the latest-batch selection (masking the stale pre-delete
-      // rows) and are then dropped here
-      .filter(col("rk") >= 1)
-      .select(col("vec_id"), col("rk"), col("neighbor_id"),
-        col("cosine"))
+      storeDir: String): DataFrame =
+    graft.ann.Similarity.knnLatestEdges(spark, storeDir)
       .orderBy(col("vec_id"), col("rk"))
-  }
 
   /** D34 over the SAME [[valueCellSink]] store: the Jensen–Shannon
     * overlap divergence through the batch finish verbatim (micro-grid

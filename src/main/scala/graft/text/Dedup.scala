@@ -634,104 +634,59 @@ object Dedup {
     * without bound (the classic small-file problem — the reference ships
     * the same concern as partition retention,
     * diamond/load/ParquetDataLoader.scala:1091-1103, and its README asks
-    * for a small-file "stitching function"). Run this with the ingest
-    * query STOPPED (a maintenance window), then restart.
-    *
-    * Crash-safe by construction: the consolidated rows are written to a
-    * NEW partition `batch_id = min(existing) - 1` — compaction ids count
-    * DOWN from the seed convention (-1) while stream batch ids count up
-    * from 0, so the target never collides with a future micro-batch and
-    * never overwrites a directory the rewrite is concurrently reading —
-    * and the source partitions are deleted only after the write commits.
-    * A crash in between leaves duplicate index rows, which verdicts are
-    * insensitive to ([[incrementalDedupIndexed]] aggregates with `min` /
-    * `count_distinct`); the next compaction's `distinct` genuinely
-    * absorbs them (identical rows collapse), so storage and scan cost
-    * recover rather than carrying the duplicates forever. The distinct
-    * is one extra exchange, acceptable in a maintenance window, and also
-    * collapses docs legitimately re-indexed verbatim across batches.
+    * for a small-file "stitching function"). Crash window, target id and
+    * ledger handling follow [[graft.store.BatchStore]]; crash-window
+    * duplicates do not change verdicts ([[incrementalDedupIndexed]]
+    * aggregates with `min` / `count_distinct`), and this compaction's
+    * `distinct` absorbs them, together with docs re-indexed verbatim
+    * across batches. A single partition is still rewritten while it
+    * holds more than `targetFiles` files (e.g. a seed written by a
+    * wide-parallelism job).
     *
     * Returns the consolidated partition's batch id (or the single
     * existing id when there is nothing to compact). */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, targetFiles: Int = 8): Long = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path), s"compactDedupIndex: no index at $indexDir")
-    val batchDirs = fs.listStatus(path).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("batch_id="))
-    require(batchDirs.nonEmpty,
-      s"compactDedupIndex: $indexDir has no batch_id=* partitions — not " +
-        "a partitioned dedup index (seed it via buildDedupIndex into " +
-        "batch_id=-1)")
-    val ids = batchDirs.map(_.getName.stripPrefix("batch_id=").toLong)
-    // a single partition still needs consolidation when IT carries more
-    // files than the target (e.g. a seed written by a wide-parallelism
-    // job) — the small-file listing cost this function exists to bound
-    // does not care how the files are grouped; a pending tombstone
-    // ledger ([[deleteFromDedupIndex]]) always needs applying
-    val tombDir = new org.apache.hadoop.fs.Path(s"${indexDir}__tombstones")
-    val tombs = dedupTombstones(spark, indexDir)
-    if (batchDirs.length == 1 && tombs.isEmpty &&
-        fs.listStatus(batchDirs.head)
-          .count(_.getPath.getName.startsWith("part-")) <= targetFiles)
-      return ids.head // already compact
-    val compactTo = ids.min - 1
-    val all = spark.read.parquet(indexDir)
-      .drop("batch_id") // re-materialized by the target directory name
-    // apply the tombstone ledger, then clear it below: the compacted
-    // index no longer contains the deleted docs, so every crash window
-    // stays correct (the doc_id anti-join is idempotent against an
-    // index that lacks those docs) and a cleared ledger re-opens the
-    // ids for legitimate re-ingestion
-    val alive = tombs.fold(all)(t => all.join(
-      t.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti"))
-    alive
-      .distinct()       // absorb crash-window leftovers (see scaladoc)
-      .repartition(targetFiles)
-      .write.mode("overwrite").parquet(s"$indexDir/batch_id=$compactTo")
-    batchDirs.foreach(d => fs.delete(d, true))
-    if (fs.exists(tombDir)) fs.delete(tombDir, true)
-    compactTo
+    val side = graft.store.BatchStore.batches(spark, indexDir,
+      "compactDedupIndex", "a partitioned dedup index (seed it via " +
+        "buildDedupIndex into batch_id=-1)")
+    val ledger = dedupLedger(spark, indexDir)
+    graft.store.BatchStore.compact(ledger, Seq(side),
+        force = side.files > targetFiles) { case Seq(to) =>
+      ledger.minus(spark.read.parquet(indexDir).drop("batch_id"))
+        .distinct()
+        .repartition(targetFiles)
+        .write.mode("overwrite").parquet(side.batchDir(to))
+    }.head
   }
 
-  /** The tombstone ledger of a delete-maintained dedup index — `None`
-    * until the first [[deleteFromDedupIndex]]. Lives in the SIBLING
-    * directory `<indexDir>__tombstones` (the friedman-ledger layout
-    * precedent): a subdirectory inside `indexDir` would break the
-    * index's own `batch_id=*` partition discovery. */
-  private[graft] def dedupTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"${indexDir}__tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
-  }
+  /** The tombstone ledger of a delete-maintained dedup index, beside
+    * the index directory. Its `doc_id` is always a long; the index's
+    * own `doc_id` type comes from the caller's id column, so the index
+    * read stays inferred. */
+  private[graft] def dedupLedger(spark: org.apache.spark.sql.SparkSession,
+      indexDir: String) =
+    graft.store.Ledger.beside(spark, indexDir, "doc_id")
 
   /** X190: TOMBSTONE DELETES in the persisted dedup index — the X188
     * lifecycle leg for the text store: a taken-down document must stop
     * verdicting future batches as duplicates of it, and an append-only
     * index would keep matching it forever. Unlike the k-NN store no
     * recompute is needed (a doc's signature rows are independent), so
-    * a delete is ONE ledger write: the dying ids land under
-    * `<indexDir>__tombstones/batch_id=N` and [[readDedupIndex]]
-    * anti-joins them. Same resurrection contract as the k-NN store:
-    * re-ingesting a tombstoned id fails loud in the sink
-    * ([[graft.streaming.StreamingEvents.incrementalDedupSink]]) until
-    * [[compactDedupIndex]] applies + clears the ledger. Replays
-    * overwrite their own batch directory: idempotent. Deleting an
-    * unknown id is a harmless tombstone. */
+    * a delete is ONE ledger write under the [[graft.store.BatchStore]]
+    * contract: [[readDedupIndex]] anti-joins it, the sink
+    * ([[graft.streaming.StreamingEvents.incrementalDedupSink]]) fails
+    * loud on re-ingesting a tombstoned id, and [[compactDedupIndex]]
+    * applies + clears it. Deleting an unknown id is a harmless
+    * tombstone. */
   def deleteFromDedupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, deleted: DataFrame, idCol: String,
       batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"deleteFromDedupIndex: no index at $indexDir")
-    deleted.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .write.mode("overwrite")
-      .parquet(s"${indexDir}__tombstones/batch_id=$batchId")
-    ()
+    require(graft.store.BatchStore.exists(spark, indexDir),
+      s"deleteFromDedupIndex: no index at $indexDir")
+    val ledger = dedupLedger(spark, indexDir)
+    ledger.write(ledger.keys(deleted, idCol), batchId)
   }
 
   /** The canonical read of a delete-maintained dedup index: the
@@ -740,12 +695,8 @@ object Dedup {
     * callers, the store gate) go through this so a delete is visible
     * everywhere at once. */
   def readDedupIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val idx = spark.read.parquet(indexDir)
-    dedupTombstones(spark, indexDir).fold(idx)(t =>
-      idx.join(t.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti"))
-  }
+      indexDir: String): DataFrame =
+    dedupLedger(spark, indexDir).minus(spark.read.parquet(indexDir))
 
   /** X20 (index form): incremental cross-corpus dedup answered from a
     * [[buildDedupIndex]] table alone — the corpus documents are never

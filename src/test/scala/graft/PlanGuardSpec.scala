@@ -1094,4 +1094,79 @@ class PlanGuardSpec extends SparkSpec {
       p should not include "BroadcastNestedLoopJoin"
     }
   }
+
+  /** Spark jobs started while `body` runs. A marker job afterwards
+    * proves the asynchronous listener bus has delivered every earlier
+    * job start. */
+  private def jobsDuring(body: => Unit): Int = {
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("graft.marker")))
+          .getOrElse("job"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.marker", "marker")
+      try spark.range(1).count()
+      finally sc.setLocalProperty("graft.marker", null)
+      Iterator.continually(Option(starts.poll(60,
+          java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("the marker job never started")))
+        .takeWhile(_ != "marker").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  it should "open every tombstone-ledger store schema-pinned and anti-join its ledger by broadcast" in {
+    import graft.streaming.StreamingEvents
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ledgers").toString
+    val cents = vecs.filter(col("vec_id") % 10 === 0)
+    val store = s"$tmp/knn"
+    for (m <- 0 to 1)
+      Similarity.knnGraphIncrement(vecs.filter(col("vec_id") % 2 === m),
+        "vec_id", "embedding", cents, 8, 2, store, m.toLong)
+    Similarity.knnGraphDelete(Seq(3L).toDF("vec_id"), "vec_id", store, 2L, 2)
+    val streamed = s"$tmp/ivf_streamed"
+    StreamingEvents.ivfIndexBatch(vecs, 0L, "vec_id", "embedding", cents,
+      8, streamed)
+    val flat = s"$tmp/ivf_flat"
+    Similarity.writeIvfIndex(Similarity.buildIvfIndex(vecs, "vec_id",
+      "embedding", cents, 8), flat)
+    for (d <- Seq(streamed, flat))
+      Similarity.deleteFromIvfIndex(spark, d, Seq(3L).toDF("vec_id"),
+        "vec_id", 0L)
+    val idx = s"$tmp/dedup"
+    Dedup.buildDedupIndex(Seq((1L, "a b c d"), (2L, "e f g h"))
+        .toDF("doc_id", "text"), "doc_id", "text")
+      .write.parquet(s"$idx/batch_id=0")
+    Dedup.deleteFromDedupIndex(spark, idx, Seq(1L).toDF("doc_id"),
+      "doc_id", 0L)
+    // every tombstone-aware read plans its ledger as a broadcast anti-join
+    def antiJoinsByBroadcast(df: org.apache.spark.sql.DataFrame) =
+      planOf(df).linesIterator.exists(l => l.contains("BroadcastHashJoin") &&
+        l.contains("LeftAnti")) shouldBe true
+    antiJoinsByBroadcast(Dedup.readDedupIndex(spark, idx))
+    antiJoinsByBroadcast(Similarity.readIvfIndex(spark, streamed))
+    antiJoinsByBroadcast(Similarity.readIvfIndex(spark, flat))
+    antiJoinsByBroadcast(StreamingEvents.knnGraphView(spark, store))
+    antiJoinsByBroadcast(Similarity.knnStoreCorpus(spark, store))
+    // pinned schemas: opening a k-NN store, an IVF index or a ledger
+    // infers nothing, so it starts no job (the dedup index's own data
+    // schema is inferred: its doc_id type is the caller's)
+    jobsDuring {
+      Similarity.readKnnIndex(spark, store)
+      StreamingEvents.knnGraphView(spark, store)
+      Similarity.knnStoreCorpus(spark, store)
+      Similarity.readIvfIndex(spark, streamed)
+      Similarity.readIvfIndex(spark, flat)
+      Seq(Dedup.dedupLedger(spark, idx), Similarity.ivfLedger(spark, flat),
+        graft.store.Ledger.within(spark, store, "vec_id"))
+        .foreach(_.read().isDefined shouldBe true)
+    } shouldBe 0
+    graft.util.Caches.releaseAll(spark)
+  }
 }
