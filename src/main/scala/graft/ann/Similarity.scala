@@ -876,7 +876,7 @@ object Similarity {
     graft.store.BatchStore.firstPartition(spark, indexDir) match {
       case Some(n) if n.startsWith("centroid_id=") =>
         spark.read.schema(ivfFlatSchema).parquet(indexDir)
-      case Some(n) if n.startsWith("batch_id=") =>
+      case Some(n) if graft.store.BatchStore.isBatch(n) =>
         spark.read.schema(ivfBatchedSchema).parquet(indexDir)
       case _ => spark.read.parquet(indexDir)
     }
@@ -1642,13 +1642,12 @@ object Similarity {
   /** Writes an assignment as the store's `index/batch_id=N/__shard=S`. */
   private def writeKnnIndex(asg: DataFrame, storeDir: String,
       batchId: Long): Unit =
-    withShard(asg).repartition(col("__shard"))
-      .write.mode("overwrite").partitionBy("__shard")
-      .parquet(s"$storeDir/index/batch_id=$batchId")
+    graft.store.BatchStore.append(withShard(asg)
+      .repartition(col("__shard")), s"$storeDir/index", batchId, "__shard")
 
   private def writeKnnEdges(edges: DataFrame, storeDir: String,
       batchId: Long): Unit =
-    edges.write.mode("overwrite").parquet(s"$storeDir/edges/batch_id=$batchId")
+    graft.store.BatchStore.append(edges, s"$storeDir/edges", batchId)
 
   /** The store's tombstone ledger. Deletes and increments share one
     * batch sequence, so batch N reads only the ledger before N. */

@@ -205,7 +205,9 @@ object Scd2Merge {
     * version and the snapshot arg-max stays deterministic. Every emitted
     * row takes version snapshot+1 (1 for a new lineage), so a re-inserted
     * entity resumes after its delete instead of being shadowed by the
-    * stale D row. Exact-duplicate rows are removed last; the aggregate
+    * stale D row. Two different live rows of one entity in one batch
+    * would share that version, so they fail loud, unless the batch also
+    * flags the entity. Exact-duplicate rows are removed last; the aggregate
     * reuses the window's entity_id partitioning, so it adds no exchange.
     * A full load of an unchanged universe emits nothing. */
   def delta(incoming: DataFrame, snapshot: Option[DataFrame],
@@ -222,23 +224,33 @@ object Scd2Merge {
       .unionByName(batch))
     val entity = Window.partitionBy(col(EntityId))
     def fromSnapshot(c: String) = max(when(col("__snap"), col(c))).over(entity)
+    val liveRow = !col("__snap") && !col("__is_delete")
     val decided = rows
       .withColumn("__sn_version", fromSnapshot(Version))
       .withColumn("__sn_rectype", fromSnapshot(RecType))
       .withColumn("__sn_hash", fromSnapshot(HashedValue))
       .withColumn("__flagged", max(col("__is_delete")).over(entity))
-      .withColumn("__live",
-        max(!col("__snap") && !col("__is_delete")).over(entity))
+      // the least and greatest change hash of the batch's live rows: NULL
+      // when it has none, different when it has two different ones
+      .withColumn("__lo", min(when(liveRow, col(HashedValue))).over(entity))
+      .withColumn("__hi", max(when(liveRow, col(HashedValue))).over(entity))
     val active = col("__sn_rectype").isNotNull &&
       col("__sn_rectype") =!= Rec.Delete
     val emit = when(col("__snap"), active &&
-        (col("__flagged") || lit(!cfg.isDelta) && !col("__live")))
+        (col("__flagged") || lit(!cfg.isDelta) && col("__lo").isNull))
       .otherwise(!col("__flagged") &&
         (!active || col(HashedValue) =!= col("__sn_hash")))
+    // an unflagged entity with two different live rows emits at least one
+    // of them, so the check fails loud on the emitted rows alone
+    val version = when(!col("__flagged") && col("__lo") =!= col("__hi"),
+        raise_error(concat(lit("Scd2Merge.delta: entity "),
+          col(EntityId).cast("string"), lit(" has two different live " +
+            "rows in one batch; they would share one version"))))
+      .otherwise(coalesce(col("__sn_version") + 1, lit(1)))
     val stamped = Map(
       RecType -> when(col("__snap"), lit(Rec.Delete))
         .when(active, lit(Rec.Update)).otherwise(lit(Rec.Insert)),
-      Version -> coalesce(col("__sn_version") + 1, lit(1)),
+      Version -> version,
       StartTime -> lit(cfg.processTime).cast("timestamp"),
       ProcessDate -> lit(cfg.processTime).cast("date"),
       ProcessType -> lit(cfg.processType),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables.t
 import graft.ann.Similarity
+import graft.store.BatchStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -263,9 +264,7 @@ object AnnQueries {
       // other's store mid-query
       val store = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft_knn_store_x185_${s.sparkContext.applicationId}"
-      val p = new org.apache.hadoop.fs.Path(store)
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
+      BatchStore.delete(s, store)
       for (m <- 0 to 2)
         Similarity.knnGraphIncrement(emb.filter(col("vec_id") % 3 === m),
           "vec_id", "embedding", centroids, Dim, k = 4,
@@ -283,9 +282,7 @@ object AnnQueries {
       val centroids = emb.filter(col("vec_id") % 50 === 0)
       val store = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft_knn_store_x187_${s.sparkContext.applicationId}"
-      val p = new org.apache.hadoop.fs.Path(store)
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
+      BatchStore.delete(s, store)
       for (m <- 0 to 1)
         Similarity.knnGraphIncrement(emb.filter(col("vec_id") % 2 === m),
           "vec_id", "embedding", centroids, Dim, k = 4,
@@ -304,9 +301,7 @@ object AnnQueries {
       val centroids = emb.filter(col("vec_id") % 50 === 0)
       val store = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft_knn_store_x188_${s.sparkContext.applicationId}"
-      val p = new org.apache.hadoop.fs.Path(store)
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
+      BatchStore.delete(s, store)
       for (m <- 0 to 1)
         Similarity.knnGraphIncrement(emb.filter(col("vec_id") % 2 === m),
           "vec_id", "embedding", centroids, Dim, k = 4,
@@ -328,9 +323,7 @@ object AnnQueries {
       val centroids = emb.filter(col("vec_id") % 50 === 0)
       val store = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft_knn_store_x189_${s.sparkContext.applicationId}"
-      val p = new org.apache.hadoop.fs.Path(store)
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      if (fs.exists(p)) fs.delete(p, true)
+      BatchStore.delete(s, store)
       for (m <- 0 to 1)
         Similarity.knnGraphIncrement(emb.filter(col("vec_id") % 2 === m),
           "vec_id", "embedding", centroids, Dim, k = 4,
@@ -403,9 +396,7 @@ object AnnQueries {
       val b2 = emb.filter(col("vec_id") % 4 === 3)
       val path = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft_ivf_index_x191_${s.sparkContext.applicationId}"
-      val hp = new org.apache.hadoop.fs.Path(path)
-      val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      if (fs.exists(hp)) fs.delete(hp, true)
+      BatchStore.delete(s, path)
       Similarity.ivfLedger(s, path).clear()
       Similarity.writeIvfIndex(
         Similarity.buildIvfIndex(b1, "vec_id", "embedding", centroids,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables.t
+import graft.store.BatchStore
 import graft.text.{Dedup, TextStats}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -291,16 +292,12 @@ object TextQueries {
         .select(col("doc_id"), col("text"))
       val idx = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft_dedup_index_x190_${s.sparkContext.applicationId}"
-      val hp = new org.apache.hadoop.fs.Path(idx)
-      val fs = hp.getFileSystem(s.sessionState.newHadoopConf())
-      if (fs.exists(hp)) fs.delete(hp, true)
+      BatchStore.delete(s, idx)
       Dedup.dedupLedger(s, idx).clear()
-      Dedup.buildDedupIndex(corpus.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text")
-        .write.parquet(s"$idx/batch_id=0")
-      Dedup.buildDedupIndex(corpus.filter(col("doc_id") % 2 === 0),
-          "doc_id", "text")
-        .write.parquet(s"$idx/batch_id=1")
+      BatchStore.append(Dedup.buildDedupIndex(
+        corpus.filter(col("doc_id") % 2 === 1), "doc_id", "text"), idx, 0)
+      BatchStore.append(Dedup.buildDedupIndex(
+        corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text"), idx, 1)
       Dedup.deleteFromDedupIndex(s, idx,
         corpus.filter(col("doc_id") % 5 === 1).select(col("doc_id")),
         "doc_id", batchId = 2L)

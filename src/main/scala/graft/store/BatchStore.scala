@@ -43,14 +43,51 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * idle.
   *
   * Schemas. The ledger schema is pinned, so opening it starts no Spark
-  * job; a store pins its own data schema where the module owns it. */
+  * job; a store pins its own data schema where the module owns it.
+  *
+  * The streaming sinks of [[graft.streaming.StreamingEvents]] land
+  * through [[append]] too, without a ledger. */
 private[graft] object BatchStore {
+
+  private val Prefix = "batch_id="
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def exists(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new Path(dir))
+
+  /** Removes `dir` and everything under it, if it exists. */
+  def delete(spark: SparkSession, dir: String): Unit =
+    fs(spark, dir).delete(new Path(dir), true)
+
+  /** Where batch `id` of the store side `dir` lives. */
+  def batchDir(dir: String, id: Long): String = s"$dir/$Prefix$id"
+
+  /** Whether `name` is a batch directory's name. */
+  def isBatch(name: String): Boolean = name.startsWith(Prefix)
+
+  /** Writes `df` as batch `batchId` of `dir`, replacing what an earlier
+    * attempt of the same batch left there. */
+  def append(df: DataFrame, dir: String, batchId: Long,
+      partitionBy: String*): Unit =
+    df.write.mode("overwrite").partitionBy(partitionBy: _*)
+      .parquet(batchDir(dir, batchId))
+
+  /** What a store holds: how many distinct batch ids its sides hold, its
+    * data files, and whether its ledger has deletes not yet compacted. */
+  final case class Stats(batches: Int, files: Long, pending: Boolean)
+
+  def stats(spark: SparkSession, dir: String): Stats = {
+    val root = fs(spark, dir).makeQualified(new Path(dir))
+    val ledgers = Ledger.dirs(root.toUri.getPath)
+    val it = fs(spark, dir).listFiles(root, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext)
+      .map(_.next().getPath).filter(_.getName.startsWith("part-"))
+      .map(_.toUri.getPath).filterNot(_.startsWith(ledgers.last + "/")).toList
+    val ids = files.flatMap(_.split('/').filter(isBatch)).distinct
+    Stats(ids.size, files.size, ledgers.exists(exists(spark, _)))
+  }
 
   /** The name of the first `column=value` directory under `dir`: the
     * layout tag of a partitioned table. */
@@ -65,8 +102,7 @@ private[graft] object BatchStore {
     require(exists(spark, dir), s"$who: no store at $dir")
     val ids = fs(spark, dir).listStatus(new Path(dir))
       .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("batch_id="))
-      .map(_.stripPrefix("batch_id=").toLong).toSeq
+      .filter(isBatch).map(_.stripPrefix(Prefix).toLong).toSeq
     require(ids.nonEmpty,
       s"$who: $dir has no batch_id=* partitions — not $what")
     new Side(spark, dir, ids)
@@ -96,7 +132,7 @@ private[graft] final class Side(spark: SparkSession, dir: String,
   private def fs = new Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def batchDir(id: Long): String = s"$dir/batch_id=$id"
+  def batchDir(id: Long): String = BatchStore.batchDir(dir, id)
 
   /** Data files in the side's first batch directory. */
   def files: Int = fs.listStatus(new Path(batchDir(ids.head)))
@@ -132,7 +168,7 @@ private[graft] final class Ledger private (spark: SparkSession,
 
   /** Records `keys` (a frame of [[keys]]) as delete batch `batchId`. */
   def write(keys: DataFrame, batchId: Long): Unit =
-    keys.write.mode("overwrite").parquet(s"$dir/batch_id=$batchId")
+    BatchStore.append(keys, dir, batchId)
 
   /** `data` without its tombstoned rows. */
   def minus(data: DataFrame, before: Option[Long] = None): DataFrame =
@@ -155,9 +191,13 @@ private[graft] final class Ledger private (spark: SparkSession,
 private[graft] object Ledger {
   /** The ledger of a single-side store, beside its data directory. */
   def beside(spark: SparkSession, dataDir: String, key: String): Ledger =
-    new Ledger(spark, s"${dataDir}__tombstones", key)
+    new Ledger(spark, dirs(dataDir).head, key)
 
   /** The ledger of a multi-side store, inside its root. */
   def within(spark: SparkSession, storeDir: String, key: String): Ledger =
-    new Ledger(spark, s"$storeDir/tombstones", key)
+    new Ledger(spark, dirs(storeDir).last, key)
+
+  /** The two places a ledger of the store at `dir` can be. */
+  private[store] def dirs(dir: String): Seq[String] =
+    Seq(s"${dir}__tombstones", s"$dir/tombstones")
 }

@@ -1,9 +1,11 @@
 package graft.streaming
 
 import graft.events.EventCols
-import org.apache.spark.sql.{DataFrame, Dataset}
+import graft.store.BatchStore
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 
 /** Structured-Streaming event analytics — the reference's "reactive
   * pipeline" roadmap item (reference: docs/reactive_pipeline.md:1-10,
@@ -17,8 +19,35 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `flatMapGroupsWithState`. State lives in the streaming state store
   * (RocksDB-backed on a real cluster), partitioned by the grouping key:
   * per-entity state never converges on the driver and scales with
-  * executor count. */
+  * executor count.
+  *
+  * Sinks. Each `xSink` is a `foreachBatch` query over one micro-batch
+  * kernel `xBatch(batch, batchId, …)`, started by [[startSink]], which
+  * skips empty micro-batches: an empty batch writes nothing. A kernel
+  * lands each output through [[graft.store.BatchStore.append]] as
+  * `<dir>/batch_id=N`, overwriting that directory, so when Spark replays
+  * a batch after a failure (at-least-once) the replay replaces its own
+  * earlier attempt and the `xView` reads the same rows. The kernels are
+  * `private[graft]` so the parity specs drive the very code a running
+  * query runs: they call `xBatch` once per batch, replay one, and compare
+  * the view with the batch operator over the union.
+  *
+  * The views read their stores with `spark.read.parquet`, inferring the
+  * schema from the footers. They stay unpinned on purpose: their columns
+  * are named by the caller (`groupCol`, `keyCol`, [[EventCols]]), so
+  * there is no module-owned schema to pin. */
 object StreamingEvents {
+
+  /** Starts `input` as a micro-batch sink checkpointed at
+    * `checkpointDir`, handing every non-empty batch to `kernel`. */
+  private def startSink(input: DataFrame, checkpointDir: String)(
+      kernel: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        if (!batch.isEmpty) kernel(batch.toDF(), batchId)
+      }
+      .start()
 
   /** W1 streaming: per-entity session stats over a gap-based
     * `session_window`. Append mode — a session emits once the watermark
@@ -79,15 +108,12 @@ object StreamingEvents {
     * delete-by-absence is meaningless here. */
   def scd2Sink(incoming: DataFrame, store: graft.load.Scd2Store,
       table: String, mkConfig: Long => graft.load.MergeConfig,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val cfg = mkConfig(batchId)
-        require(cfg.isDelta, "streaming SCD2 ingest must be a delta load")
-        if (!batch.isEmpty) { store.runLoad(table, batch, cfg); () }
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(incoming, checkpointDir) { (batch, batchId) =>
+      val cfg = mkConfig(batchId)
+      require(cfg.isDelta, "streaming SCD2 ingest must be a delta load")
+      store.runLoad(table, batch, cfg)
+    }
 
   /** X20/X22 streaming: continuous corpus ingestion deduplicated against
     * the PERSISTED dedup index, with the index maintained append-only —
@@ -111,14 +137,10 @@ object StreamingEvents {
     * `buildDedupIndex(corpus)` output (or leave it empty and every
     * first-batch doc is `new`).
     *
-    * REPLAY-SAFE under foreachBatch's at-least-once contract: both writes
-    * land in a `batch_id=<id>` partition directory with per-batch
-    * overwrite, and index rows written by a failed attempt of the SAME
-    * batch are excluded from verdicting (anti-join on the batch's doc
-    * ids), so a replay reproduces byte-identical verdicts instead of
-    * matching documents against their own half-committed rows. Doc ids
-    * are therefore assumed unique across batches (re-ingesting an id
-    * re-verdicts it fresh). Seed the index INTO the partition layout —
+    * A replay reproduces byte-identical verdicts instead of matching
+    * documents against their own half-committed rows ([[indexSoFar]]).
+    * Doc ids are therefore assumed unique across batches (re-ingesting an
+    * id re-verdicts it fresh). Seed the index INTO the partition layout —
     * e.g. `buildDedupIndex(corpus).write.parquet(s"$dir/batch_id=-1")` —
     * so the seed and the per-batch appends share one discoverable
     * directory. Index existence goes through the Hadoop FileSystem of
@@ -133,19 +155,21 @@ object StreamingEvents {
   def incrementalDedupSink(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, verdictDir: String, checkpointDir: String,
       shingleN: Int = 3, k: Int = 16, bands: Int = 4,
-      minMatch: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          dedupBatch(batch.toDF(), batchId, idCol, textCol, indexDir,
-            verdictDir, shingleN, k, bands, minMatch)
-      }
-      .start()
+      minMatch: Int = 8): StreamingQuery =
+    startSink(docs, checkpointDir)(dedupBatch(_, _,
+      idCol, textCol, indexDir, verdictDir, shingleN, k, bands, minMatch))
 
-  /** One micro-batch of [[incrementalDedupSink]] — package-private so the
-    * replay-idempotence spec can invoke the same batch twice and prove a
-    * re-run reproduces identical verdicts and index contents. */
+  /** The index an index-reading kernel matches `batch` against: `read`
+    * minus the batch's own doc ids, because a failed earlier attempt of
+    * the batch may have appended them and a replay must not match itself;
+    * before the first batch, `build` over no rows (a schema-only index). */
+  private def indexSoFar(batch: DataFrame, idCol: String, indexDir: String,
+      read: => DataFrame, build: DataFrame => DataFrame): DataFrame =
+    if (BatchStore.exists(batch.sparkSession, indexDir))
+      read.join(broadcast(batch.select(col(idCol).as("doc_id"))),
+        Seq("doc_id"), "left_anti")
+    else build(batch.limit(0))
+
   private[graft] def dedupBatch(batch: DataFrame, batchId: Long,
       idCol: String, textCol: String, indexDir: String, verdictDir: String,
       shingleN: Int, k: Int, bands: Int, minMatch: Int): Unit = {
@@ -154,31 +178,21 @@ object StreamingEvents {
     // by deleteFromDedupIndex must not return before compactDedupIndex
     graft.text.Dedup.dedupLedger(spark, indexDir).guard(batch, idCol,
       "incrementalDedupSink", "compactDedupIndex")
-    val index =
-      if (graft.store.BatchStore.exists(spark, indexDir))
-        graft.text.Dedup.readDedupIndex(spark, indexDir)
-          // a failed attempt of THIS batch may have appended its rows
-          // already; they must not verdict the replay
-          .join(broadcast(batch.select(col(idCol).as("doc_id"))),
-            Seq("doc_id"), "left_anti")
-      else graft.text.Dedup
-        .buildDedupIndex(batch.limit(0), idCol, textCol,
-          shingleN, k, bands) // empty, schema-only seed
+    val index = indexSoFar(batch, idCol, indexDir,
+      graft.text.Dedup.readDedupIndex(spark, indexDir),
+      graft.text.Dedup.buildDedupIndex(_, idCol, textCol, shingleN, k, bands))
     val verdicts = graft.text.Dedup.incrementalDedupIndexed(index,
       batch, idCol, textCol, shingleN, k, bands, minMatch)
       .persist() // verdictDir write + the fresh-doc filter below
-    verdicts.write.mode("overwrite")
-      .parquet(s"$verdictDir/batch_id=$batchId")
+    BatchStore.append(verdicts, verdictDir, batchId)
     val fresh = batch.join(
       verdicts.filter(col("verdict") === "new")
         .select(col("doc_id").as(idCol)), Seq(idCol), "left_semi")
-    graft.text.Dedup
-      .buildDedupIndex(fresh, idCol, textCol, shingleN, k, bands)
-      .write.mode("overwrite")
-      .parquet(s"$indexDir/batch_id=$batchId")
+    BatchStore.append(graft.text.Dedup
+      .buildDedupIndex(fresh, idCol, textCol, shingleN, k, bands),
+      indexDir, batchId)
     verdicts.unpersist()
     graft.util.Caches.releaseAll(spark)
-    ()
   }
 
   /** X40 streaming: exact-substring span detection maintained over
@@ -187,50 +201,32 @@ object StreamingEvents {
     * ([[graft.text.SubstringDedup.incrementalDuplicatedSpans]]), span
     * reports land in `spanDir/batch_id=<id>`, and the batch's own
     * window fingerprints append to the index as `batch_id=<id>` — the
-    * exact replay-safe layout of [[incrementalDedupSink]] (per-batch
-    * overwrite; a failed attempt's own index rows are anti-joined out
-    * so a replay cannot match a doc against itself). A long-running
+    * layout of [[incrementalDedupSink]]. A long-running
     * query compacts with [[graft.text.Dedup.compactDedupIndex]]'s
     * sibling pattern: the span index is plain `batch_id=`-partitioned
     * parquet too. */
   def spanDedupSink(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, spanDir: String, checkpointDir: String,
-      windowTokens: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          spanBatch(batch.toDF(), batchId, idCol, textCol, indexDir,
-            spanDir, windowTokens)
-      }
-      .start()
+      windowTokens: Int = 8): StreamingQuery =
+    startSink(docs, checkpointDir)(spanBatch(_, _,
+      idCol, textCol, indexDir, spanDir, windowTokens))
 
-  /** One micro-batch of [[spanDedupSink]] — package-private for the
-    * replay-idempotence spec. */
   private[graft] def spanBatch(batch: DataFrame, batchId: Long,
       idCol: String, textCol: String, indexDir: String, spanDir: String,
       windowTokens: Int): Unit = {
-    val spark = batch.sparkSession
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index =
-      if (fs.exists(path))
-        spark.read.parquet(indexDir)
-          .join(broadcast(batch.select(col(idCol).as("doc_id"))),
-            Seq("doc_id"), "left_anti")
-      else graft.text.SubstringDedup
-        .buildSpanIndex(batch.limit(0), idCol, textCol, windowTokens)
-    graft.text.SubstringDedup
-      .incrementalDuplicatedSpans(index, batch, idCol, textCol, windowTokens)
-      .write.mode("overwrite").parquet(s"$spanDir/batch_id=$batchId")
-    graft.text.SubstringDedup
-      .buildSpanIndex(batch, idCol, textCol, windowTokens)
-      .write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")
+    val index = indexSoFar(batch, idCol, indexDir,
+      batch.sparkSession.read.parquet(indexDir),
+      graft.text.SubstringDedup.buildSpanIndex(_, idCol, textCol,
+        windowTokens))
+    BatchStore.append(graft.text.SubstringDedup
+      .incrementalDuplicatedSpans(index, batch, idCol, textCol, windowTokens),
+      spanDir, batchId)
+    BatchStore.append(graft.text.SubstringDedup
+      .buildSpanIndex(batch, idCol, textCol, windowTokens), indexDir, batchId)
     // no session-global cache release: incrementalDuplicatedSpans
     // persists nothing, so there is nothing of OURS to drop — and a
     // global releaseAll here would clobber the caches of any other sink
     // sharing this SparkSession mid-batch
-    ()
   }
 
   /** X76 streaming: IVF embedding-index maintenance over micro-batches —
@@ -241,25 +237,14 @@ object StreamingEvents {
     * `spark.read.parquet(indexDir)` is directly consumable by
     * [[graft.ann.Similarity.ivfTopKFromIndex]] (the extra batch_id
     * partition column rides along harmlessly) and per-bucket files grow
-    * by ONE per batch. REPLAY-SAFE trivially: assignment is a
-    * deterministic per-row function, and a replayed batch overwrites its
-    * own partition directory with identical rows (spec-proven). The
-    * streaming arm of the X76 lifecycle: seed with a batch build, stream
+    * by ONE per batch. The streaming arm of the X76 lifecycle: seed with a batch build, stream
     * appends, query any time. */
   def ivfIndexSink(embs: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, dim: Int, indexDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          ivfIndexBatch(batch.toDF(), batchId, idCol, vecCol, centroids,
-            dim, indexDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(embs, checkpointDir)(ivfIndexBatch(_, _,
+      idCol, vecCol, centroids, dim, indexDir))
 
-  /** One micro-batch of [[ivfIndexSink]] — package-private for the
-    * parity/replay spec. */
   private[graft] def ivfIndexBatch(batch: DataFrame, batchId: Long,
       idCol: String, vecCol: String, centroids: DataFrame, dim: Int,
       indexDir: String): Unit = {
@@ -271,7 +256,7 @@ object StreamingEvents {
       "ivfIndexSink", "compactIvfIndex")
     graft.ann.Similarity.writeIvfIndex(graft.ann.Similarity
       .buildIvfIndex(batch, idCol, vecCol, centroids, dim),
-      s"$indexDir/batch_id=$batchId", mode = "overwrite")
+      BatchStore.batchDir(indexDir, batchId), mode = "overwrite")
   }
 
   /** X45 streaming: CCNet line dedup maintained over micro-batches —
@@ -279,41 +264,23 @@ object StreamingEvents {
     * by EARLIER batches ([[graft.text.Dedup.lineDeduplicateIndexed]]),
     * rebuilt docs land in `outDir/batch_id=<id>`, and the batch's
     * newly-claimed hashes append to the index as `batch_id=<id>` — the
-    * replay-safe layout of [[incrementalDedupSink]] (per-batch
-    * overwrite; a failed attempt's own index rows are anti-joined out by
-    * claimant doc_id so a replay cannot dedup a doc against itself).
-    * Only NEW hashes append (already-claimed ones are filtered through
+    * layout of [[incrementalDedupSink]]. Only NEW hashes append (already-claimed ones are filtered through
     * the same broadcast-probe shape), so the index stays one row per
     * distinct corpus line and never re-claims. */
   def lineDedupSink(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, outDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          lineBatch(batch.toDF(), batchId, idCol, textCol, indexDir, outDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(docs, checkpointDir)(lineBatch(_, _,
+      idCol, textCol, indexDir, outDir))
 
-  /** One micro-batch of [[lineDedupSink]] — package-private for the
-    * replay-idempotence and batch-parity specs. */
   private[graft] def lineBatch(batch: DataFrame, batchId: Long,
       idCol: String, textCol: String, indexDir: String,
       outDir: String): Unit = {
-    val spark = batch.sparkSession
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val index =
-      if (fs.exists(path))
-        spark.read.parquet(indexDir)
-          .join(broadcast(batch.select(col(idCol).as("doc_id"))),
-            Seq("doc_id"), "left_anti")
-      else graft.text.Dedup
-        .buildLineIndex(batch.limit(0), idCol, textCol)
-    graft.text.Dedup
-      .lineDeduplicateIndexed(index, batch, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+    val index = indexSoFar(batch, idCol, indexDir,
+      batch.sparkSession.read.parquet(indexDir),
+      graft.text.Dedup.buildLineIndex(_, idCol, textCol))
+    BatchStore.append(graft.text.Dedup
+      .lineDeduplicateIndexed(index, batch, idCol, textCol), outDir, batchId)
     // append only the hashes no earlier batch claimed: the index streams
     // through two broadcast probes (semi to find claims, anti to drop
     // them from the batch's candidate rows) — never shuffled
@@ -321,18 +288,15 @@ object StreamingEvents {
     val claimed = index
       .join(broadcast(fresh.select(col("h"))), Seq("h"), "left_semi")
       .select(col("h")).distinct()
-    fresh.join(broadcast(claimed), Seq("h"), "left_anti")
-      .write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")
-    ()
+    BatchStore.append(fresh.join(broadcast(claimed), Seq("h"), "left_anti"),
+      indexDir, batchId)
   }
 
   /** X24 streaming: corpus vocabulary statistics maintained incrementally
     * over micro-batches — the streaming counterpart of
     * [[graft.text.TextStats.vocabulary]]. Each batch's partial
     * (token, term_freq, doc_freq) aggregate lands in its own
-    * `batch_id=<id>` partition with per-batch overwrite (the dedup sink's
-    * replay-safe layout: an at-least-once re-run of a batch rewrites the
-    * same partition byte-identically); [[vocabularyView]] publishes the
+    * `batch_id=<id>` partition; [[vocabularyView]] publishes the
     * exact corpus totals by summing the partials. Exact because term
     * occurrences are additive and each document is ingested in exactly
     * one batch (the same unique-doc-id contract as
@@ -341,24 +305,14 @@ object StreamingEvents {
     * is ever re-aggregated over history. Batch-vs-stream equivalence is
     * proven by spec. */
   def vocabularySink(docs: DataFrame, idCol: String, textCol: String,
-      statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) vocabularyBatch(batch.toDF(), batchId, idCol,
-          textCol, statsDir)
-      }
-      .start()
+      statsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(docs, checkpointDir)(vocabularyBatch(_, _,
+      idCol, textCol, statsDir))
 
-  /** One micro-batch of [[vocabularySink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def vocabularyBatch(batch: DataFrame, batchId: Long,
-      idCol: String, textCol: String, statsDir: String): Unit = {
-    graft.text.TextStats.vocabulary(batch, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+      idCol: String, textCol: String, statsDir: String): Unit =
+    BatchStore.append(graft.text.TextStats.vocabulary(batch, idCol, textCol),
+      statsDir, batchId)
 
   /** Streaming quality gate: score each micro-batch of documents with a
     * STATIC pre-trained Naive-Bayes model
@@ -368,24 +322,14 @@ object StreamingEvents {
     * offline. The model DataFrames are resolved once at sink
     * construction; each micro-batch joins against them exactly as the
     * batch scorer does (same code path — parity is by construction,
-    * and the spec drives [[classifierBatch]] directly to prove it).
-    * Batch-id-partitioned writes keep replays idempotent (a redelivered
-    * micro-batch overwrites its own directory, the dedup-sink
-    * convention here). */
+    * and the spec drives [[classifierBatch]] directly to prove it). */
   def classifierSink(docs: DataFrame, model: graft.ml.TextClassifier.NbModel,
       idCol: String, textCol: String, acceptLabel: String,
       minMargin: Double, outDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) classifierBatch(batch.toDF(), batchId, model,
-          idCol, textCol, acceptLabel, minMargin, outDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(docs, checkpointDir)(classifierBatch(_, _,
+      model, idCol, textCol, acceptLabel, minMargin, outDir))
 
-  /** One micro-batch of [[classifierSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def classifierBatch(batch: DataFrame, batchId: Long,
       model: graft.ml.TextClassifier.NbModel, idCol: String,
       textCol: String, acceptLabel: String, minMargin: Double,
@@ -395,10 +339,7 @@ object StreamingEvents {
         when(col("label") === acceptLabel &&
           coalesce(col("margin"), lit(0.0)) >= minMargin, "keep")
           .otherwise("quarantine"))
-    scored.write.mode("overwrite")
-      .partitionBy("verdict")
-      .parquet(s"$outDir/batch_id=$batchId")
-    ()
+    BatchStore.append(scored, outDir, batchId, "verdict")
   }
 
   /** Streaming heavy-hitter monitor: each micro-batch writes its
@@ -406,32 +347,23 @@ object StreamingEvents {
     * few KB regardless of batch size) under `batch_id=N`; the published
     * view merges the persisted summaries into candidates without ever
     * re-reading raw data — the mergeable-summaries pattern
-    * ([[graft.sketch.MisraGries]]) end-to-end through storage. Replays
-    * overwrite their own batch directory, so redelivery is idempotent.
+    * ([[graft.sketch.MisraGries]]) end-to-end through storage.
     * The MG guarantee survives the merge tree: any token above Σn/k of
     * the WHOLE stream appears in [[heavyHitterView]] (spec-proven);
     * re-counting candidates exactly is one corpus pass with a
     * broadcast semi-join when exact counts are needed. */
   def heavyHitterSink(docs: DataFrame, groupCol: String, textCol: String,
-      k: Int, statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) heavyHitterBatch(batch.toDF(), batchId,
-          groupCol, textCol, k, statsDir)
-      }
-      .start()
+      k: Int, statsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(docs, checkpointDir)(heavyHitterBatch(_, _,
+      groupCol, textCol, k, statsDir))
 
-  /** One micro-batch of [[heavyHitterSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def heavyHitterBatch(batch: DataFrame, batchId: Long,
       groupCol: String, textCol: String, k: Int, statsDir: String): Unit = {
     val toks = batch.select(col(groupCol),
       explode(graft.text.Dedup.words(col(textCol))).as("__tok"))
-    graft.sketch.HeavyHitters.summaries(toks, groupCol, "__tok", k)
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(
+      graft.sketch.HeavyHitters.summaries(toks, groupCol, "__tok", k),
+      statsDir, batchId)
   }
 
   /** The published view over a [[heavyHitterSink]] directory: merged
@@ -451,31 +383,20 @@ object StreamingEvents {
     * MG answers "which tokens are frequent", CM answers "how frequent
     * is THIS token" for any key, overestimate-only guarantee intact
     * under merging (cell-wise sums commute with the min-over-rows
-    * query — spec-proven equal to the one-pass sketch of the union).
-    * Replays overwrite their own batch directory, so redelivery is
-    * idempotent. */
+    * query — spec-proven equal to the one-pass sketch of the union). */
   def countMinSink(docs: DataFrame, groupCol: String, textCol: String,
       depth: Int, width: Int, cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) countMinBatch(batch.toDF(), batchId,
-          groupCol, textCol, depth, width, cellsDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(docs, checkpointDir)(countMinBatch(_, _,
+      groupCol, textCol, depth, width, cellsDir))
 
-  /** One micro-batch of [[countMinSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def countMinBatch(batch: DataFrame, batchId: Long,
       groupCol: String, textCol: String, depth: Int, width: Int,
       cellsDir: String): Unit = {
     val toks = batch.select(col(groupCol),
       explode(graft.text.Dedup.words(col(textCol))).as("__tok"))
-    graft.sketch.Sketches.countMinCells(toks, groupCol, "__tok",
-      depth, width)
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(graft.sketch.Sketches.countMinCells(toks, groupCol,
+      "__tok", depth, width), cellsDir, batchId)
   }
 
   /** Streaming SECOND-MOMENT (AMS F2) maintenance: each micro-batch
@@ -486,29 +407,19 @@ object StreamingEvents {
     * and the stream-wide F2 estimate equals a one-pass sketch of the
     * union (spec-proven). The live "is repeat-skew / self-join
     * pressure drifting" dial next to [[countMinSink]]'s point counts
-    * and [[heavyHitterSink]]'s top keys. Replays overwrite their own
-    * batch directory: idempotent. */
+    * and [[heavyHitterSink]]'s top keys. */
   def amsF2Sink(docs: DataFrame, groupCol: String, textCol: String,
-      counters: Int, cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) amsF2Batch(batch.toDF(), batchId, groupCol,
-          textCol, counters, cellsDir)
-      }
-      .start()
+      counters: Int, cellsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(docs, checkpointDir)(amsF2Batch(_, _,
+      groupCol, textCol, counters, cellsDir))
 
-  /** One micro-batch of [[amsF2Sink]] — package-private so the parity
-    * spec can drive the identical code path directly. */
   private[graft] def amsF2Batch(batch: DataFrame, batchId: Long,
       groupCol: String, textCol: String, counters: Int,
       cellsDir: String): Unit = {
     val toks = batch.select(col(groupCol),
       explode(graft.text.Dedup.words(col(textCol))).as("__tok"))
-    graft.sketch.Sketches.amsF2Cells(toks, groupCol, "__tok", counters)
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(graft.sketch.Sketches.amsF2Cells(toks, groupCol,
+      "__tok", counters), cellsDir, batchId)
   }
 
   /** The published view over an [[amsF2Sink]] directory: cell-wise
@@ -530,21 +441,13 @@ object StreamingEvents {
     * stream-wide counts — bit-identical to the batch leaderboard over
     * everything ingested (the MM is a pure function of the cell
     * multiset; spec-proven). The live RLHF annotation dashboard: "is
-    * model B still winning" without re-scanning a single vote. Replays
-    * overwrite their own batch directory: idempotent. */
+    * model B still winning" without re-scanning a single vote. */
   def bradleyTerrySink(votes: DataFrame, winnerCol: String,
       loserCol: String, cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    votes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) bradleyTerryBatch(batch.toDF(), batchId,
-          winnerCol, loserCol, cellsDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(votes, checkpointDir)(bradleyTerryBatch(_, _,
+      winnerCol, loserCol, cellsDir))
 
-  /** One micro-batch of [[bradleyTerrySink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def bradleyTerryBatch(batch: DataFrame, batchId: Long,
       winnerCol: String, loserCol: String, cellsDir: String): Unit = {
     val guarded = batch.select(
@@ -553,10 +456,8 @@ object StreamingEvents {
         raise_error(lit("bradleyTerryBatch: NULL or self-paired vote")))
         .otherwise(col(winnerCol).cast("string")).as("w"),
       col(loserCol).cast("string").as("l"))
-    guarded.groupBy(col("w"), col("l"))
-      .agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(guarded.groupBy(col("w"), col("l"))
+      .agg(count(lit(1)).as("n")), cellsDir, batchId)
   }
 
   /** The published view over a [[bradleyTerrySink]] directory: merged
@@ -576,30 +477,18 @@ object StreamingEvents {
     * deciles over a union are not a function of per-batch deciles —
     * so the published view (cell sums per bucket → the shared χ²
     * finish) equals [[graft.ml.Eval.hosmerLemeshowFixedBins]] over
-    * everything ingested (spec-proven). Replays overwrite their own
-    * batch directory: idempotent. */
+    * everything ingested (spec-proven). */
   def hosmerLemeshowSink(rows: DataFrame, probCol: String,
       labelCol: String, buckets: Int, cellsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) hosmerLemeshowBatch(batch.toDF(), batchId,
-          probCol, labelCol, buckets, cellsDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(hosmerLemeshowBatch(_, _,
+      probCol, labelCol, buckets, cellsDir))
 
-  /** One micro-batch of [[hosmerLemeshowSink]] — package-private so
-    * the parity spec can drive the identical code path directly. */
   private[graft] def hosmerLemeshowBatch(batch: DataFrame, batchId: Long,
       probCol: String, labelCol: String, buckets: Int,
-      cellsDir: String): Unit = {
-    graft.ml.Eval.hlFixedBinCells(batch, col(probCol), col(labelCol),
-      buckets)
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
-  }
+      cellsDir: String): Unit =
+    BatchStore.append(graft.ml.Eval.hlFixedBinCells(batch, col(probCol),
+      col(labelCol), buckets), cellsDir, batchId)
 
   /** The published view over a [[hosmerLemeshowSink]] directory:
     * bucket-summed cells through the same χ² finish as the batch
@@ -619,22 +508,14 @@ object StreamingEvents {
     * `batch_id=N`; DECIMAL sums merge exactly, so the published view
     * — the shared z finish over the summed row — equals
     * [[graft.ml.Eval.spiegelhalterZ]] over everything ingested
-    * (spec-proven). Replays overwrite their own batch directory:
-    * idempotent. */
+    * (spec-proven). */
   def spiegelhalterSink(rows: DataFrame, probCol: String,
       labelCol: String, cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) spiegelhalterBatch(batch.toDF(), batchId,
-          probCol, labelCol, cellsDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(rows, checkpointDir)(spiegelhalterBatch(_, _,
+      probCol, labelCol, cellsDir))
 
-  /** One micro-batch of [[spiegelhalterSink]] — package-private so
-    * the parity spec can drive the identical code path directly. The
-    * per-row guarded terms and 1e9 scaling are written ONCE here,
+  /** The per-row guarded terms and 1e9 scaling are written ONCE here,
     * mirroring [[graft.ml.Eval.spiegelhalterZ]]'s base projection
     * verbatim (same fail-loud guard, same fixed IEEE trees). */
   private[graft] def spiegelhalterBatch(batch: DataFrame, batchId: Long,
@@ -654,10 +535,8 @@ object StreamingEvents {
       (lit(1.0) - col("__p"))
     def s9(c: org.apache.spark.sql.Column) =
       sum(floor(c * lit(1e9) + lit(0.5)).cast("long").cast(D))
-    base.agg(count(lit(1)).as("n"),
-      s9(num).as("__num"), s9(den).as("__den"))
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(base.agg(count(lit(1)).as("n"),
+      s9(num).as("__num"), s9(den).as("__den")), cellsDir, batchId)
   }
 
   /** The published view over a [[spiegelhalterSink]] directory: the
@@ -680,26 +559,18 @@ object StreamingEvents {
     * value-summed cells through the shared J²/z finish — equals
     * [[graft.ml.RankTests.jonckheereTerpstra]] over everything
     * ingested (spec-proven). A row whose group is not in the declared
-    * list (or not an exact integer level) fails loud. Replays
-    * overwrite their own batch directory: idempotent. */
+    * list (or not an exact integer level) fails loud. */
   def jonckheereSink(rows: DataFrame, groupCol: String, valueCol: String,
       groups: Seq[Long], cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(groups.size >= 2 && groups == groups.sorted &&
       groups.distinct == groups,
       s"jonckheereSink: need >= 2 sorted distinct group levels, " +
         s"got $groups")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) jonckheereBatch(batch.toDF(), batchId,
-          groupCol, valueCol, groups, cellsDir)
-      }
-      .start()
+    startSink(rows, checkpointDir)(jonckheereBatch(_, _,
+      groupCol, valueCol, groups, cellsDir))
   }
 
-  /** One micro-batch of [[jonckheereSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def jonckheereBatch(batch: DataFrame, batchId: Long,
       groupCol: String, valueCol: String, groups: Seq[Long],
       cellsDir: String): Unit = {
@@ -715,9 +586,8 @@ object StreamingEvents {
             s"of the declared integer levels $groups")))
           .otherwise(gLong).as("__g"),
         value.as("__v"))
-    graft.ml.RankTests.jtValueCells(base, groups)
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(graft.ml.RankTests.jtValueCells(base, groups),
+      cellsDir, batchId)
   }
 
   /** The published view over a [[jonckheereSink]] directory: value-
@@ -739,31 +609,19 @@ object StreamingEvents {
     * are ASSOCIATIVE, so the published covariance view merges buffers
     * elementwise and equals a one-pass covariance of everything
     * ingested (spec-proven) — the stream never re-scans vectors to
-    * refresh the PCA model, and a refit is a matrix-sized read.
-    * Replays overwrite their own batch directory: idempotent. */
+    * refresh the PCA model, and a refit is a matrix-sized read. */
   def momentSink(vectors: DataFrame, vecCol: String, dim: Int,
-      momentsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) momentBatch(batch.toDF(), batchId, vecCol,
-          dim, momentsDir)
-      }
-      .start()
+      momentsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(vectors, checkpointDir)(momentBatch(_, _,
+      vecCol, dim, momentsDir))
 
-  /** One micro-batch of [[momentSink]] — package-private so the parity
-    * spec can drive the identical code path directly. */
   private[graft] def momentBatch(batch: DataFrame, batchId: Long,
       vecCol: String, dim: Int, momentsDir: String): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
     val buf = graft.ml.Pca.momentBuffer(batch, vecCol, dim)
-    buf.zipWithIndex.map { case (v, k) => (k.toLong, v) }.toSeq
-      .toDF("idx", "v")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$momentsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(buf.zipWithIndex.map { case (v, k) => (k.toLong, v) }
+      .toSeq.toDF("idx", "v").coalesce(1), momentsDir, batchId)
   }
 
   /** The published view over a [[momentSink]] directory: covariance of
@@ -788,31 +646,22 @@ object StreamingEvents {
     * ingested, and the E16 CUSUM changepoint over the view equals the
     * batch operator over the union (spec-proven): the stream gets a
     * "did this series shift level" monitor without ever re-scanning
-    * raw events. Replays overwrite their own batch directory:
-    * idempotent. */
+    * raw events. */
   def dailyAggSink(events: DataFrame, keyCol: String, tsCol: String,
       valueCol: String, dailyDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) dailyAggBatch(batch.toDF(), batchId, keyCol,
-          tsCol, valueCol, dailyDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(events, checkpointDir)(dailyAggBatch(_, _,
+      keyCol, tsCol, valueCol, dailyDir))
 
-  /** One micro-batch of [[dailyAggSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def dailyAggBatch(batch: DataFrame, batchId: Long,
       keyCol: String, tsCol: String, valueCol: String,
       dailyDir: String): Unit = {
     // DECIMAL sums (exact, associative): the merged view's re-aggregate
     // is then bit-identical to the one-pass batch daily table, keeping
     // E16 parity exact regardless of batch boundaries (r9 lesson).
-    batch.groupBy(col(keyCol), to_date(col(tsCol)).as("day"))
-      .agg(sum(col(valueCol).cast("decimal(18,2)")).as("x"))
-      .write.mode("overwrite").parquet(s"$dailyDir/batch_id=$batchId")
-    ()
+    BatchStore.append(batch.groupBy(col(keyCol), to_date(col(tsCol)).as("day"))
+      .agg(sum(col(valueCol).cast("decimal(18,2)")).as("x")),
+      dailyDir, batchId)
   }
 
   /** The published view over a [[dailyAggSink]] directory: the E16
@@ -909,33 +758,20 @@ object StreamingEvents {
   /** Streaming CATEGORY-CELL sink (the D30 monitor's store): each
     * micro-batch persists its per-category counts under `batch_id=N`
     * — rows bounded by category cardinality, never event volume;
-    * counts are exact and mergeable, replays overwrite their own
-    * partition (idempotent). NULL categories fail loud exactly like
-    * the batch operator. */
+    * counts are exact and mergeable. NULL categories fail loud exactly
+    * like the batch operator. */
   def categoryCellSink(rows: DataFrame, catCol: String,
-      cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) categoryCellBatch(batch.toDF(), batchId,
-          catCol, cellsDir)
-      }
-      .start()
+      cellsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(categoryCellBatch(_, _, catCol, cellsDir))
 
-  /** One micro-batch of [[categoryCellSink]] — package-private so the
-    * parity spec drives the identical code path. */
   private[graft] def categoryCellBatch(batch: DataFrame, batchId: Long,
-      catCol: String, cellsDir: String): Unit = {
-    batch
+      catCol: String, cellsDir: String): Unit =
+    BatchStore.append(batch
       .select(when(col(catCol).isNull,
         raise_error(lit(s"categoryCellSink: NULL category in " +
           s"'$catCol' — bucket NULLs explicitly")))
         .otherwise(col(catCol).cast("string")).as("cat"))
-      .groupBy(col("cat")).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
-  }
+      .groupBy(col("cat")).agg(count(lit(1)).as("n")), cellsDir, batchId)
 
   /** The D30 drift scorecard of everything ingested so far against a
     * FROZEN reference relation: merged stream cells full-outer-joined
@@ -967,30 +803,17 @@ object StreamingEvents {
     * volume — under `batch_id=N`. Distinct pairs are a SET, so the
     * merged view's re-distinct is EXACTLY the one-pass pair table of
     * everything ingested and the W18 kernel over it equals the batch
-    * operator over the union (spec-proven); replays overwrite their
-    * own batch directory: idempotent. */
+    * operator over the union (spec-proven). */
   def userWeekSink(events: DataFrame, weeksDir: String,
       checkpointDir: String,
-      c: graft.events.EventCols = graft.events.EventCols())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) userWeekBatch(batch.toDF(), batchId,
-          weeksDir, c)
-      }
-      .start()
+      c: graft.events.EventCols = graft.events.EventCols()): StreamingQuery =
+    startSink(events, checkpointDir)(userWeekBatch(_, _, weeksDir, c))
 
-  /** One micro-batch of [[userWeekSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def userWeekBatch(batch: DataFrame, batchId: Long,
-      weeksDir: String, c: graft.events.EventCols): Unit = {
-    batch.select(col(c.entity).as("u"),
+      weeksDir: String, c: graft.events.EventCols): Unit =
+    BatchStore.append(batch.select(col(c.entity).as("u"),
         date_trunc("week", col(c.ts)).cast("date").as("w"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$weeksDir/batch_id=$batchId")
-    ()
-  }
+      .distinct(), weeksDir, batchId)
 
   /** The published view over a [[userWeekSink]] directory: the W18
     * growth ledger over the merged distinct pairs. */
@@ -1006,30 +829,17 @@ object StreamingEvents {
     * under `batch_id=N`. Weekly decimal sums are exact and
     * associative, so the merged view's re-aggregate equals the
     * one-pass weekly table of everything ingested and the E23 kernel
-    * over it equals the batch operator over the union (spec-proven);
-    * replay-idempotent. */
+    * over it equals the batch operator over the union (spec-proven). */
   def cohortValueSink(events: DataFrame, valsDir: String,
       checkpointDir: String,
-      c: graft.events.EventCols = graft.events.EventCols())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) cohortValueBatch(batch.toDF(), batchId,
-          valsDir, c)
-      }
-      .start()
+      c: graft.events.EventCols = graft.events.EventCols()): StreamingQuery =
+    startSink(events, checkpointDir)(cohortValueBatch(_, _, valsDir, c))
 
-  /** One micro-batch of [[cohortValueSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def cohortValueBatch(batch: DataFrame, batchId: Long,
-      valsDir: String, c: graft.events.EventCols): Unit = {
-    batch.groupBy(col(c.entity).as("u"),
+      valsDir: String, c: graft.events.EventCols): Unit =
+    BatchStore.append(batch.groupBy(col(c.entity).as("u"),
         date_trunc("week", col(c.ts)).cast("date").as("w"))
-      .agg(sum(col(c.value).cast("decimal(18,2)")).as("v"))
-      .write.mode("overwrite").parquet(s"$valsDir/batch_id=$batchId")
-    ()
-  }
+      .agg(sum(col(c.value).cast("decimal(18,2)")).as("v")), valsDir, batchId)
 
   /** The published view over a [[cohortValueSink]] directory: the E23
     * LTV curve table over the merged weekly value sums. */
@@ -1049,26 +859,18 @@ object StreamingEvents {
     * first, exit the max-(ts, id) fragment last — even when an
     * out-of-order batch PREPENDS earlier events to a seen session),
     * so the view rebuilds exactly the batch W16 report over the
-    * union (spec-proven). Replays overwrite their batch directory:
-    * idempotent. */
+    * union (spec-proven). */
   def sessionStatsSink(events: DataFrame, timeoutSec: Long,
       fragDir: String, checkpointDir: String,
-      c: graft.events.EventCols = graft.events.EventCols())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) sessionStatsBatch(batch.toDF(), batchId,
-          timeoutSec, fragDir, c)
-      }
-      .start()
+      c: graft.events.EventCols = graft.events.EventCols()): StreamingQuery =
+    startSink(events, checkpointDir)(sessionStatsBatch(_, _,
+      timeoutSec, fragDir, c))
 
-  /** One micro-batch of [[sessionStatsSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def sessionStatsBatch(batch: DataFrame, batchId: Long,
       timeoutSec: Long, fragDir: String,
-      c: graft.events.EventCols): Unit = {
-    graft.events.EventFunctions.sessionize(batch, timeoutSec, c)
+      c: graft.events.EventCols): Unit =
+    BatchStore.append(
+      graft.events.EventFunctions.sessionize(batch, timeoutSec, c)
       .groupBy(col(c.entity), col("session_id"))
       .agg(count(lit(1)).as("n_events"),
         min(struct(col(c.ts), col(c.id), col(c.eventType))).as("__f"),
@@ -1079,10 +881,7 @@ object StreamingEvents {
         col("__f").getField(c.eventType).as("first_type"),
         col("__l").getField(c.ts).as("last_ts"),
         col("__l").getField(c.id).as("last_id"),
-        col("__l").getField(c.eventType).as("last_type"))
-      .write.mode("overwrite").parquet(s"$fragDir/batch_id=$batchId")
-    ()
-  }
+        col("__l").getField(c.eventType).as("last_type")), fragDir, batchId)
 
   /** The published view over a [[sessionStatsSink]] directory: the
     * W16 landing/exit matrix over the merged fragments — the same
@@ -1129,31 +928,21 @@ object StreamingEvents {
     * sweep checks. The reconstructed sessions therefore EQUAL a batch
     * sessionize over everything ingested (spec-proven), and the rule
     * table is the identical [[graft.events.EventFunctions]] W14 kernel
-    * over the merged stats. Replays overwrite their own batch
-    * directory: idempotent. */
+    * over the merged stats. */
   def sequentialRuleSink(events: DataFrame, timeoutSec: Long,
       fragDir: String, checkpointDir: String,
-      c: graft.events.EventCols = graft.events.EventCols())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) sequentialRuleBatch(batch.toDF(), batchId,
-          timeoutSec, fragDir, c)
-      }
-      .start()
+      c: graft.events.EventCols = graft.events.EventCols()): StreamingQuery =
+    startSink(events, checkpointDir)(sequentialRuleBatch(_, _,
+      timeoutSec, fragDir, c))
 
-  /** One micro-batch of [[sequentialRuleSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def sequentialRuleBatch(batch: DataFrame, batchId: Long,
       timeoutSec: Long, fragDir: String,
-      c: graft.events.EventCols): Unit = {
-    graft.events.EventFunctions.sessionize(batch, timeoutSec, c)
+      c: graft.events.EventCols): Unit =
+    BatchStore.append(
+      graft.events.EventFunctions.sessionize(batch, timeoutSec, c)
       .groupBy(col(c.entity), col("session_id"), col(c.eventType))
-      .agg(min(col(c.ts)).as("min_ts"), max(col(c.ts)).as("max_ts"))
-      .write.mode("overwrite").parquet(s"$fragDir/batch_id=$batchId")
-    ()
-  }
+      .agg(min(col(c.ts)).as("min_ts"), max(col(c.ts)).as("max_ts")),
+      fragDir, batchId)
 
   /** The published view over a [[sequentialRuleSink]] directory: the
     * W14 sequential-rule table over the merged session fragments —
@@ -1212,30 +1001,18 @@ object StreamingEvents {
     * construction — the priority is a pure row function of (seed, id,
     * weight), so every global winner is also a winner within its own
     * batch, and top-k over the stored per-batch top-ks equals the batch
-    * operator over the union of everything ingested (spec-proven).
-    * Replays overwrite their own batch directory: idempotent. */
+    * operator over the union of everything ingested (spec-proven). */
   def prioritySampleSink(rows: DataFrame, idCol: String,
       weightCol: String, k: Int, seed: String, sampleDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) prioritySampleBatch(batch.toDF(), batchId,
-          idCol, weightCol, k, seed, sampleDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(prioritySampleBatch(_, _,
+      idCol, weightCol, k, seed, sampleDir))
 
-  /** One micro-batch of [[prioritySampleSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def prioritySampleBatch(batch: DataFrame, batchId: Long,
       idCol: String, weightCol: String, k: Int, seed: String,
-      sampleDir: String): Unit = {
-    graft.curate.Curation.prioritySample(batch, idCol, weightCol, k, seed)
-      .drop("sample_rank")
-      .write.mode("overwrite").parquet(s"$sampleDir/batch_id=$batchId")
-    ()
-  }
+      sampleDir: String): Unit =
+    BatchStore.append(graft.curate.Curation.prioritySample(batch, idCol,
+      weightCol, k, seed).drop("sample_rank"), sampleDir, batchId)
 
   /** The published view over a [[prioritySampleSink]] directory: the
     * stream-wide k highest-priority rows with fresh ranks — identical
@@ -1258,30 +1035,19 @@ object StreamingEvents {
     * "did the feature distribution drift THIS batch" as a lookup over
     * stored summaries, no raw re-scan. Edges must stay frozen across
     * the stream (that is the point: drift is measured against a fixed
-    * yardstick). Replays overwrite their own batch directory:
-    * idempotent. */
+    * yardstick). */
   def driftMonitorSink(rows: DataFrame, valueCol: String,
       edges: Array[Double], statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) driftMonitorBatch(batch.toDF(), batchId,
-          valueCol, edges, statsDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(rows, checkpointDir)(driftMonitorBatch(_, _,
+      valueCol, edges, statsDir))
 
-  /** One micro-batch of [[driftMonitorSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def driftMonitorBatch(batch: DataFrame, batchId: Long,
-      valueCol: String, edges: Array[Double], statsDir: String): Unit = {
-    batch.select(col(valueCol).cast("double").as("__v"))
+      valueCol: String, edges: Array[Double], statsDir: String): Unit =
+    BatchStore.append(batch.select(col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
       .groupBy(graft.dq.Dq.binOf(col("__v"), edges).as("bin"))
-      .agg(count(lit(1)).as("n_cur"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+      .agg(count(lit(1)).as("n_cur")), statsDir, batchId)
 
   /** The published view over a [[driftMonitorSink]] directory: one row
     * per ingested batch with its PSI against the reference bin counts
@@ -1329,36 +1095,27 @@ object StreamingEvents {
     * `batch_id=N`. The counts are exact and mergeable, so the published
     * view's decile table over the whole stream equals the batch kernel
     * over the union (spec-proven). Bucket 1 holds the TOP scores (the
-    * gains-table convention). Replays overwrite their own batch
-    * directory: idempotent. */
+    * gains-table convention). */
   def liftMonitorSink(rows: DataFrame, scoreCol: String, labelCol: String,
       edges: Array[Double], statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) liftMonitorBatch(batch.toDF(), batchId,
-          scoreCol, labelCol, edges, statsDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(rows, checkpointDir)(liftMonitorBatch(_, _,
+      scoreCol, labelCol, edges, statsDir))
 
-  /** One micro-batch of [[liftMonitorSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def liftMonitorBatch(batch: DataFrame, batchId: Long,
       scoreCol: String, labelCol: String, edges: Array[Double],
       statsDir: String): Unit = {
     // binOf counts ascending; flip so bucket 1 = highest scores
     val bucket = lit(edges.length + 2) -
       graft.dq.Dq.binOf(col("__s"), edges)
-    batch
+    BatchStore.append(batch
       .select(col(scoreCol).cast("double").as("__s"),
         col(labelCol).cast("int").as("__y"))
       .filter(col("__s").isNotNull && col("__y").isNotNull)
       .groupBy(bucket.cast("long").as("bucket"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col("__y") === 1, 1L).otherwise(0L)).as("n_pos"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
+        sum(when(col("__y") === 1, 1L).otherwise(0L)).as("n_pos")),
+      statsDir, batchId)
   }
 
   /** The published view over a [[liftMonitorSink]] directory: the
@@ -1378,29 +1135,18 @@ object StreamingEvents {
     * merges the counts and reports each stratum's within-split share,
     * the governance check that the upstream split keeps preserving the
     * stratum mix as data flows. Counts are exact and mergeable, so the
-    * view equals the batch audit over the union (spec-proven). Replays
-    * overwrite their own batch directory: idempotent. */
+    * view equals the batch audit over the union (spec-proven). */
   def splitBalanceSink(rows: DataFrame, splitCol: String,
       stratumCol: String, statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) splitBalanceBatch(batch.toDF(), batchId,
-          splitCol, stratumCol, statsDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(rows, checkpointDir)(splitBalanceBatch(_, _,
+      splitCol, stratumCol, statsDir))
 
-  /** One micro-batch of [[splitBalanceSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def splitBalanceBatch(batch: DataFrame, batchId: Long,
-      splitCol: String, stratumCol: String, statsDir: String): Unit = {
-    batch
+      splitCol: String, stratumCol: String, statsDir: String): Unit =
+    BatchStore.append(batch
       .groupBy(col(splitCol).as("split"), col(stratumCol).as("stratum"))
-      .agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+      .agg(count(lit(1)).as("n")), statsDir, batchId)
 
   /** The published view over a [[splitBalanceSink]] directory: merged
     * (split, stratum, n, share) with share = n / Σ_split n — the same
@@ -1424,29 +1170,18 @@ object StreamingEvents {
     * the published view's parity/DI/equalized-odds report over the
     * whole stream equals the batch [[graft.ml.Eval.fairnessReport]]
     * over the union (spec-proven) — "is the filter drifting into
-    * discarding one source disproportionately" as a live dashboard.
-    * Replays overwrite their own batch directory: idempotent. */
+    * discarding one source disproportionately" as a live dashboard. */
   def fairnessSink(rows: DataFrame, groupCol: String, predCol: String,
       labelCol: String, statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) fairnessBatch(batch.toDF(), batchId,
-          groupCol, predCol, labelCol, statsDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(rows, checkpointDir)(fairnessBatch(_, _,
+      groupCol, predCol, labelCol, statsDir))
 
-  /** One micro-batch of [[fairnessSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def fairnessBatch(batch: DataFrame, batchId: Long,
       groupCol: String, predCol: String, labelCol: String,
-      statsDir: String): Unit = {
-    graft.ml.Eval.fairnessCells(batch, groupCol, col(predCol),
-        col(labelCol))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+      statsDir: String): Unit =
+    BatchStore.append(graft.ml.Eval.fairnessCells(batch, groupCol,
+      col(predCol), col(labelCol)), statsDir, batchId)
 
   /** The published view over a [[fairnessSink]] directory: merged
     * cells through the SAME derivation as the batch operator
@@ -1470,30 +1205,17 @@ object StreamingEvents {
     * as calibration data accumulates. The persisted table is
     * DISTINCT-SCORE-sized: for continuous scores callers should
     * pre-quantize the score column to a fixed grid — an explicit
-    * modeling choice, never silent policy. Replays overwrite their
-    * own batch directory: idempotent. */
+    * modeling choice, never silent policy. */
   def conformalSink(rows: DataFrame, scoreCol: String, statsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) conformalBatch(batch.toDF(), batchId,
-          scoreCol, statsDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(conformalBatch(_, _, scoreCol, statsDir))
 
-  /** One micro-batch of [[conformalSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def conformalBatch(batch: DataFrame, batchId: Long,
-      scoreCol: String, statsDir: String): Unit = {
-    batch
+      scoreCol: String, statsDir: String): Unit =
+    BatchStore.append(batch
       .select(col(scoreCol).cast("double").as("__s"))
       .filter(col("__s").isNotNull)
-      .groupBy(col("__s")).agg(count(lit(1)).as("__c"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+      .groupBy(col("__s")).agg(count(lit(1)).as("__c")), statsDir, batchId)
 
   /** The published view over a [[conformalSink]] directory: merged
     * distinct-score counts through the SAME order-statistic kernel as
@@ -1512,24 +1234,15 @@ object StreamingEvents {
     * per-doc counters reduced; exact, mergeable) under `batch_id=N`;
     * the published view re-sums and reports the corpus-wide script mix
     * with quantized shares — the "did the crawl start drifting into a
-    * script our langid never saw" alarm. Replays overwrite their own
-    * batch directory: idempotent. */
+    * script our langid never saw" alarm. */
   def scriptMixSink(docs: DataFrame, idCol: String, textCol: String,
-      statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) scriptMixBatch(batch.toDF(), batchId,
-          idCol, textCol, statsDir)
-      }
-      .start()
+      statsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(docs, checkpointDir)(scriptMixBatch(_, _,
+      idCol, textCol, statsDir))
 
-  /** One micro-batch of [[scriptMixSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def scriptMixBatch(batch: DataFrame, batchId: Long,
-      idCol: String, textCol: String, statsDir: String): Unit = {
-    graft.text.TextStats.scriptProfile(batch, idCol, textCol)
+      idCol: String, textCol: String, statsDir: String): Unit =
+    BatchStore.append(graft.text.TextStats.scriptProfile(batch, idCol, textCol)
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_latin")).as("n_latin"),
         sum(col("n_cyrillic")).as("n_cyrillic"),
@@ -1537,10 +1250,7 @@ object StreamingEvents {
         sum(col("n_arabic")).as("n_arabic"),
         sum(col("n_digit")).as("n_digit"),
         sum(col("n_space")).as("n_space"),
-        sum(col("n_chars")).as("n_chars"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+        sum(col("n_chars")).as("n_chars")), statsDir, batchId)
 
   /** The published view over a [[scriptMixSink]] directory: merged
     * counts with quantized corpus-wide shares. */
@@ -1574,29 +1284,16 @@ object StreamingEvents {
     * [[graft.dq.Stats.keySkewFromCounts]] kernel over the summed
     * counts — equals the batch report over everything ingested
     * (spec-proven). The "is this join key developing a hot lane"
-    * dashboard for a continuously-ingested table. Replays overwrite
-    * their own batch directory: idempotent. */
+    * dashboard for a continuously-ingested table. */
   def keySkewSink(rows: DataFrame, keyCol: String, statsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) keySkewBatch(batch.toDF(), batchId, keyCol,
-          statsDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(keySkewBatch(_, _, keyCol, statsDir))
 
-  /** One micro-batch of [[keySkewSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def keySkewBatch(batch: DataFrame, batchId: Long,
-      keyCol: String, statsDir: String): Unit = {
-    batch.select(col(keyCol).cast("string").as("key"))
+      keyCol: String, statsDir: String): Unit =
+    BatchStore.append(batch.select(col(keyCol).cast("string").as("key"))
       .filter(col("key").isNotNull)
-      .groupBy(col("key")).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+      .groupBy(col("key")).agg(count(lit(1)).as("n")), statsDir, batchId)
 
   /** The published view over a [[keySkewSink]] directory: the merged
     * per-key counts through the same skew kernel as the batch report. */
@@ -1612,32 +1309,21 @@ object StreamingEvents {
     * published view compares the stream-wide null rate per column
     * against a FROZEN reference rate table (the D5 frozen-yardstick
     * discipline) and reports the delta. Catches the upstream change
-    * that silently started writing NULLs without any schema change.
-    * Replays overwrite their own batch directory: idempotent. */
+    * that silently started writing NULLs without any schema change. */
   def nullRateSink(rows: DataFrame, cols: Seq[String], statsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     require(cols.nonEmpty, "nullRateSink: no columns")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) nullRateBatch(batch.toDF(), batchId, cols,
-          statsDir)
-      }
-      .start()
+    startSink(rows, checkpointDir)(nullRateBatch(_, _, cols, statsDir))
   }
 
-  /** One micro-batch of [[nullRateSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def nullRateBatch(batch: DataFrame, batchId: Long,
       cols: Seq[String], statsDir: String): Unit = {
     val agg = batch.agg(count(lit(1)).as("__n"),
       cols.map(c => count(col(c)).as(s"__c_$c")): _*)
     val rows = cols.map(c => struct(lit(c).as("column"),
       col("__n").as("n"), col(s"__c_$c").as("n_nonnull")))
-    agg.select(explode(array(rows: _*)).as("__r")).select(col("__r.*"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(agg.select(explode(array(rows: _*)).as("__r"))
+      .select(col("__r.*")), statsDir, batchId)
   }
 
   /** The published view over a [[nullRateSink]] directory: stream-wide
@@ -1661,33 +1347,20 @@ object StreamingEvents {
     * [[graft.dq.Dq.benfordFromCounts]] kernel over the summed counts —
     * equals the batch test over everything ingested (spec-proven).
     * The "did the amounts feed start emitting invented numbers"
-    * dashboard. Replays overwrite their own batch directory:
-    * idempotent. */
+    * dashboard. */
   def benfordSink(rows: DataFrame, valueCol: String, statsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) benfordBatch(batch.toDF(), batchId, valueCol,
-          statsDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(benfordBatch(_, _, valueCol, statsDir))
 
-  /** One micro-batch of [[benfordSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def benfordBatch(batch: DataFrame, batchId: Long,
-      valueCol: String, statsDir: String): Unit = {
-    batch
+      valueCol: String, statsDir: String): Unit =
+    BatchStore.append(batch
       .select(floor(abs(col(valueCol).cast("double")) * lit(100.0) +
         lit(0.5)).cast("long").as("__cents"))
       .select(when(col("__cents") > 0,
         substring(col("__cents").cast("string"), 1, 1).cast("int"))
         .as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("__n"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+      .groupBy(col("digit")).agg(count(lit(1)).as("__n")), statsDir, batchId)
 
   /** The published view over a [[benfordSink]] directory: merged digit
     * counts through the same χ²/MAD kernel as the batch test. */
@@ -1703,34 +1376,23 @@ object StreamingEvents {
     * — the shared [[graft.ml.Eval.confusionFromCounts]] scorecard over
     * the summed row — equals the batch suite over everything ingested
     * (spec-proven). The live model-health dashboard as labeled
-    * feedback trickles in. Replays overwrite their own batch
-    * directory: idempotent. */
+    * feedback trickles in. */
   def confusionSink(rows: DataFrame, predCol: String, labelCol: String,
-      statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) confusionBatch(batch.toDF(), batchId,
-          predCol, labelCol, statsDir)
-      }
-      .start()
+      statsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(confusionBatch(_, _,
+      predCol, labelCol, statsDir))
 
-  /** One micro-batch of [[confusionSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def confusionBatch(batch: DataFrame, batchId: Long,
       predCol: String, labelCol: String, statsDir: String): Unit = {
     val p = col(predCol).cast("int")
     val y = col(labelCol).cast("int")
-    batch.agg(
+    BatchStore.append(batch.agg(
       coalesce(sum(when(p === 1 && y === 1, 1L)), lit(0L)).as("tp"),
       coalesce(sum(when(p === 1 && y === 0, 1L)), lit(0L)).as("fp"),
       coalesce(sum(when(p === 0 && y === 0, 1L)), lit(0L)).as("tn"),
       coalesce(sum(when(p === 0 && y === 1, 1L)), lit(0L)).as("fn"),
       coalesce(sum(when(p.isNull || y.isNull, 1L)), lit(0L))
-        .as("__n_null"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
+        .as("__n_null")), statsDir, batchId)
   }
 
   /** The published view over a [[confusionSink]] directory: the merged
@@ -1749,26 +1411,17 @@ object StreamingEvents {
     * under `batch_id=N`; decimal addition is exact and associative, so
     * the published view — [[graft.dq.Stats.welchFromMoments]] over the
     * summed row — equals the batch test over everything ingested
-    * (spec-proven). The continuously-updating experiment readout.
-    * Replays overwrite their own batch directory: idempotent. */
+    * (spec-proven). The continuously-updating experiment readout. */
   def welchSink(rows: DataFrame, variantCol: String, valueCol: String,
-      statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) welchBatch(batch.toDF(), batchId, variantCol,
-          valueCol, statsDir)
-      }
-      .start()
+      statsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(welchBatch(_, _,
+      variantCol, valueCol, statsDir))
 
-  /** One micro-batch of [[welchSink]] — package-private so the parity
-    * spec can drive the identical code path directly. */
   private[graft] def welchBatch(batch: DataFrame, batchId: Long,
       variantCol: String, valueCol: String, statsDir: String): Unit = {
     val variant = col(variantCol)
     val x = col(valueCol).cast("decimal(18,6)")
-    batch.agg(
+    BatchStore.append(batch.agg(
       coalesce(sum(when(variant === 0, 1L).otherwise(0L)), lit(0L))
         .as("n0"),
       coalesce(sum(when(variant === 1, 1L).otherwise(0L)), lit(0L))
@@ -1776,9 +1429,7 @@ object StreamingEvents {
       sum(when(variant === 0, x)).as("__s0"),
       sum(when(variant === 1, x)).as("__s1"),
       sum(when(variant === 0, x * x)).as("__q0"),
-      sum(when(variant === 1, x * x)).as("__q1"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
+      sum(when(variant === 1, x * x)).as("__q1")), statsDir, batchId)
   }
 
   /** The published view over a [[welchSink]] directory: the merged
@@ -1796,31 +1447,18 @@ object StreamingEvents {
     * `batch_id=N`; both merge exactly, so the published view —
     * [[graft.dq.Stats.ucbFromCounts]] over the summed arms — equals
     * the batch snapshot over every pull ingested (spec-proven). The
-    * live "which arm next" readout. Replays overwrite their own batch
-    * directory: idempotent. */
+    * live "which arm next" readout. */
   def ucbSink(rows: DataFrame, armCol: String, rewardCol: String,
-      statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) ucbBatch(batch.toDF(), batchId, armCol,
-          rewardCol, statsDir)
-      }
-      .start()
+      statsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(ucbBatch(_, _, armCol, rewardCol, statsDir))
 
-  /** One micro-batch of [[ucbSink]] — package-private so the parity
-    * spec can drive the identical code path directly. */
   private[graft] def ucbBatch(batch: DataFrame, batchId: Long,
-      armCol: String, rewardCol: String, statsDir: String): Unit = {
-    batch.groupBy(col(armCol).as("arm"))
+      armCol: String, rewardCol: String, statsDir: String): Unit =
+    BatchStore.append(batch.groupBy(col(armCol).as("arm"))
       .agg(count(lit(1)).as("n"),
         coalesce(sum(col(rewardCol).cast("decimal(18,6)")),
           lit(java.math.BigDecimal.ZERO).cast("decimal(18,6)"))
-          .as("__r"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+          .as("__r")), statsDir, batchId)
 
   /** The published view over a [[ucbSink]] directory: merged arm
     * counts through the same UCB1 derivation as the batch snapshot. */
@@ -1837,27 +1475,18 @@ object StreamingEvents {
     * [[graft.dq.Stats.bhFdrFromCounts]] over the summed groups —
     * equals the batch step-up over everything ingested (spec-proven),
     * INCLUDING the degeneracy filter: a group only becomes a test once
-    * enough batches give both arms exposure. Replays overwrite their
-    * own batch directory: idempotent. */
+    * enough batches give both arms exposure. */
   def bhFdrSink(rows: DataFrame, groupCols: Seq[String],
       variantCol: String, convertedCol: String, statsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) bhFdrBatch(batch.toDF(), batchId, groupCols,
-          variantCol, convertedCol, statsDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(bhFdrBatch(_, _,
+      groupCols, variantCol, convertedCol, statsDir))
 
-  /** One micro-batch of [[bhFdrSink]] — package-private so the parity
-    * spec can drive the identical code path directly. */
   private[graft] def bhFdrBatch(batch: DataFrame, batchId: Long,
       groupCols: Seq[String], variantCol: String, convertedCol: String,
       statsDir: String): Unit = {
     val variant = col(variantCol)
-    batch.groupBy(groupCols.map(col): _*)
+    BatchStore.append(batch.groupBy(groupCols.map(col): _*)
       .agg(
         coalesce(sum(when(variant === 0, 1L).otherwise(0L)), lit(0L))
           .as("n0"),
@@ -1866,9 +1495,7 @@ object StreamingEvents {
         coalesce(sum(when(variant === 0, col(convertedCol).cast("long"))
           .otherwise(0L)), lit(0L)).as("c0"),
         coalesce(sum(when(variant === 1, col(convertedCol).cast("long"))
-          .otherwise(0L)), lit(0L)).as("c1"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
+          .otherwise(0L)), lit(0L)).as("c1")), statsDir, batchId)
   }
 
   /** The published view over a [[bhFdrSink]] directory: merged group
@@ -1891,15 +1518,9 @@ object StreamingEvents {
     * error. Batch-parity + replay-idempotence spec-proven. */
   def msprtSink(rows: DataFrame, groupCols: Seq[String],
       variantCol: String, convertedCol: String, statsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) bhFdrBatch(batch.toDF(), batchId, groupCols,
-          variantCol, convertedCol, statsDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(bhFdrBatch(_, _,
+      groupCols, variantCol, convertedCol, statsDir))
 
   /** The published view over a [[msprtSink]] directory: merged segment
     * counters through the identical closed-form mSPRT. */
@@ -1919,15 +1540,9 @@ object StreamingEvents {
     * readout over everything ingested so far. */
   def cmhSink(rows: DataFrame, strataCols: Seq[String],
       variantCol: String, convertedCol: String, statsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) bhFdrBatch(batch.toDF(), batchId, strataCols,
-          variantCol, convertedCol, statsDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(bhFdrBatch(_, _,
+      strataCols, variantCol, convertedCol, statsDir))
 
   /** The published view over a [[cmhSink]] directory: merged stratum
     * counters through the identical pooled test (degenerate strata
@@ -1949,32 +1564,20 @@ object StreamingEvents {
     * view — [[graft.ml.Labeling.cohenKappaFromCells]] over the summed
     * cells — equals the batch kappa over everything ingested
     * (spec-proven). The live "are the labelers drifting apart" readout
-    * for a labeling campaign. Replays overwrite their own batch
-    * directory: idempotent. */
+    * for a labeling campaign. */
   def agreementSink(rows: DataFrame, labelACol: String, labelBCol: String,
-      statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) agreementBatch(batch.toDF(), batchId,
-          labelACol, labelBCol, statsDir)
-      }
-      .start()
+      statsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(agreementBatch(_, _,
+      labelACol, labelBCol, statsDir))
 
-  /** One micro-batch of [[agreementSink]] — package-private so the
-    * parity spec can drive the identical code path directly. NULL on
-    * either side is an abstention, not a vote: excluded, matching the
-    * batch operator's NULL-label filter. */
+  /** NULL on either side is an abstention, not a vote: excluded,
+    * matching the batch operator's NULL-label filter. */
   private[graft] def agreementBatch(batch: DataFrame, batchId: Long,
-      labelACol: String, labelBCol: String, statsDir: String): Unit = {
-    batch
+      labelACol: String, labelBCol: String, statsDir: String): Unit =
+    BatchStore.append(batch
       .filter(col(labelACol).isNotNull && col(labelBCol).isNotNull)
       .groupBy(col(labelACol).as("__la"), col(labelBCol).as("__lb"))
-      .agg(count(lit(1)).as("__c"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+      .agg(count(lit(1)).as("__c")), statsDir, batchId)
 
   /** The published view over an [[agreementSink]] directory: merged
     * label-pair cells through the identical kappa derivation as the
@@ -1997,25 +1600,17 @@ object StreamingEvents {
     * counts just add) — the view runs the shared
     * [[graft.ml.Labeling.krippendorffFromCells]] kernel and is
     * spec-proven identical to the batch operator over the union.
-    * Replay overwrites `batch_id=N`: idempotent. NULL labels are
-    * abstentions (excluded), matching the batch operator; the batch
-    * operator's duplicate-(unit, rater) guard is enforced per batch
+    * NULL labels are abstentions (excluded), matching the batch
+    * operator; the batch operator's duplicate-(unit, rater) guard is
+    * enforced per batch
     * (cross-batch re-votes are indistinguishable from late extra
     * raters by design — alpha handles varying panels). */
   def krippendorffSink(rows: DataFrame, itemCol: String,
       raterCol: String, labelCol: String, statsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) krippendorffBatch(batch.toDF(), batchId,
-          itemCol, raterCol, labelCol, statsDir)
-      }
-      .start()
+      checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(krippendorffBatch(_, _,
+      itemCol, raterCol, labelCol, statsDir))
 
-  /** One micro-batch of [[krippendorffSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def krippendorffBatch(batch: DataFrame, batchId: Long,
       itemCol: String, raterCol: String, labelCol: String,
       statsDir: String): Unit = {
@@ -2027,10 +1622,8 @@ object StreamingEvents {
       .limit(1).collect()
     require(dup.isEmpty,
       "krippendorffBatch: a rater voted the same unit twice in one batch")
-    votes.groupBy(col("__i"), col("__l"))
-      .agg(count(lit(1)).as("__c"))
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(votes.groupBy(col("__i"), col("__l"))
+      .agg(count(lit(1)).as("__c")), statsDir, batchId)
   }
 
   /** The published view over a [[krippendorffSink]] directory: merged
@@ -2052,7 +1645,7 @@ object StreamingEvents {
     * therefore follows the INDEX-sink ingest contract (the span/
     * line-index precedent): each micro-batch appends its scaled score
     * rows (id, given, class, p) — the kernel's minimal sufficient
-    * input — under `batch_id=N` (replay overwrites: idempotent), and
+    * input — under `batch_id=N`, and
     * the view re-runs the full [[graft.ml.Labeling.confidentJoint]]
     * kernel over the union with thresholds recomputed globally —
     * spec-proven identical to the batch operator. State is
@@ -2060,27 +1653,17 @@ object StreamingEvents {
     * compaction story is the shared dedup-index one. */
   def confidentJointSink(rows: DataFrame, idCol: String,
       givenCol: String, classCol: String, pCol: String,
-      statsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) confidentJointBatch(batch.toDF(), batchId,
-          idCol, givenCol, classCol, pCol, statsDir)
-      }
-      .start()
+      statsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(confidentJointBatch(_, _,
+      idCol, givenCol, classCol, pCol, statsDir))
 
-  /** One micro-batch of [[confidentJointSink]] — package-private so
-    * the parity spec can drive the identical code path directly. */
   private[graft] def confidentJointBatch(batch: DataFrame,
       batchId: Long, idCol: String, givenCol: String, classCol: String,
-      pCol: String, statsDir: String): Unit = {
-    batch.select(col(idCol).as("__i"), col(givenCol).as("__g"),
-        col(classCol).as("__c"), col(pCol).cast("double").as("__p"))
-      .filter(col("__p").isNotNull)
-      .write.mode("overwrite").parquet(s"$statsDir/batch_id=$batchId")
-    ()
-  }
+      pCol: String, statsDir: String): Unit =
+    BatchStore.append(batch.select(col(idCol).as("__i"),
+        col(givenCol).as("__g"), col(classCol).as("__c"),
+        col(pCol).cast("double").as("__p"))
+      .filter(col("__p").isNotNull), statsDir, batchId)
 
   /** The published view over a [[confidentJointSink]] directory: the
     * X153 census with GLOBAL thresholds over everything ingested. */
@@ -2108,27 +1691,16 @@ object StreamingEvents {
     * published view re-runs the exact X158 tail (line-frequency
     * aggregate + per-doc rollup) over the union, so it equals the
     * batch operator over everything ingested (spec-proven). The live
-    * "is the crawl drifting into template pages" dashboard. Replays
-    * overwrite their own batch directory: idempotent. */
+    * "is the crawl drifting into template pages" dashboard. */
   def lineIndexSink(rows: DataFrame, idCol: String, textCol: String,
-      indexDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) lineIndexBatch(batch.toDF(), batchId,
-          idCol, textCol, indexDir)
-      }
-      .start()
+      indexDir: String, checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(lineIndexBatch(_, _,
+      idCol, textCol, indexDir))
 
-  /** One micro-batch of [[lineIndexSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def lineIndexBatch(batch: DataFrame, batchId: Long,
-      idCol: String, textCol: String, indexDir: String): Unit = {
-    graft.text.Dedup.docLineIndex(batch, idCol, textCol)
-      .write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")
-    ()
-  }
+      idCol: String, textCol: String, indexDir: String): Unit =
+    BatchStore.append(graft.text.Dedup.docLineIndex(batch, idCol, textCol),
+      indexDir, batchId)
 
   /** The published view over a [[lineIndexSink]] directory: the X158
     * per-doc boilerplate report from the unioned line index. */
@@ -2146,36 +1718,25 @@ object StreamingEvents {
     * counters — and the published view sums them through
     * [[graft.dq.Stats.cochranArmitageFromCounts]] verbatim, so the
     * live "is the ramp's conversion trend holding" readout equals the
-    * batch test over everything ingested (spec-proven). Replays
-    * overwrite their own batch directory: idempotent. */
+    * batch test over everything ingested (spec-proven). */
   def cochranArmitageSink(rows: DataFrame, doseCol: String,
       convertedCol: String, doses: Seq[Long], cellsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     require(doses.size >= 2 && doses == doses.sorted &&
       doses.distinct == doses,
       s"cochranArmitageSink: need >= 2 sorted distinct dose levels, " +
         s"got $doses")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) cochranArmitageBatch(batch.toDF(), batchId,
-          doseCol, convertedCol, doses, cellsDir)
-      }
-      .start()
+    startSink(rows, checkpointDir)(cochranArmitageBatch(_, _,
+      doseCol, convertedCol, doses, cellsDir))
   }
 
-  /** One micro-batch of [[cochranArmitageSink]] — package-private so
-    * the parity spec can drive the identical code path directly. */
   private[graft] def cochranArmitageBatch(batch: DataFrame,
       batchId: Long, doseCol: String, convertedCol: String,
       doses: Seq[Long], cellsDir: String): Unit = {
     // the batch operator's guard front, shared verbatim — declared
     // levels, exactly-0/1 outcomes, both fail loud
-    graft.dq.Stats.cochranArmitageGuardedCounts(batch, col(doseCol),
-        col(convertedCol), doses)
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(graft.dq.Stats.cochranArmitageGuardedCounts(batch,
+      col(doseCol), col(convertedCol), doses), cellsDir, batchId)
   }
 
   /** The published view over a [[cochranArmitageSink]] directory:
@@ -2198,30 +1759,17 @@ object StreamingEvents {
     * batch finisher verbatim, so every view is bit-equal to the batch
     * operator over (reference, everything-ingested) regardless of
     * batch boundaries (spec-proven). NULL values drop exactly like the
-    * batch operators' clean step. Replays overwrite their own batch
-    * directory: idempotent. */
+    * batch operators' clean step. */
   def valueCellSink(rows: DataFrame, valueCol: String,
-      cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) valueCellBatch(batch.toDF(), batchId,
-          valueCol, cellsDir)
-      }
-      .start()
+      cellsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(valueCellBatch(_, _, valueCol, cellsDir))
 
-  /** One micro-batch of [[valueCellSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def valueCellBatch(batch: DataFrame, batchId: Long,
-      valueCol: String, cellsDir: String): Unit = {
-    batch.select(col(valueCol).cast("double").as("__v"))
+      valueCol: String, cellsDir: String): Unit =
+    BatchStore.append(batch.select(col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
       .groupBy(col("__v"))
-      .agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
-  }
+      .agg(count(lit(1)).as("n")), cellsDir, batchId)
 
   /** The pooled (__v, nr, nc) distinct-value table of a frozen
     * reference DataFrame against a [[valueCellSink]] store — the
@@ -2299,22 +1847,15 @@ object StreamingEvents {
     * `edges/batch_id=N`. The published [[knnGraphView]] — latest batch
     * per source — is bit-equal to a full [[graft.ann.Similarity
     * .knnGraph]] rebuild over everything ingested (spec-proven).
-    * Replays re-read only earlier batches and overwrite their own
-    * directories: idempotent. */
+    * A replay re-reads only earlier batches. */
   def knnGraphSink(vectors: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, dim: Int, k: Int, storeDir: String,
       checkpointDir: String, probes: Int = 2,
-      maxBucketPoints: Long = 100000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.ann.Similarity.knnGraphIncrement(batch.toDF(), idCol,
-            vecCol, centroids, dim, k, storeDir, batchId, probes,
-            maxBucketPoints)
-      }
-      .start()
+      maxBucketPoints: Long = 100000L): StreamingQuery =
+    startSink(vectors, checkpointDir) { (batch, batchId) =>
+      graft.ann.Similarity.knnGraphIncrement(batch, idCol, vecCol,
+        centroids, dim, k, storeDir, batchId, probes, maxBucketPoints)
+    }
 
   /** The published view over a [[knnGraphSink]] store: each source's
     * edges from the LATEST batch that recomputed it — an unaffected
@@ -2412,29 +1953,16 @@ object StreamingEvents {
     * verbatim — equals the batch W22 over everything ingested
     * (spec-proven). This keeps the survey's invariant: every batch
     * operator with mergeable sufficient statistics gets a twin. NULL
-    * event types drop exactly like the batch operator. Replays
-    * overwrite their own batch directory: idempotent. */
+    * event types drop exactly like the batch operator. */
   def eventTypeCellSink(events: DataFrame, cellsDir: String,
-      checkpointDir: String, c: EventCols = EventCols())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) eventTypeCellBatch(batch.toDF(), batchId,
-          cellsDir, c)
-      }
-      .start()
+      checkpointDir: String, c: EventCols = EventCols()): StreamingQuery =
+    startSink(events, checkpointDir)(eventTypeCellBatch(_, _, cellsDir, c))
 
-  /** One micro-batch of [[eventTypeCellSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def eventTypeCellBatch(batch: DataFrame, batchId: Long,
-      cellsDir: String, c: EventCols = EventCols()): Unit = {
-    batch.filter(col(c.eventType).isNotNull)
+      cellsDir: String, c: EventCols = EventCols()): Unit =
+    BatchStore.append(batch.filter(col(c.eventType).isNotNull)
       .groupBy(col(c.entity), col(c.eventType))
-      .agg(count(lit(1)).as("__c"))
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
-  }
+      .agg(count(lit(1)).as("__c")), cellsDir, batchId)
 
   /** The published view over an [[eventTypeCellSink]] store: merged
     * (entity, type) counts through the batch W22 entropy finish
@@ -2457,24 +1985,14 @@ object StreamingEvents {
     * (spec-proven). This completes the drift-monitor family: every
     * D-family drift test now has a streaming twin. A declared column
     * missing from a batch fails loud (narrower cells would no longer
-    * merge). Replays overwrite their own batch directory:
-    * idempotent. */
+    * merge). */
   def nullRateCellSink(rows: DataFrame, cols: Seq[String],
-      cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      cellsDir: String, checkpointDir: String): StreamingQuery = {
     require(cols.nonEmpty && cols.distinct == cols,
       s"nullRateCellSink: need >= 1 distinct declared columns, got $cols")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) nullRateCellBatch(batch.toDF(), batchId,
-          cols, cellsDir)
-      }
-      .start()
+    startSink(rows, checkpointDir)(nullRateCellBatch(_, _, cols, cellsDir))
   }
 
-  /** One micro-batch of [[nullRateCellSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def nullRateCellBatch(batch: DataFrame, batchId: Long,
       cols: Seq[String], cellsDir: String): Unit = {
     for (c <- cols) require(batch.columns.contains(c),
@@ -2482,10 +2000,8 @@ object StreamingEvents {
     val (n, m) = graft.dq.Dq.nullCounts(batch, cols)
     val spark = batch.sparkSession
     import spark.implicits._
-    cols.map(c => (c, n, m(c))).toDF("column", "n", "nulls")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
+    BatchStore.append(cols.map(c => (c, n, m(c))).toDF("column", "n", "nulls")
+      .coalesce(1), cellsDir, batchId)
   }
 
   /** The published view over a [[nullRateCellSink]] directory: the D33
@@ -2552,22 +2068,14 @@ object StreamingEvents {
     * across micro-batches (same-timestamp ties must arrive in one
     * batch — the batch kernel breaks ties by value, which cross-batch
     * arrival order cannot reproduce); values on the DECIMAL(18,6)
-    * grid; NULL values drop exactly like the batch kernel. Replays
-    * overwrite their own batch directories and re-read only EARLIER
-    * batches' carries: idempotent. */
+    * grid; NULL values drop exactly like the batch kernel. A replay
+    * re-reads only EARLIER batches' carries. */
   def twaCellSink(events: DataFrame, keyCol: String, tsCol: String,
       valueCol: String, cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) twaCellBatch(batch.toDF(), batchId, keyCol,
-          tsCol, valueCol, cellsDir)
-      }
-      .start()
+      : StreamingQuery =
+    startSink(events, checkpointDir)(twaCellBatch(_, _,
+      keyCol, tsCol, valueCol, cellsDir))
 
-  /** One micro-batch of [[twaCellSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def twaCellBatch(batch: DataFrame, batchId: Long,
       keyCol: String, tsCol: String, valueCol: String,
       cellsDir: String): Unit = {
@@ -2601,10 +2109,8 @@ object StreamingEvents {
     // bridge segments: the latest EARLIER-batch carry per entity holds
     // to this batch's first event; strict cross-batch monotonicity is
     // the contract and fails loud here
-    val carryDir = new org.apache.hadoop.fs.Path(s"$cellsDir/carry")
-    val fs = carryDir.getFileSystem(spark.sessionState.newHadoopConf())
     val bridges =
-      if (!fs.exists(carryDir)) None
+      if (!BatchStore.exists(spark, s"$cellsDir/carry")) None
       else {
         val prev = spark.read.parquet(s"$cellsDir/carry")
           .filter(col("batch_id") < batchId)
@@ -2641,17 +2147,16 @@ object StreamingEvents {
     val eventCells = base
       .groupBy(col("__k"), floor(col("__t") / DAY).cast("long").as("__d"))
       .agg(count(lit(1)).as("n"))
-    eventCells.join(dayCells, Seq("__k", "__d"), "full_outer")
+    BatchStore.append(eventCells.join(dayCells, Seq("__k", "__d"), "full_outer")
       .select(col("__k"), col("__d"),
         coalesce(col("n"), lit(0L)).as("n"),
         coalesce(col("cov"), lit(0L)).as("cov"),
-        coalesce(col("int"), lit(0L).cast(D)).as("int"))
-      .write.mode("overwrite").parquet(s"$cellsDir/days/batch_id=$batchId")
+        coalesce(col("int"), lit(0L).cast(D)).as("int")),
+      s"$cellsDir/days", batchId)
     // the new open carry: this batch's last (ts, value) per entity
-    seq.filter(col("__next").isNull)
-      .select(col("__k"), col("__t").as("__ct"), col("__vu").as("__cv"))
-      .write.mode("overwrite").parquet(s"$cellsDir/carry/batch_id=$batchId")
-    ()
+    BatchStore.append(seq.filter(col("__next").isNull)
+      .select(col("__k"), col("__t").as("__ct"), col("__vu").as("__cv")),
+      s"$cellsDir/carry", batchId)
   }
 
   /** The published view over a [[twaCellSink]] store: the W21
@@ -2734,26 +2239,17 @@ object StreamingEvents {
     * incomplete blocks fail loud. A per-batch block-id ledger
     * (`<cellsDir>__blocks/batch_id=N`) makes CROSS-batch redelivery —
     * the same block arriving whole in two different micro-batches,
-    * invisible to every within-batch guard — fail loud in the view.
-    * Replays overwrite their own batch directory: idempotent. */
+    * invisible to every within-batch guard — fail loud in the view. */
   def friedmanSink(rows: DataFrame, blockCol: String, treatCol: String,
       valueCol: String, treatments: Seq[String], cellsDir: String,
-      checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointDir: String): StreamingQuery = {
     require(treatments.size >= 2 && treatments.distinct == treatments,
       s"friedmanSink: need >= 2 distinct declared treatments, " +
         s"got $treatments")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) friedmanBatch(batch.toDF(), batchId,
-          blockCol, treatCol, valueCol, treatments, cellsDir)
-      }
-      .start()
+    startSink(rows, checkpointDir)(friedmanBatch(_, _,
+      blockCol, treatCol, valueCol, treatments, cellsDir))
   }
 
-  /** One micro-batch of [[friedmanSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def friedmanBatch(batch: DataFrame, batchId: Long,
       blockCol: String, treatCol: String, valueCol: String,
       treatments: Seq[String], cellsDir: String): Unit = {
@@ -2778,12 +2274,11 @@ object StreamingEvents {
             "— a block must arrive whole (every declared treatment " +
             "in one micro-batch)")))
           .otherwise(col("__r2")).as("__r2"))
-    ranked.groupBy(col("__t"))
+    BatchStore.append(ranked.groupBy(col("__t"))
       .agg(count(lit(1)).as("__n"),
         sum(col("__r2").cast("decimal(38,0)")).as("__R2"),
         sum((col("__r2") * col("__r2")).cast("decimal(38,0)"))
-          .as("__sr2"))
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
+          .as("__sr2")), cellsDir, batchId)
     // cross-batch redelivery ledger: a block re-ingested WHOLE in a
     // LATER micro-batch (at-least-once upstream) passes every
     // within-batch guard yet double-counts __n/__R2/__sr2 on merge —
@@ -2796,10 +2291,9 @@ object StreamingEvents {
     // redelivery of those blocks under a fresh batch_id (checkpoint
     // reset) would trip the view's overlap guard forever even though
     // the cells merged exactly once
-    cells.select(col("__b").cast("string").as("__b")).distinct()
-      .write.mode("overwrite")
-      .parquet(s"${cellsDir}__blocks/batch_id=$batchId")
-    ()
+    BatchStore.append(
+      cells.select(col("__b").cast("string").as("__b")).distinct(),
+      s"${cellsDir}__blocks", batchId)
   }
 
   /** The published view over a [[friedmanSink]] directory: treatment-
@@ -2810,8 +2304,7 @@ object StreamingEvents {
       cellsDir: String, treatments: Seq[String]): DataFrame = {
     import spark.implicits._
     // cross-batch redelivery guard: the sink's per-batch block ledger
-    // (`<cellsDir>__blocks/batch_id=N`, replay-idempotent because a
-    // replay overwrites its own batch directory) is grouped by block
+    // (`<cellsDir>__blocks/batch_id=N`) is grouped by block
     // id — a block appearing under MORE than one batch_id means the
     // same block merged twice into the treatment cells, which the
     // within-batch guards cannot see. Bounded collect: limit(1).
@@ -2866,32 +2359,20 @@ object StreamingEvents {
     * [[graft.ml.RankTests.kendallTauFromCells]] verbatim (eager
     * cell-cap guard included) — equals the batch τ-b over everything
     * ingested (spec-proven). NULL x/y drop exactly like the batch
-    * operator. Replays overwrite their own batch directory:
-    * idempotent. */
+    * operator. */
   def kendallTauSink(rows: DataFrame, groupCol: String, xCol: String,
-      yCol: String, cellsDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) kendallTauBatch(batch.toDF(), batchId,
-          groupCol, xCol, yCol, cellsDir)
-      }
-      .start()
+      yCol: String, cellsDir: String, checkpointDir: String): StreamingQuery =
+    startSink(rows, checkpointDir)(kendallTauBatch(_, _,
+      groupCol, xCol, yCol, cellsDir))
 
-  /** One micro-batch of [[kendallTauSink]] — package-private so the
-    * parity spec can drive the identical code path directly. */
   private[graft] def kendallTauBatch(batch: DataFrame, batchId: Long,
       groupCol: String, xCol: String, yCol: String,
-      cellsDir: String): Unit = {
-    batch.filter(col(xCol).isNotNull && col(yCol).isNotNull)
+      cellsDir: String): Unit =
+    BatchStore.append(batch.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(groupCol).as("g"), col(xCol).as("x"),
         col(yCol).as("y"))
       .groupBy(col("g"), col("x"), col("y"))
-      .agg(count(lit(1)).as("c"))
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
-    ()
-  }
+      .agg(count(lit(1)).as("c")), cellsDir, batchId)
 
   /** The published view over a [[kendallTauSink]] directory: merged
     * cells through the batch τ-b finish verbatim. */

@@ -654,10 +654,9 @@ object Dedup {
     val ledger = dedupLedger(spark, indexDir)
     graft.store.BatchStore.compact(ledger, Seq(side),
         force = side.files > targetFiles) { case Seq(to) =>
-      ledger.minus(spark.read.parquet(indexDir).drop("batch_id"))
-        .distinct()
-        .repartition(targetFiles)
-        .write.mode("overwrite").parquet(side.batchDir(to))
+      graft.store.BatchStore.append(
+        ledger.minus(spark.read.parquet(indexDir).drop("batch_id"))
+          .distinct().repartition(targetFiles), indexDir, to)
     }.head
   }
 

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * constant data. This tool ingests the SAME corpus as B ∈ {1, …, max}
   * micro-batches through each store-backed sink's own batch kernel,
   * times the published view at every B (untimed warm-up +
-  * median-of-N, the Bench discipline), counts the store's files, and
+  * median-of-N, the Bench discipline), reads the store's batches and
+  * data files ([[graft.store.BatchStore.stats]]), and
   * FAILS — nonzero exit — when view time at max B exceeds `gate` ×
   * view time at B = 1. Where the store has a compaction operator the
   * post-compaction view is re-timed as the documented fix.
@@ -51,19 +52,6 @@ object StoreGate {
     spark.sparkContext.setLogLevel("WARN")
     import graft.streaming.StreamingEvents
 
-    def tmp(prefix: String): String =
-      java.nio.file.Files.createTempDirectory(prefix).toString
-
-    def fileCount(dir: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) return 0L
-      val it = fs.listFiles(p, true)
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      n
-    }
-
     def medianOf(thunk: () => Unit): Double = {
       thunk() // untimed warm-up (codegen, footer cache)
       val ts = (1 to repeats).map { _ =>
@@ -75,18 +63,18 @@ object StoreGate {
     }
 
     /** One store probe: build with B batches, return
-      * (ingest sec, view median sec, store file count, store dir). */
-    case class Probe(b: Int, ingest: Double, view: Double, files: Long,
-      dir: String)
+      * (ingest sec, view median sec, store state, store dir). */
+    case class Probe(b: Int, ingest: Double, view: Double,
+      store: graft.store.BatchStore.Stats, dir: String)
 
     def probe(build: (Int, String) => Unit, viewOf: String => DataFrame,
         b: Int, prefix: String): Probe = {
-      val dir = tmp(prefix)
+      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
       val t0 = System.nanoTime()
       build(b, dir)
       val ingest = (System.nanoTime() - t0) / 1e9
       val view = medianOf(() => { viewOf(dir).collect(); () })
-      Probe(b, ingest, view, fileCount(dir), dir)
+      Probe(b, ingest, view, graft.store.BatchStore.stats(spark, dir), dir)
     }
 
     val emb = graft.Tables.t(spark, sfDir, "embeddings")
@@ -156,14 +144,14 @@ object StoreGate {
 
     println(s"[storegate] stores ${wanted.mkString(",")}, gate $gate, " +
       s"repeats $repeats")
-    println("| store | B | ingest s | view s | files | note |")
-    println("|---|---|---|---|---|---|")
+    println("| store | B | ingest s | view s | batches | files | note |")
+    println("|---|---|---|---|---|---|---|")
     val results = wanted.map { name =>
       val (bs, build, view, compact) = builders(name)
       val probes = bs.map { b =>
         val p = probe(build, view, b, s"graft_sg_$name")
         println(f"| $name | ${p.b} | ${p.ingest}%.2f | ${p.view}%.2f | " +
-          f"${p.files} | |")
+          f"${p.store.batches} | ${p.store.files} | |")
         p
       }
       // compaction = the documented fix: re-time the max-B store's view
@@ -171,8 +159,9 @@ object StoreGate {
         val last = probes.last
         c(last.dir)
         val v = medianOf(() => { view(last.dir).collect(); () })
-        println(f"| $name | ${last.b} | — | $v%.2f | " +
-          f"${fileCount(last.dir)} | compacted |")
+        val st = graft.store.BatchStore.stats(spark, last.dir)
+        println(f"| $name | ${last.b} | — | $v%.2f | ${st.batches} | " +
+          f"${st.files} | compacted |")
         v
       }
       val ratio = probes.last.view / probes.head.view
@@ -181,7 +170,7 @@ object StoreGate {
     val failed = results.filter(_._4 > gate)
     val json = results.map { case (n, ps, c, r) =>
       val bjson = ps.map(p =>
-        f""""b${p.b}":{"ingest":${p.ingest}%.3f,"view":${p.view}%.3f,"files":${p.files}}""")
+        f""""b${p.b}":{"ingest":${p.ingest}%.3f,"view":${p.view}%.3f,"batches":${p.store.batches},"files":${p.store.files}}""")
         .mkString(",")
       val cj = c.map(v => f""","compacted_view":$v%.3f""").getOrElse("")
       f""""$n":{$bjson,"ratio":$r%.3f$cj,"ok":${r <= gate}}"""

@@ -71,6 +71,21 @@ class Scd2MergeSpec extends SparkSpec {
       .as[String].head() shouldBe "D"
   }
 
+  it should "fail loud on two different live rows of one entity in one batch" in {
+    // (1,a) and (1,b) would both be stored as entity 1, version 1
+    val probe = Seq((1, "a"), (1, "b"), (2, "c")).toDF("cid", "tier")
+    val e = the[Exception] thrownBy
+      Scd2Merge.merge(probe, None, cfg()).history.collect()
+    e.getMessage should include("has two different live rows in one batch")
+    val first = Scd2Merge.merge(base, None, cfg())
+    an[Exception] should be thrownBy Scd2Merge.merge(
+      Seq((1, "x", "NY"), (1, "y", "NY")).toDF("cid", "tier", "city"),
+      Some(first.history), cfg()).history.collect()
+    // exact duplicates stay legal
+    Scd2Merge.merge(Seq((1, "a"), (1, "a"), (2, "c")).toDF("cid", "tier"),
+      None, cfg()).history.count() shouldBe 2
+  }
+
   it should "detect deletes by absence on full loads" in {
     val first = Scd2Merge.merge(base, None, cfg())
     val full = base.filter(col("cid") =!= 4)

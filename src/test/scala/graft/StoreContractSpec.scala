@@ -275,4 +275,22 @@ class StoreContractSpec extends SparkSpec {
   "The k-NN store" should "keep the tombstone-ledger store contract" in {
     holdsContract(() => new KnnStore)
   }
+
+  "BatchStore.stats" should "count batches over all sides, data files and a pending ledger" in {
+    import graft.store.{BatchStore, Ledger}
+    val root =
+      java.nio.file.Files.createTempDirectory("graft_stats").toString
+    val rows = (1L to 6L).toDF("vec_id").repartition(2)
+    BatchStore.append(rows, s"$root/index", 0L)
+    BatchStore.append(rows, s"$root/index", 1L)
+    BatchStore.append(rows.coalesce(1), s"$root/edges", 1L)
+    val ledger = Ledger.within(spark, root, "vec_id")
+    ledger.write(ledger.keys(rows, "vec_id"), 2L)
+    // the ledger's own batch and files are not the store's
+    BatchStore.stats(spark, root) shouldBe BatchStore.Stats(2, 5L, true)
+    ledger.clear()
+    BatchStore.stats(spark, root) shouldBe BatchStore.Stats(2, 5L, false)
+    BatchStore.stats(spark, s"$root/edges") shouldBe
+      BatchStore.Stats(1, 1L, false)
+  }
 }
