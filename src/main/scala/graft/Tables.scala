@@ -15,8 +15,8 @@ object Tables {
     //    (PARQUET_TYPE_ILLEGAL); the legacy flag below reads it as long
     //    nanos, floor-divided here to micros — DuckDB's own truncation.
     //  - TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet (round 9+)
-    //    arrives as TIMESTAMP_NTZ, which refuses numeric casts
-    //    (window rangeBetween epoch arithmetic needs them); cast to
+    //    arrives as TIMESTAMP_NTZ, which refuses numeric casts (the
+    //    epoch-second frame keys of E10/W17 need them); cast to
     //    TIMESTAMP — exact under the pinned UTC session zone.
     if (df.schema.exists(f => f.name == "ts" && f.dataType ==
         org.apache.spark.sql.types.LongType))

@@ -3,6 +3,7 @@ package graft.events
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Derived-feature operators from the reference's feature catalogue
   * (reference: docs/feature_examples.md:1-125 — "Weekly average maximum
@@ -25,21 +26,30 @@ object EventFeatures {
     * that bucketed weekly aggregates cannot express — the standard
     * velocity/fraud-feature shape ("transactions in the last hour").
     *
-    * `rangeBetween` over epoch seconds: one shuffle keyed on the
-    * entity, each frame bounded by that entity's event density × window
-    * — never a whole-history scan per row. Ties (same entity + second)
-    * share one frame and therefore the same trailing values, so output
-    * is order-independent and deterministic. */
+    * Frames are over epoch seconds (`ts` cast to long): ties (same
+    * entity + second) share one frame and therefore the same trailing
+    * values, so output is order-independent and deterministic. Cost: one
+    * exchange keyed on the entity, an O(n log n) sort within partitions
+    * and an O(n) pass of the [[SlidingFrame]] kernel, whatever the
+    * events per frame. The sum is exact — each value is added as it
+    * enters the frame and subtracted as it leaves, in exact integer
+    * arithmetic — and is then rounded to 2 places; it is null when the
+    * frame holds no non-null value. Output: the input columns, then
+    * `n_trailing`, `sum_trailing`, `max_trailing`, with rows sorted by
+    * entity and time inside each partition. */
   def trailingWindow(events: DataFrame, windowSec: Long,
       c: EventCols = EventCols()): DataFrame = {
     require(windowSec > 0, s"windowSec must be positive, got $windowSec")
-    val w = Window.partitionBy(col(c.entity))
-      .orderBy(col(c.ts).cast("long"))
-      .rangeBetween(-windowSec, 0)
-    events
-      .withColumn("n_trailing", count(lit(1)).over(w))
-      .withColumn("sum_trailing", round(sum(col(c.value)).over(w), 2))
-      .withColumn("max_trailing", max(col(c.value)).over(w))
+    val vIx = events.schema.fieldIndex(c.value)
+    val vt = events.schema(vIx).dataType
+    SlidingFrame.run(events, c.entity, col(c.ts).cast("long"),
+        Seq(c.ts, c.id).filter(events.columns.contains).map(col),
+        windowSec, inclusive = true,
+        Seq(StructField("n_trailing", LongType, nullable = false),
+          StructField("sum_trailing", SlidingFrame.sumTypeOf(vt)),
+          StructField("max_trailing", vt)))(
+        () => new SlidingFrame.Trailing(vIx, vt))
+      .withColumn("sum_trailing", round(col("sum_trailing"), 2))
   }
 
   /** Weekly activity buckets per entity: event count and value sum per

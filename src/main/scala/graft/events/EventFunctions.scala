@@ -3,6 +3,7 @@ package graft.events
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField}
 
 /** Column-name binding for an EAVT event table.
   * Reference model: `Event(entity, eventType, ts, value, properties)`
@@ -470,36 +471,24 @@ object EventFunctions {
     * `(none)` — dropped conversions would silently understate
     * organic volume.
     *
-    * Shape: O(n) — no conversion×touch join: both candidate touches
-    * ride ONE entity-keyed RANGE window over unix seconds
-    * (`[-windowSec, -1]` — strictly-earlier-second semantics,
-    * mirrored by the oracle), as `min`/`max` of a (ts, id, type)
-    * struct, so each model is a running aggregate, not a pair
-    * enumeration. Value sums are DECIMAL-exact (E16 discipline).
-    * Output: (model, touch_type, n_conversions, attributed_value
-    * round-2) for model ∈ {first, last}. */
+    * Shape: no conversion×touch join. [[touchPicks]] walks each
+    * entity's events once with the [[SlidingFrame]] kernel over unix
+    * seconds, frame `[s - windowSec, s - 1]` (strictly-earlier-second
+    * semantics, mirrored by the oracle): the first and last touch of a
+    * conversion are the head and tail of the frame's touch queue under
+    * the (ts, id, type) order. Cost: one exchange keyed on the entity,
+    * an O(n log n) sort within partitions and an O(n) pass. Value sums
+    * are DECIMAL-exact (E16 discipline). Output: (model, touch_type,
+    * n_conversions, attributed_value round-2) for model ∈ {first, last}. */
   def touchAttribution(events: DataFrame, conversionType: String,
       touchTypes: Seq[String], windowSec: Long,
       c: EventCols = EventCols()): DataFrame = {
-    require(windowSec >= 1, s"windowSec must be >= 1, got $windowSec")
-    require(touchTypes.nonEmpty, "touchAttribution: no touch types")
-    require(!touchTypes.contains(conversionType),
-      "touchAttribution: the conversion type cannot also be a touch")
-    val w = Window.partitionBy(col(c.entity)).orderBy(col("__uts"))
-      .rangeBetween(-windowSec, -1)
-    val touch = when(col(c.eventType).isin(touchTypes: _*),
-      struct(col(c.ts), col(c.id), col(c.eventType).as("__tt")))
-    val conv = graft.util.Caches.persistTracked(events
-      .withColumn("__uts", unix_timestamp(col(c.ts)))
-      .withColumn("__first", min(touch).over(w))
-      .withColumn("__last", max(touch).over(w))
-      .filter(col(c.eventType) === conversionType)
-      .select(
-        col(c.value).cast("decimal(18,2)").as("__v"),
-        coalesce(col("__first").getField("__tt"), lit("(none)"))
-          .as("__ft"),
-        coalesce(col("__last").getField("__tt"), lit("(none)"))
-          .as("__lt")))
+    val conv = graft.util.Caches.persistTracked(
+      touchPicks(events, conversionType, touchTypes, windowSec, c)
+        .select(
+          col(c.value).cast("decimal(18,2)").as("__v"),
+          coalesce(col("__ft"), lit("(none)")).as("__ft"),
+          coalesce(col("__lt"), lit("(none)")).as("__lt")))
     def model(m: String, t: Column) = conv
       .groupBy(t.as("touch_type"))
       .agg(org.apache.spark.sql.functions.count(lit(1))
@@ -510,6 +499,27 @@ object EventFunctions {
         round(coalesce(col("__av").cast("double"), lit(0.0)), 2)
           .as("attributed_value"))
     model("first", col("__ft")).unionByName(model("last", col("__lt")))
+  }
+
+  /** W17's per-conversion stage: one row per conversion event — its
+    * entity, ts, id, type and value, then the first (`__ft`) and last
+    * (`__lt`) touch type in its frame, null when it has no touch. */
+  private[graft] def touchPicks(events: DataFrame, conversionType: String,
+      touchTypes: Seq[String], windowSec: Long,
+      c: EventCols = EventCols()): DataFrame = {
+    require(windowSec >= 1, s"windowSec must be >= 1, got $windowSec")
+    require(touchTypes.nonEmpty, "touchAttribution: no touch types")
+    require(!touchTypes.contains(conversionType),
+      "touchAttribution: the conversion type cannot also be a touch")
+    val touches = touchTypes.toSet
+    val in = events.select(col(c.entity), col(c.ts), col(c.id),
+      col(c.eventType), col(c.value))
+    val tIx = in.schema.fieldIndex(c.eventType)
+    val picks = Seq("__ft", "__lt").map(StructField(_, StringType))
+    SlidingFrame.run(in, c.entity, unix_timestamp(col(c.ts)),
+        Seq(col(c.ts), col(c.id), col(c.eventType)),
+        windowSec, inclusive = false, picks)(
+        () => new SlidingFrame.Touches(tIx, conversionType, touches))
   }
 
   /** W16: session LANDING → EXIT report — where sessions start, where

@@ -97,8 +97,12 @@ class Scd2Store(val spark: SparkSession, base: String) {
       else readHistory(table).map(Scd2Merge.snapshot)
     val delta = inSchemaOf(snap, Scd2Merge.delta(incoming, snap, cfg)).cache()
     try {
-      // 1. stage — current first: while it is staged, the load is undone
-      Scd2Merge.snapshot(snap.fold(delta)(_.unionByName(delta)))
+      // 1. stage — current first: while it is staged, the load is undone.
+      // A first load's snapshot reuses the cached delta's partitioning, so
+      // no AQE-coalesced exchange sizes its files: rebalance it like the
+      // delta write. Later loads' snapshot aggregate has its own exchange.
+      val current = Scd2Merge.snapshot(snap.fold(delta)(_.unionByName(delta)))
+      (if (snap.isEmpty) current.hint("rebalance") else current)
         .write.mode("overwrite").parquet(new Path(dir, StagedCurrent).toString)
       val obs = org.apache.spark.sql.Observation(s"scd2_${table}_${cfg.processId}")
       def branch(rectype: String) = count(when(col(RecType) === rectype, 1))

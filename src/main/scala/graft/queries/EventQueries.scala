@@ -404,8 +404,9 @@ object EventQueries {
     },
 
     // W17: first/last-touch conversion attribution — view/click within
-    // 24h strictly before each purchase (same-second excluded), O(n)
-    // range-window candidates, unattributed -> '(none)'.
+    // 24h strictly before each purchase (same-second excluded); one
+    // sliding-frame pass (O(n log n) sort + O(n) walk) picks both
+    // touches, unattributed -> '(none)'.
     "q_w17_attribution" -> { (s, dir) =>
       graft.events.EventFunctions.touchAttribution(
         t(s, dir, "events"), "purchase", Seq("view", "click"), 86400)

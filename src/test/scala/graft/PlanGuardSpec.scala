@@ -144,6 +144,42 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  it should "run E10 and W17's frames as one entity-keyed exchange under the sliding-frame kernel, with no window" in {
+    // the kernel's contract: one exchange keyed on the entity, a sort
+    // within partitions and one mapPartitions pass — a regression back to
+    // a range-frame window re-aggregates every frame as it slides
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.MapPartitionsExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.events.{EventFeatures, EventFunctions}
+    withStaticShufflePlans {
+      def ts(s: String) = java.sql.Timestamp.valueOf(s)
+      val ev = Seq(
+        (1L, 1L, "view", ts("2024-01-05 10:00:00"), 1.0),
+        (2L, 1L, "purchase", ts("2024-01-05 10:10:00"), 5.0),
+        (3L, 2L, "purchase", ts("2024-01-05 11:00:00"), 7.0))
+        .toDF("event_id", "user_id", "event_type", "ts", "value")
+      for (df <- Seq(EventFeatures.trailingWindow(ev, 3600),
+          EventFunctions.touchPicks(ev, "purchase", Seq("view"), 3600))) {
+        df.queryExecution.optimizedPlan
+          .collect { case w: WindowNode => w } shouldBe empty
+        val plan = df.queryExecution.executedPlan
+        val kernel = plan.collect { case m: MapPartitionsExec => m }
+        kernel should have size 1
+        val below = kernel.head.collect { case e: ShuffleExchangeExec => e }
+        below should have size 1
+        below.head.outputPartitioning match {
+          case HashPartitioning(Seq(a: AttributeReference), _) =>
+            a.name shouldBe "user_id"
+          case other => fail(s"kernel exchange is $other")
+        }
+        plan.collect { case e: ShuffleExchangeExec => e } should have size 1
+      }
+    }
+  }
+
   it should "probe the dedup index through broadcast joins with an unshuffled index side" in {
     // X20's contract: the corpus/index side is touched by pruned scans and
     // NEVER shuffled — the (small) batch is what broadcasts. A regression

@@ -39,6 +39,17 @@ class Scd2StoreSpec extends SparkSpec {
     hiddenDirs(s"$dir/t1") shouldBe empty
   }
 
+  it should "write a first load's current as one file, not one per shuffle partition" in {
+    val dir = Files.createTempDirectory("scd2first")
+    val was = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try new Scd2Store(spark, dir.toString).runLoad("t1",
+      (1 to 50).map(i => (i, s"v$i")).toDF("cid", "v"), cfg("p1"))
+    finally spark.conf.set("spark.sql.shuffle.partitions", was)
+    partFiles(dir.resolve("t1/current.parquet")) should have size 1
+    spark.read.parquet(s"$dir/t1/current.parquet").count() shouldBe 50
+  }
+
   private def hiddenDirs(table: String): Seq[String] =
     new java.io.File(table).listFiles().toSeq
       .filter(f => f.isDirectory && f.getName.startsWith(".")).map(_.getName)

@@ -4,7 +4,8 @@ import graft.streaming.StreamingEvents
 import graft.streaming.StreamingEvents.{EventIn, Latest}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{coalesce, col, count, date_format, explode, lit, sum, when}
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -2219,6 +2220,106 @@ class StreamingSpec extends SparkSpec {
       StreamingEvents.twaCellBatch(
         Seq((7L, ts("2024-01-06 00:00:00"), Some(1e13)))
           .toDF("k", "t", "v"), 9L, "k", "t", "v", s"$tmp/cells")
+    graft.util.Caches.releaseAll(spark)
+  }
+
+  /** Starts `sink` on a parquet file source and feeds it `batches`, each
+    * as one new file and one micro-batch, waiting for each with
+    * `processAllAvailable`. Every batch is staged outside the source
+    * directory and moved in, so the source never lists a half-written
+    * file. */
+  private def streamFiles(batches: Seq[DataFrame])(
+      sink: DataFrame => StreamingQuery): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val src = Files.createTempDirectory("graft_src")
+    val stage = Files.createTempDirectory("graft_stage")
+    def feed(df: DataFrame, i: Int): Unit = {
+      val out = stage.resolve(s"b$i")
+      df.coalesce(1).write.parquet(out.toString)
+      out.toFile.listFiles().filter(_.getName.startsWith("part-"))
+        .foreach(f => Files.move(f.toPath, src.resolve(s"b$i-${f.getName}"),
+          StandardCopyOption.ATOMIC_MOVE))
+    }
+    feed(batches.head, 0)
+    val q = sink(spark.readStream.schema(batches.head.schema)
+      .parquet(src.toString))
+    try {
+      q.processAllAvailable()
+      batches.zipWithIndex.tail.foreach { case (b, i) =>
+        feed(b, i)
+        q.processAllAvailable()
+      }
+      q.recentProgress.count(_.numInputRows > 0) shouldBe batches.size
+    } finally q.stop()
+  }
+
+  private def sorted(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  it should "stream the span sink from files: spans and index equal the batch operators over the union" in {
+    import graft.text.SubstringDedup
+    val tmp = java.nio.file.Files.createTempDirectory("graft_spansink").toString
+    val (s1, s2) = ("alpha beta gamma delta epsilon zeta eta theta",
+      "one two three four five six seven eight nine")
+    // batch 1 shares nothing inside itself; each batch-2 doc shares a
+    // span with one batch-1 doc and none with the other batch-2 doc
+    val b1 = Seq((1L, s"a1 $s1 a2"), (2L, s"b1 b2 $s2"))
+    val b2 = Seq((3L, s"c1 c2 $s1"), (4L, s"$s2 d1"))
+    streamFiles(Seq(b1.toDF("doc_id", "text"), b2.toDF("doc_id", "text"))) {
+      docs => StreamingEvents.spanDedupSink(docs, "doc_id", "text",
+        s"$tmp/index", s"$tmp/spans", s"$tmp/ckpt")
+    }
+    val union = (b1 ++ b2).toDF("doc_id", "text")
+    val spanCols = Seq("doc_id", "span_start", "span_end", "span_tokens")
+    val spans = sorted(spark.read.parquet(s"$tmp/spans")
+      .select(spanCols.map(col): _*))
+    // the sink reports a batch's spans against earlier batches: over
+    // this input, the union's duplicated spans of the batch-2 docs
+    spans shouldBe sorted(SubstringDedup.duplicatedSpans(union, "doc_id",
+      "text", 8).filter(col("doc_id") >= 3).select(spanCols.map(col): _*))
+    spans should have size 2
+    sorted(spark.read.parquet(s"$tmp/index").select("doc_id", "pos", "fp")) shouldBe
+      sorted(SubstringDedup.buildSpanIndex(union, "doc_id", "text", 8))
+    graft.util.Caches.releaseAll(spark)
+  }
+
+  it should "stream the line sink from files: deduped docs equal the one-pass operator over the union" in {
+    import graft.text.Dedup
+    val tmp = java.nio.file.Files.createTempDirectory("graft_linesink").toString
+    val b1 = Seq(1L -> "nav\nshared footer\n\none", 2L -> "shared footer\ntwo")
+    val b2 = Seq(3L -> "nav\nthree\nshared footer", 4L -> "four\nthree")
+    streamFiles(Seq(b1.toDF("doc_id", "text"), b2.toDF("doc_id", "text"))) {
+      docs => StreamingEvents.lineDedupSink(docs, "doc_id", "text",
+        s"$tmp/index", s"$tmp/out", s"$tmp/ckpt")
+    }
+    val cols = Seq("doc_id", "n_lines", "n_kept", "dedup_text").map(col)
+    val out = sorted(spark.read.parquet(s"$tmp/out").select(cols: _*))
+    out shouldBe sorted(Dedup.lineDeduplicate((b1 ++ b2).toDF("doc_id",
+      "text"), "doc_id", "text").select(cols: _*))
+    out should have size 4
+    // one claimant per distinct line across both batches
+    val idx = spark.read.parquet(s"$tmp/index").select("h")
+    idx.count() shouldBe idx.distinct().count()
+  }
+
+  it should "stream the IVF sink from files: the index equals a batch build over the union" in {
+    import graft.ann.Similarity
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivfsink").toString
+    val vecs = (1L to 30L).map(i =>
+      (i, Array.tabulate(8)(j => ((i * 7 + j * 3) % 11).toDouble)))
+    val cents = vecs.filter(_._1 % 10 == 0).toDF("vec_id", "embedding")
+    val (b1, b2) = vecs.partition(_._1 <= 14)
+    streamFiles(Seq(b1.toDF("vec_id", "embedding"),
+        b2.toDF("vec_id", "embedding"))) {
+      embs => StreamingEvents.ivfIndexSink(embs, "vec_id", "embedding",
+        cents, 8, s"$tmp/idx", s"$tmp/ckpt")
+    }
+    val streamed = spark.read.parquet(s"$tmp/idx")
+    streamed.select("batch_id").distinct().count() shouldBe 2
+    val cols = Seq("vec_id", "centroid_id", "embedding").map(col)
+    sorted(streamed.select(cols: _*)) shouldBe sorted(Similarity
+      .buildIvfIndex(vecs.toDF("vec_id", "embedding"), "vec_id",
+        "embedding", cents, 8).select(cols: _*))
     graft.util.Caches.releaseAll(spark)
   }
 }
