@@ -7,7 +7,10 @@ import org.apache.spark.sql.execution.FormattedMode
   * optimization-round evidence trail (plans/rNN/<query>_{before,after}.txt).
   *
   * Usage: `runMain graft.PlanDump <sfDir> <outDir> <suffix> [queryName...]`
-  * (no names ⇒ every query). Writes `<outDir>/<query>_<suffix>.txt`.
+  * (no names ⇒ every query). Writes `<outDir>/<query>_<suffix>.txt`,
+  * whose first line is `git rev-parse HEAD` of the working directory,
+  * followed by `git status --short` of the `src/main` files that differ
+  * from it, if any — so a file names the code it came from.
   *
   * AQE is disabled for the dump so the file shows the final codegen'd
   * shape (join strategy, Exchange count, PushedFilters) rather than an
@@ -34,12 +37,15 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    import scala.sys.process._
+    val stamp = Seq("git", "rev-parse", "HEAD").!! + Seq("git", "status",
+      "--short", "--untracked-files=no", "--", "src/main").!!
     for (name <- names) {
       try {
         val plan = SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.explainString(FormattedMode)
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
+          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), stamp + plan)
         println(s"[plandump] wrote $name")
       } catch {
         case e: Exception =>

@@ -45,30 +45,20 @@ object FeaturePrep {
     * matched — per feature, all columns come from the SAME matched row
     * ([[graft.relational.Joins.asOfJoin]]'s struct-payload contract).
     *
-    * Scale shape: a fold of N as-of joins, each ONE shuffle keyed on
-    * the entity (the union+window form — zero pair explosion); the
-    * label table stays the spine, so row count never grows. Feature
-    * tables must be unique per (keys, ts) — pre-aggregate upstream or
-    * set `checkUnique`. */
+    * Scale shape: one [[graft.relational.Joins.asOfTables]] pass for
+    * all N tables — ONE shuffle keyed on the entity and one window over
+    * labels ∪ every feature table (zero pair explosion); the label table
+    * stays the spine, so row count never grows. Feature tables must be
+    * unique per (keys, ts) — pre-aggregate upstream or set
+    * `checkUnique`, which checks every table in one aggregate. */
   def pointInTimeMatrix(labels: DataFrame, keys: Seq[String],
       labelTs: String, features: Seq[(String, DataFrame, String)],
       toleranceSec: Option[Long] = None,
-      checkUnique: Boolean = false): DataFrame = {
-    require(features.nonEmpty, "pointInTimeMatrix needs >= 1 feature table")
-    val prefixes = features.map(_._1)
-    require(prefixes.distinct.size == prefixes.size,
-      s"duplicate feature prefixes: ${prefixes.mkString(", ")}")
-    features.foldLeft(labels) { case (acc, (prefix, feat, ftsCol)) =>
-      val valCols = feat.columns.filterNot(keys.contains)
-        .filterNot(_ == ftsCol).toSeq
-      val renamed = valCols.foldLeft(feat) { (d, c) =>
-        d.withColumnRenamed(c, s"${prefix}_$c")
-      }
-      graft.relational.Joins.asOfJoin(acc, renamed, keys, labelTs,
-          ftsCol, toleranceSec, checkUnique)
-        .withColumnRenamed("asof_ts", s"${prefix}_asof_ts")
-    }
-  }
+      checkUnique: Boolean = false): DataFrame =
+    graft.relational.Joins.asOfTables("pointInTimeMatrix", labels, keys,
+      labelTs, features.map { case (prefix, feat, ftsCol) =>
+        graft.relational.Joins.AsOfSide(prefix, feat, ftsCol, s"${prefix}_")
+      }, toleranceSec, checkUnique)
 
   /** F45: STANDARD SCALER — the fit/transform pair done as honest
     * relational operators: [[standardScalerFit]] computes per-feature

@@ -43,13 +43,11 @@ object Joins {
     * no native form; the naive encodings are a range join (O(n·m)
     * nested-loop pair space) or a per-row subquery.
     *
-    * This is the UNION + WINDOW form: both sides are tagged and unioned,
-    * and each right payload column is carried forward by
-    * `last(_, ignoreNulls)` over (key ORDER BY ts, side) — ONE shuffle
-    * keyed on the join key, zero pair explosion, linear in rows. At
-    * equal timestamps the right row sorts first and is therefore
-    * visible to the left row (the `>=` convention, matching DuckDB's
-    * native ASOF JOIN, which is the oracle).
+    * This is the one-table case of the [[asOfTables]] kernel: ONE
+    * shuffle keyed on the join key, zero pair explosion, linear in rows.
+    * At equal timestamps the right row is visible to the left row (the
+    * `>=` convention, matching DuckDB's native ASOF JOIN, which is the
+    * oracle).
     *
     * Output: every left column, then each right value column, then
     * `asof_ts` (the matched right timestamp) — all NULL when no right
@@ -59,126 +57,147 @@ object Joins {
     * pre-aggregate otherwise (equal-key-and-ts right rows have no
     * deterministic winner); pass `checkUnique = true` to enforce that
     * precondition with one extra aggregate pass that fails loud naming
-    * the duplicated (keys, ts) groups. Left/right non-key column names
-    * must not collide. */
+    * the duplicated (keys, ts) groups. Output column names must not
+    * collide. */
   def asOfJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
       leftTs: String, rightTs: String,
       toleranceSec: Option[Long] = None,
-      checkUnique: Boolean = false): DataFrame = {
+      checkUnique: Boolean = false): DataFrame =
+    asOfTables("asOfJoin", left, keys, leftTs,
+      Seq(AsOfSide("right", right, rightTs, "")), toleranceSec, checkUnique)
+
+  /** One feature table of [[asOfTables]]: `name` labels it in errors;
+    * its value columns (every column but the keys and `ts`) come out as
+    * `<prefix><col>`, beside `<prefix>asof_ts`. */
+  private[graft] case class AsOfSide(name: String, table: DataFrame,
+      ts: String, prefix: String)
+
+  /** The as-of kernel behind [[asOfJoin]], [[pointInTimeTrainingSet]] and
+    * `FeaturePrep.pointInTimeMatrix`: the labels and every feature table
+    * are tagged and unioned, then ONE exchange and sort on the keys,
+    * ordered by (ts, side), feed ONE window that carries
+    * `last(payload_i, ignoreNulls)` for each table i. A table's payload is
+    * a struct of its value columns and its own timestamp, non-null only
+    * on that table's rows, so:
+    *  - the order of different tables' rows at one timestamp is
+    *    irrelevant, and a table row sorts before a label at the same
+    *    timestamp (the `>=` convention);
+    *  - a NULL inside the matched row stays NULL instead of being
+    *    backfilled from an older row, every column of one table comes
+    *    from the SAME row, and tolerance judges the timestamp of that row.
+    *
+    * NULL join keys never match (equi-join and DuckDB ASOF semantics),
+    * so null-key table rows are dropped, as are NULL-timestamp table
+    * rows: they would sort FIRST and be carried into labels that have no
+    * real preceding row. Labels are never dropped. Output: keys, the
+    * label timestamp (as a timestamp), the other label columns, then per
+    * table its value columns and its matched timestamp. Every output name
+    * must be unique (so duplicate prefixes fail too) and none may be a
+    * scratch name; a clash fails loud before any plan is built, naming
+    * the column and its owners. */
+  private[graft] def asOfTables(who: String, labels: DataFrame,
+      keys: Seq[String], labelTs: String, sides: Seq[AsOfSide],
+      toleranceSec: Option[Long], checkUnique: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
-    require(keys.nonEmpty, "asOfJoin needs at least one join key")
-    val leftOther = left.columns.filterNot(keys.contains)
-      .filterNot(_ == leftTs).toSeq
-    val rightVals = right.columns.filterNot(keys.contains)
-      .filterNot(_ == rightTs).toSeq
-    val reserved = Set("asof_ts", "__ts", "__side", "__rp")
-    val collide = (leftOther.toSet & rightVals.toSet) ++
-      ((left.columns.toSet ++ right.columns.toSet) & reserved) ++
-      (rightVals.toSet & Set(leftTs))
-    require(collide.isEmpty,
-      s"asOfJoin column collision: ${collide.mkString(", ")} — rename " +
-        "(asof_ts/__ts/__side/__rp are reserved output/scratch names)")
-    // the right payload travels as ONE nullable struct (its own matched
-    // timestamp inside): last(_, ignoreNulls) then carries forward the
-    // ENTIRE matched row — a genuine NULL inside the matched row stays
-    // NULL instead of being backfilled from an older row, every output
-    // column comes from the SAME right row, and tolerance judges the
-    // timestamp of the row the values actually came from
-    val payloadType = StructType(
-      rightVals.map(c => StructField(c, right.schema(c).dataType)) :+
-        StructField("__rts", TimestampType))
-    val l = left.select(
-      (keys.map(col) :+ col(leftTs).cast("timestamp").as("__ts") :+
-        lit(1).as("__side") :+ lit(null).cast(payloadType).as("__rp")) ++
-        leftOther.map(col): _*)
-    val rightLive = right
-      // NULL join keys never match in an equi-join (and in the DuckDB
-      // ASOF oracle) — drop null-key RIGHT rows so the window's
-      // null-groups-together partitioning cannot manufacture matches;
-      // null-key LEFT rows keep left-join semantics (they land in a
-      // partition with no right rows → null match). A NULL right
-      // TIMESTAMP must go too: it casts to NULL __ts, sorts FIRST in
-      // the ascending (ts, side) window, and last(ignoreNulls) would
-      // then carry its payload into left rows that have no real
-      // preceding right row (DuckDB's l.ts >= r.ts never matches NULL).
-      .filter((keys.map(col(_).isNotNull) :+
-        col(rightTs).cast("timestamp").isNotNull).reduce(_ && _))
-    if (checkUnique) {
-      // one aggregate over the live right side; only runs on request —
-      // the count is an extra job, so the default stays zero-cost
-      val dups = rightLive.groupBy(keys.map(col) :+
-          col(rightTs).cast("timestamp").as("__ts"): _*)
-        .count().filter(col("count") > 1)
-        .limit(5).collect()
-      require(dups.isEmpty,
-        "asOfJoin: right side has duplicate (keys, ts) groups — no " +
-          "deterministic winner; pre-aggregate first. First offenders: " +
-          dups.map(_.toSeq.mkString("(", ",", ")")).mkString("; "))
+    require(keys.nonEmpty, s"$who needs at least one join key")
+    require(sides.nonEmpty, s"$who: no feature tables")
+    val vals = sides.map(s =>
+      s.table.columns.toSeq.filterNot(c => keys.contains(c) || c == s.ts))
+    val outs = sides.zip(vals).map { case (s, v) =>
+      (v :+ "asof_ts").map(s.prefix + _) }
+    val rp = sides.indices.map(i => s"__rp$i")
+    val reserved = Set("__ts", "__side") ++ rp
+    val owners = labels.columns.toSeq.map(_ -> "labels") ++
+      sides.zip(outs).flatMap { case (s, o) => o.map(_ -> s.name) }
+    val clashes = owners.groupBy(_._1).toSeq.sortBy(_._1).collect {
+      case (c, os) if os.size > 1 || reserved(c) =>
+        s"$c (${os.map(_._2).mkString(", ")})"
     }
-    val r = rightLive
-      .select(
-        (keys.map(col) :+ col(rightTs).cast("timestamp").as("__ts") :+
-          lit(0).as("__side") :+
-          struct(rightVals.map(col) :+
-            col(rightTs).cast("timestamp").as("__rts"): _*).as("__rp")) ++
-          leftOther.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
+    require(clashes.isEmpty, s"$who column collision: " +
+      clashes.mkString("; ") + s" — rename (${reserved.mkString("/")} " +
+      "are scratch names)")
+    val leftOther = labels.columns.toSeq.filterNot(c =>
+      keys.contains(c) || c == labelTs)
+    // payload fields are positional (v0, v1, …, ts), so no value column
+    // name can clash inside the struct
+    val fields = vals.map(v => v.indices.map(j => s"v$j") :+ "ts")
+    val payload = sides.indices.map(i => StructType(fields(i).zip(
+      vals(i).map(sides(i).table.schema(_).dataType) :+ TimestampType)
+      .map { case (f, t) => StructField(f, t) }))
+    def nullPayload(i: Int) = lit(null).cast(payload(i)).as(rp(i))
+    val l = labels.select(
+      (keys.map(col) :+ col(labelTs).cast("timestamp").as("__ts") :+
+        lit(1).as("__side")) ++ rp.indices.map(nullPayload) ++
+        leftOther.map(col): _*)
+    val rs = sides.zipWithIndex.map { case (s, i) =>
+      val ts = col(s.ts).cast("timestamp")
+      val mine = struct((vals(i).map(col) :+ ts).zip(fields(i))
+        .map { case (c, f) => c.as(f) }: _*).as(rp(i))
+      s.table.filter((keys.map(col(_).isNotNull) :+ ts.isNotNull).reduce(_ && _))
+        .select((keys.map(col) :+ ts.as("__ts") :+ lit(0).as("__side")) ++
+          rp.indices.map(j => if (j == i) mine else nullPayload(j)) ++
+          leftOther.map(c => lit(null).cast(labels.schema(c).dataType).as(c)): _*)
+    }
+    if (checkUnique) {
+      // one aggregate over every table's rows, tagged by position; only
+      // runs on request — the count is an extra job
+      val dups = rs.zipWithIndex
+        .map { case (r, i) => r.select(lit(i).as("__t") +: (keys :+ "__ts").map(col): _*) }
+        .reduce(_ unionByName _)
+        .groupBy(("__t" +: keys :+ "__ts").map(col): _*)
+        .count().filter(col("count") > 1).limit(5).collect()
+      require(dups.isEmpty,
+        s"$who: duplicate (keys, ts) groups — no deterministic winner; " +
+          "pre-aggregate first. First offenders: " + dups.map(r =>
+            sides(r.getInt(0)).name + r.toSeq.tail.mkString(" (", ",", ")"))
+            .mkString("; "))
+    }
+    val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__ts"), col("__side"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    val carried = l.unionByName(r)
-      .withColumn("__rp", last(col("__rp"), ignoreNulls = true).over(w))
-    val stale = toleranceSec.map(t =>
-      col("__rp.__rts") < col("__ts") - expr(s"INTERVAL $t SECONDS"))
-      .getOrElse(lit(false))
-    val keep = when(stale, lit(null).cast(payloadType)).otherwise(col("__rp"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val carried = (l +: rs).reduce(_ unionByName _).withColumns(
+      rp.map(p => p -> last(col(p), ignoreNulls = true).over(w)).toMap)
+    val features = sides.indices.flatMap { i =>
+      val stale = toleranceSec.map(t => col(rp(i)).getField("ts") <
+        col("__ts") - expr(s"INTERVAL $t SECONDS")).getOrElse(lit(false))
+      val keep = when(stale, lit(null).cast(payload(i))).otherwise(col(rp(i)))
+      fields(i).zip(outs(i)).map { case (f, c) => keep.getField(f).as(c) }
+    }
     carried.filter(col("__side") === 1)
-      .select((keys.map(col) :+ col("__ts").as(leftTs)) ++
-        leftOther.map(col) ++
-        rightVals.map(c => keep.getField(c).as(c)) :+
-        keep.getField("__rts").as("asof_ts"): _*)
+      .select((keys.map(col) :+ col("__ts").as(labelTs)) ++
+        leftOther.map(col) ++ features: _*)
   }
 
   /** F24: POINT-IN-TIME TRAINING SET — the feature-store flagship: a
     * label table (entity, label ts) picks up, from EVERY feature
-    * table, the latest feature row at or before the label timestamp —
-    * one [[asOfJoin]] per feature table, folded left. This is the
-    * operation that makes offline training sets leakage-free by
-    * construction: a feature row with ts AFTER the label can never be
-    * selected (the as-of window only looks backward), and
-    * `toleranceSec` additionally voids features staler than the
-    * horizon, so silently-dead feature pipelines surface as NULLs
-    * instead of stale values.
+    * table, the latest feature row at or before the label timestamp.
+    * This is the operation that makes offline training sets
+    * leakage-free by construction: a feature row with ts AFTER the
+    * label can never be selected (the as-of window only looks
+    * backward), and `toleranceSec` additionally voids features staler
+    * than the horizon, so silently-dead feature pipelines surface as
+    * NULLs instead of stale values.
     *
     * Column hygiene: every feature table's value columns (and its
     * `asof_ts`) are prefixed `<name>_`, so any number of single-column
     * or wide feature tables compose without collisions; duplicate
-    * prefixes fail loud.
+    * prefixes, and prefixed names that clash with a label column, fail
+    * loud.
     *
-    * Scale: k as-of joins, each ONE entity-keyed exchange of
-    * labels ∪ that feature table (the [[asOfJoin]] union-window shape
-    * — never a per-label range probe); feature tables are touched
-    * once each. */
+    * Scale: one [[asOfTables]] pass for all k tables — ONE entity-keyed
+    * exchange and sort of labels ∪ every feature table, and one window
+    * (never a per-label range probe, never a re-shuffle of the labels
+    * per table); feature tables are touched once each. */
   def pointInTimeTrainingSet(labels: DataFrame,
       features: Seq[(String, DataFrame)], keys: Seq[String],
       labelTs: String, featureTs: String,
       toleranceSec: Option[Long] = None): DataFrame = {
-    require(features.nonEmpty, "pointInTimeTrainingSet: no feature tables")
-    val names = features.map(_._1)
-    require(names.distinct.size == names.size,
-      s"pointInTimeTrainingSet: duplicate feature prefixes " +
-        s"${names.diff(names.distinct).distinct.mkString(", ")}")
-    names.foreach(n => require(n.nonEmpty,
+    features.foreach(f => require(f._1.nonEmpty,
       "pointInTimeTrainingSet: empty feature prefix"))
-    features.foldLeft(labels) { case (acc, (prefix, ft)) =>
-      val renamed = ft.columns.foldLeft(ft) { (d, c) =>
-        if (keys.contains(c) || c == featureTs) d
-        else d.withColumnRenamed(c, s"${prefix}_$c")
-      }
-      asOfJoin(acc, renamed, keys, labelTs, featureTs, toleranceSec)
-        .withColumnRenamed("asof_ts", s"${prefix}_asof_ts")
-    }
+    asOfTables("pointInTimeTrainingSet", labels, keys, labelTs,
+      features.map { case (n, df) => AsOfSide(n, df, featureTs, s"${n}_") },
+      toleranceSec, checkUnique = false)
   }
 
   /** Write both sides bucketed on the join key so subsequent joins are

@@ -99,6 +99,36 @@ class JoinsSpec extends SparkSpec {
     graft.util.Caches.releaseAll(spark)
   }
 
+  it should "fail loud, naming the clash, when an output name is already a label column" in {
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val labels = Seq((1L, ts("2024-01-10 00:00:00"), "x"))
+      .toDF("user", "ts", "f_asof_ts")
+    val f = Seq((1L, ts("2024-01-09 00:00:00"), 1.0)).toDF("user", "ts", "v")
+    val g = Seq((1L, ts("2024-01-08 00:00:00"), 2L)).toDF("user", "ts", "n")
+    val f24 = intercept[IllegalArgumentException] {
+      Joins.pointInTimeTrainingSet(labels, Seq("f" -> f, "g" -> g),
+        Seq("user"), "ts", "ts")
+    }
+    f24.getMessage should include("f_asof_ts (labels, f)")
+    val f14 = intercept[IllegalArgumentException] {
+      graft.ml.FeaturePrep.pointInTimeMatrix(labels, Seq("user"), "ts",
+        Seq(("f", f, "ts"), ("g", g, "ts")))
+    }
+    f14.getMessage should include("f_asof_ts (labels, f)")
+    // a prefixed value column on a label name, one name from two tables,
+    // and a value column named like its own table's matched time
+    def one(v: String) = Seq((1L, ts("2024-01-07 00:00:00"), 3L))
+      .toDF("user", "ts", v)
+    val e = intercept[IllegalArgumentException] {
+      Joins.pointInTimeTrainingSet(labels.withColumnRenamed("f_asof_ts", "g_n"),
+        Seq("g" -> g, "a" -> one("b_x"), "a_b" -> one("x"), "c" -> one("asof_ts")),
+        Seq("user"), "ts", "ts")
+    }
+    e.getMessage should include("g_n (labels, g)")
+    e.getMessage should include("a_b_x (a, a_b)")
+    e.getMessage should include("c_asof_ts (c, c)")
+  }
+
   it should "never manufacture a match from a NULL right timestamp" in {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // a right row with a NULL ts sorts FIRST in the ascending window; if
@@ -225,6 +255,24 @@ class JoinsSpec extends SparkSpec {
     val m = graft.ml.FeaturePrep.pointInTimeMatrix(labels,
       Seq("user_id"), "ts", Seq(("x", f, "ts")))
     m.select(col("x_v")).collect().head.isNullAt(0) shouldBe true
+  }
+
+  it should "check every table's (keys, ts) uniqueness at once and name the offending table" in {
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    val labels = Seq((1L, ts("2024-01-10 00:00:00"))).toDF("user_id", "ts")
+    val a = Seq((1L, ts("2024-01-09 00:00:00"), 7.0),
+      (1L, ts("2024-01-08 00:00:00"), 6.0)).toDF("user_id", "ts", "v")
+    val b = Seq((1L, ts("2024-01-05 00:00:00"), 3L),
+      (1L, ts("2024-01-05 00:00:00"), 4L)).toDF("user_id", "at", "n")
+    val e = intercept[IllegalArgumentException] {
+      graft.ml.FeaturePrep.pointInTimeMatrix(labels, Seq("user_id"), "ts",
+        Seq(("a", a, "ts"), ("b", b, "at")), checkUnique = true)
+    }
+    e.getMessage should include("duplicate")
+    e.getMessage should include("First offenders: b (1,2024-01-05 00:00:00")
+    graft.ml.FeaturePrep.pointInTimeMatrix(labels, Seq("user_id"), "ts",
+        Seq(("a", a, "ts"), ("b", b.limit(1), "at")), checkUnique = true)
+      .select("a_v", "b_n").as[(Double, Long)].head() shouldBe ((7.0, 3L))
   }
 
   behavior of "Associations.basketRules (X92)"

@@ -1,8 +1,9 @@
 package graft
 
 import graft.events.{EventFeatures, EventFunctions}
+import graft.relational.Joins
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, timestamp_micros}
+import org.apache.spark.sql.functions.{col, count, lit, max, timestamp_micros}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -13,9 +14,11 @@ import org.scalacheck.rng.Seed
   * content of every result must hash the same.
   *
   * Operators: the three feature_build writes (`sessionStats`,
-  * `trailingWindow`, `snapshot`) and `touchAttribution`. Events come from
-  * fixed seeds: Zipf-skewed users, bursts of events in one second,
-  * sub-second timestamps and null values. */
+  * `trailingWindow`, `snapshot`), its read (`pointInTimeTrainingSet`:
+  * purchase labels against per-second view, click and cart tables) and
+  * `touchAttribution`. Events come from fixed seeds: Zipf-skewed users,
+  * bursts of events in one second, sub-second timestamps and null
+  * values. */
 class PartitionInvarianceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -50,6 +53,16 @@ class PartitionInvarianceSpec extends SparkSpec {
     "sessionStats" -> (EventFunctions.sessionStats(_, 1800L)),
     "trailingWindow" -> (EventFeatures.trailingWindow(_, 3600L)),
     "snapshot" -> (EventFunctions.snapshot(_, "2024-01-02 00:00:00", Types)),
+    "pointInTimeTrainingSet" -> { ev =>
+      def perSecond(t: String) = ev.filter(col("event_type") === t)
+        .groupBy(col("user_id"), col("ts"))
+        .agg(count(lit(1)).as("n"), max(col("value")).as("v"))
+      Joins.pointInTimeTrainingSet(
+        ev.filter(col("event_type") === "purchase")
+          .select(col("user_id"), col("ts"), col("event_id")),
+        Seq("view", "click", "cart").map(t => t -> perSecond(t)),
+        Seq("user_id"), "ts", "ts", toleranceSec = Some(3600L))
+    },
     "touchAttribution" -> (EventFunctions.touchAttribution(_, "purchase",
       Seq("view", "click"), 3600L)))
 

@@ -180,6 +180,44 @@ class PlanGuardSpec extends SparkSpec {
     }
   }
 
+  it should "assemble a three-table point-in-time training set with one keyed exchange and one window" in {
+    // the as-of kernel's contract: labels and every feature table meet in
+    // one union, one exchange keyed on the join keys and one window; the
+    // per-table fold it replaced stacked an exchange and a window per table
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => WindowNode}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.relational.Joins
+    withStaticShufflePlans {
+      def ts(s: String) = java.sql.Timestamp.valueOf(s)
+      val labels = Seq((1L, "a", ts("2024-01-10 00:00:00"), 10L))
+        .toDF("user", "shop", "ts", "label_id")
+      def table(v: String) = Seq((1L, "a", ts("2024-01-09 00:00:00"), 1.0))
+        .toDF("user", "shop", "ts", v)
+      val features = Seq("f" -> table("x"), "g" -> table("y"), "h" -> table("z"))
+      val df = Joins.pointInTimeTrainingSet(labels, features,
+        Seq("user", "shop"), "ts", "ts")
+      df.queryExecution.optimizedPlan
+        .collect { case w: WindowNode => w } should have size 1
+      val plan = df.queryExecution.executedPlan
+      plan.collect { case w: WindowExec => w } should have size 1
+      val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+      exchanges should have size 1
+      exchanges.head.outputPartitioning match {
+        case HashPartitioning(keys, _) =>
+          keys.map { case a: AttributeReference => a.name } shouldBe
+            Seq("user", "shop")
+        case other => fail(s"kernel exchange is $other")
+      }
+      // checkUnique over every table is one aggregate job
+      jobsDuring(graft.ml.FeaturePrep.pointInTimeMatrix(labels,
+        Seq("user", "shop"), "ts", features.map { case (n, t) => (n, t, "ts") },
+        checkUnique = true)) shouldBe 1
+    }
+  }
+
   it should "probe the dedup index through broadcast joins with an unshuffled index side" in {
     // X20's contract: the corpus/index side is touched by pruned scans and
     // NEVER shuffled — the (small) batch is what broadcasts. A regression
