@@ -1,69 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    // local profiling hook: SPARK_GRAFT_CONF="k=v;k=v" overlays extra
-    // session confs for config A/B experiments; unset (the driver's
-    // case) it is a no-op, so the measured contract is unchanged. The
-    // overlay (or its absence) is recorded in the emitted JSON so an
-    // overlaid run can never masquerade as a default-config board.
-    val confOverlay = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-    if (confOverlay.nonEmpty) confOverlay.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => builder.config(k.trim, v.trim)
-        case _ => sys.error(s"SPARK_GRAFT_CONF: malformed segment " +
-          s"'$kv' — expected key=value")
-      }
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Deterministic order (Map hash order varies across builds), with the
-    // known-heavy text/ANN/graph/merge queries LAST: their GC + shuffle
-    // residue previously inflated the small queries that happened to hash
-    // after them, drifting round-over-round comparisons.
-    val heavy = Set("q_x2_minhash_lsh", "q_x4_jaccard_pairs",
-      "q_x10_embedding_neardup", "q_x9_ann_ivf", "q_x8_ann_bruteforce",
-      "q_g1_connected_components", "q_g2_resolve_ids", "q_w9_paths",
-      "q_c2_satellite_merge_iud", "q_c7_current_snapshot",
-      "q_c9_snapshot_asof", "q_t3_dim_merge", "q_x17_neardup_clusters",
-      "q_x18_dedup_pipeline", "q_x19_simhash_neardup",
-      "q_x21_simhash64_neardup", "q_x9b_ann_ivf_multiprobe",
-      "q_x23_jaccard_between", "q_x22_dedup_index", "q_x26_ivfadc",
-      "q_x28_ivfadc_distributed", "q_x34_curation_pipeline",
-      "q_m5_image_neardup", "q_m8_audio_neardup", "q_x35_semantic_neardup",
-      "q_x36_substring_dedup", "q_x37_bpe_train", "q_x39_bpe_tokenize",
-      "q_x40_incremental_spans", "q_x38_paragraph_neardup",
-      "q_x41_paragraph_excision", "q_x42_lm_perplexity",
-      "q_x43_dsir_importance", "q_x44_semdedup", "q_x45_line_dedup",
-      "q_x47_ann_l2", "q_x48_ppl_buckets", "q_x49_ann_ivf_l2",
-      "q_x58_quantile_sketch", "q_x66_unigram_train", "q_x69_cdc_chunks",
-      "q_x70_epoch_materialize", "q_x72_plan_export",
-      "q_x74_cluster_reps", "q_x76_ivf_index_query", "q_x83_pagerank",
-      "q_x84_personalized_pagerank", "q_x85_label_propagation",
-      "q_x86_hits", "q_x97_weighted_pagerank", "q_x91_triangle_count",
-      "q_x92_basket_rules",
-      "q_x93_kcore", "q_x94_leakage_split", "q_x96_containment",
-      "q_f15_calibration", "q_d8_profile",
-      "q_x98_bfs_hops", "q_x100_kneser_ney", "q_x101_fuzzy_join",
-      "q_x103_cv_folds", "q_x105_item_cf", "q_f19_learning_curve",
-      "q_j15_stabbing_count", "q_x112_label_suspects",
-      "q_x116_cluster_refine", "q_x122_dedup_yield",
-      "q_x129_packed_leakage", "q_x132_source_overlap",
-      "q_x136_srp_neardup", "q_f55_theil_sen",
-      "q_x185_knn_graph_incremental", "q_x186_clustering_report")
-    // SPARK_GRAFT_ONLY=q_a,q_b narrows the run for local profiling
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+    val spark = Harness.session()
+    // Name order: Map hash order varies across builds. Every query ends
+    // with a release and GC, so no query's residue taxes the next.
     val ordered = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .sortBy { case (n, _) => (heavy.contains(n), n) }
+      .filter { case (n, _) => Harness.selected(n) }
+      .sortBy(_._1)
     // Untimed warmup: the first query of a fresh session pays ~5-6s of
     // class loading, codegen compilation and FS/footer caching that
     // belongs to the JVM, not to whichever query sorts first.
@@ -72,61 +17,24 @@ object Bench {
       spark.read.parquet(s"$sfDir/region.parquet")
         .groupBy("r_name").count().collect()
     } catch { case _: Throwable => () }
-    // Repeat-median per query: one untimed per-query warm-up (codegen
-    // compile, parquet footer cache, broadcast build) then `repeats`
-    // timed runs, reporting the MEDIAN — single-shot timings on a shared
-    // JVM swing >2x with zero code change (r7 postmortem: q_x24
-    // 0.31->1.59s untouched), which made round-over-round per-query
-    // deltas unactionable. Median-of-3 absorbs one GC/JIT outlier per
-    // query while staying 4x the single-shot cost, not 10x.
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    def once(
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        name: String = "?"): Double = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable =>
-          // stderr, never stdout (the driver parses the stdout JSON)
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          false
-      }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // intra-query persists + checkpoint blocks must not leak (untimed)
-      graft.util.Caches.releaseAll(spark)
-      spark.catalog.clearCache()
-      System.gc() // untimed: stop one query's garbage from taxing the next
-      // a failure must surface as the -1 sentinel, NOT its wall time —
-      // a swallowed failure otherwise benches as a fast "win" and
-      // promote_bench.py's refusal gate never fires
-      if (ok) elapsed else -1.0
-    }
     // CODE-FROZEN machine-drift canary — DO NOT CHANGE: cross-round
     // normalization divides totals by this. A fixed shuffle+codegen
     // workload with no graft code and no sf-dir dependence, so its
     // round-over-round ratio isolates machine speed from code changes
     // (the r9 postmortem: ~20% uniform drift on untouched queries made
     // absolute totals mushy).
-    def canaryOnce(): Double = {
-      val t0 = System.nanoTime()
+    val canary = Harness.median(spark, "[bench] canary") {
       spark.range(0L, 20000000L, 1L, 32)
         .selectExpr("id % 9973 AS k", "id % 1009 AS v")
         .groupBy("k")
         .agg(org.apache.spark.sql.functions.sum("v").as("s"),
           org.apache.spark.sql.functions.avg("v").as("a"))
         .filter("s > 0").count()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      System.gc()
-      elapsed
     }
-    canaryOnce() // warm-up, untimed
-    val canary = (1 to repeats).map(_ => canaryOnce()).sorted
-      .apply(repeats / 2)
+    // Repeat-median per query (Harness.median); a failed query reads -1
     val results = ordered.map { case (name, fn) =>
-      once(fn, name) // per-query warm-up, untimed
-      val times = (1 to repeats).map(_ => once(fn, name)).sorted
-      // ANY failed repeat poisons the median to the sentinel — a query
-      // that flakes must read as failed, not as its fastest success
-      name -> (if (times.exists(_ < 0)) -1.0 else times(times.size / 2))
+      name ->
+        Harness.median(spark, s"[bench] $name")(fn(spark, sfDir).count())
     }
     // A failed query's -1 sentinel must not silently shave the headline
     // total: sum only successes and carry an explicit failed count so a
@@ -153,7 +61,7 @@ object Bench {
     // ~120-query map (~4.4 KB) truncates and the JSON line never parses
     // (BENCH_r6..r8 all landed "parsed: null"). So: full-precision
     // per-query map goes to BENCH_RUN.json in the working directory,
-    // and the stdout line carries the headline (heavy) subset at 3
+    // and the final stdout line carries the slowest queries at 3
     // decimals — small enough to fit the tail window whole.
     // BENCH_RUN.json is a SINGLE run's record — the committed board
     // (BENCH_FULL.json) is produced by the explicit min-merge step
@@ -166,16 +74,12 @@ object Bench {
       }.mkString("{", ",", "}")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "BENCH_RUN.json")
-    val overlayJson = "\"" + confOverlay.replace("\\", "")
-      .replace("\"", "") + "\""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath),
-      s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"canary_sec":$canary,"conf_overlay":$overlayJson,"counter_examples":$ceJson,"compute_bound":$cbJson,"queries":${fmt(results, dec = false)},"sf":"$sfDir"}""")
-    // FULL per-query map first (the r16 stdout line printed only the
-    // `heavy` subset; emitting every query is additions-only on that
-    // contract — nothing removed or renamed, old entries keep their
-    // meaning), then a COMPACT summary as the FINAL stdout line. The
-    // driver's output capture keeps only the LAST 2000 characters, and
+      s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"canary_sec":$canary,"counter_examples":$ceJson,"compute_bound":$cbJson,"queries":${fmt(results, dec = false)},"sf":"$sfDir"}""")
+    // FULL per-query map first, then a COMPACT summary as the FINAL
+    // stdout line. The driver's output capture keeps only the LAST 2000
+    // characters, and
     // the per-query line outgrew that window rounds ago: every
     // BENCH_r01..r16.json carries parsed:null, so the driver's
     // round-over-round per-query comparison has never actually run.
@@ -183,8 +87,8 @@ object Bench {
     // window: headline totals + the slowest queries (time desc, name
     // asc — deterministic, and the expensive rows are exactly the ones
     // whose deltas exceed noise) up to a fixed character budget.
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","failed":$failed,"canary_sec":${f"$canary%.3f"},"conf_overlay":$overlayJson,"counter_examples":$ceJson,"compute_bound":$cbJson,"queries":${fmt(results, dec = true)},"sf":"$sfDir"}""")
-    val prefix = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","failed":$failed,"canary_sec":${f"$canary%.3f"},"n":${results.size},"conf_overlay":$overlayJson,"queries":{"""
+    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","failed":$failed,"canary_sec":${f"$canary%.3f"},"counter_examples":$ceJson,"compute_bound":$cbJson,"queries":${fmt(results, dec = true)},"sf":"$sfDir"}""")
+    val prefix = s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","failed":$failed,"canary_sec":${f"$canary%.3f"},"n":${results.size},"queries":{"""
     val suffix = s"""},"sf":"$sfDir"}"""
     val budget = 1700 - prefix.length - suffix.length
     val compact = new StringBuilder

@@ -1,12 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 import org.apache.spark.sql.execution.SimpleMode
 
 /** Plan diagnostics: prints scan pushdown, join strategy and codegen
   * markers for each query — the checklist a plan regression would show up
   * in (scans must push filters, star joins must broadcast, hot paths must
   * stay inside WholeStageCodegen).
+  *
+  * AQE is off (the [[Harness]]'s fixed-plan session): it would show the
+  * pre-execution plan, with no codegen markers yet.
   *
   * Usage: `runMain graft.ExplainCheck [sfDir] [queryName...]` (no names ⇒
   * every query).
@@ -16,17 +19,7 @@ object ExplainCheck {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names =
       if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // AQE shows the pre-execution plan (no codegen markers yet); disable
-      // it here so the diagnostic sees the final codegen'd shape.
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(fixedPlans = true)
     for (name <- names) {
       try {
         val plan = SparkEntry.queries(name)(spark, sfDir)

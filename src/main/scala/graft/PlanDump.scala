@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` for named queries to files — the
@@ -12,12 +12,15 @@ import org.apache.spark.sql.execution.FormattedMode
   * followed by `git status --short` of the `src/main` files that differ
   * from it, if any — so a file names the code it came from.
   *
-  * AQE is disabled for the dump so the file shows the final codegen'd
-  * shape (join strategy, Exchange count, PushedFilters) rather than an
-  * unresolved AdaptiveSparkPlan placeholder — same rationale as
-  * [[ExplainCheck]]. Queries that build side-effect stores (x185/x187/
-  * x188/x189/x76/x190/x191) run their maintenance eagerly at plan
+  * The [[Harness]]'s fixed-plan session disables AQE, so the file shows
+  * the final codegen'd shape (join strategy, Exchange count,
+  * PushedFilters) rather than an unresolved AdaptiveSparkPlan
+  * placeholder. Queries that build side-effect stores (x185/x187/x188/
+  * x189/x76/x190/x191) run their maintenance eagerly at plan
   * construction; the dumped plan is the published view's.
+  *
+  * A query that fails has its old file deleted, and the tool exits
+  * nonzero after the loop, naming every failed query.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -27,31 +30,32 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(fixedPlans = true)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     import scala.sys.process._
     val stamp = Seq("git", "rev-parse", "HEAD").!! + Seq("git", "status",
       "--short", "--untracked-files=no", "--", "src/main").!!
-    for (name <- names) {
+    val failed = names.filterNot { name =>
+      val out = java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt")
       try {
         val plan = SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.explainString(FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), stamp + plan)
+        java.nio.file.Files.writeString(out, stamp + plan)
         println(s"[plandump] wrote $name")
+        true
       } catch {
         case e: Exception =>
-          println(s"[plandump] $name FAILED: ${e.getMessage.take(160)}")
+          // an older dump must not pass as this commit's evidence
+          java.nio.file.Files.deleteIfExists(out)
+          println(s"[plandump] $name FAILED: " +
+            String.valueOf(e.getMessage).take(160))
+          false
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[plandump] FAIL: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

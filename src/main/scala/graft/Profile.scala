@@ -1,7 +1,7 @@
 package graft
 
+import graft.tools.Harness
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Job-level profiler for composite queries: runs each named query once
@@ -18,14 +18,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     case class Job(id: Int, desc: String, start: Long, var end: Long = -1L)
     val jobs = mutable.ArrayBuffer.empty[Job]
     val listener = new SparkListener {
@@ -41,35 +34,43 @@ object Profile {
           jobs.find(_.id == je.jobId).foreach(_.end = je.time)
         }
     }
+    // The listener bus delivers asynchronously: wait until every recorded
+    // job has its end and no new job arrived for three polls, or a job
+    // would drop out of "accounted" and inflate the gap.
+    def drain(name: String): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      var (last, quiet) = (-1, 0)
+      while (quiet < 3) {
+        if (System.nanoTime() > deadline)
+          sys.error(s"[profile] $name: listener bus not drained in 30 s")
+        Thread.sleep(50)
+        val (n, open) = jobs.synchronized((jobs.size, jobs.count(_.end < 0)))
+        if (n == last && open == 0) quiet += 1 else { quiet = 0; last = n }
+      }
+    }
     // session warm-up
     spark.range(1000).selectExpr("sum(id)").collect()
     for (name <- names) {
       val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).count() // warm-up, unprofiled
-      graft.util.Caches.releaseAll(spark)
-      spark.catalog.clearCache()
-      System.gc()
+      Harness.timed(spark, s"[profile] $name warm-up")(
+        fn(spark, sfDir).count())
       jobs.synchronized(jobs.clear())
       spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val total = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain the last JobEnd
+      val total =
+        Harness.timed(spark, s"[profile] $name")(fn(spark, sfDir).count())
+      if (total < 0) sys.error(s"[profile] $name failed")
+      drain(name)
       spark.sparkContext.removeSparkListener(listener)
       println(f"\n=== $name total ${total}%.3f s, ${jobs.size} jobs ===")
       jobs.synchronized {
         jobs.sortBy(_.start).foreach { j =>
-          val dur = if (j.end >= 0) (j.end - j.start) / 1e3 else -1.0
-          println(f"  job ${j.id}%3d ${dur}%7.3f s  ${j.desc.take(100)}")
+          println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.3f s  " +
+            j.desc.take(100))
         }
-        val accounted = jobs.filter(_.end >= 0)
-          .map(j => (j.end - j.start) / 1e3).sum
+        val accounted = jobs.map(j => (j.end - j.start) / 1e3).sum
         println(f"  accounted in jobs: ${accounted}%.3f s " +
           f"(gaps = planning/FS/driver: ${total - accounted}%.3f s)")
       }
-      graft.util.Caches.releaseAll(spark)
-      spark.catalog.clearCache()
-      System.gc()
     }
     spark.stop()
   }

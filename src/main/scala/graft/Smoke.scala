@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 
 /** Local smoke runner: exercises the flagship `SparkEntry.entry` the way the
   * driver's t1 smoke does (rows > 0 on sf0.001) and prints the result. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

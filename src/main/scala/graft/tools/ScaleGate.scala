@@ -1,17 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** THE SCALE GATE (r13 verdict item 2, institutionalized): the per-round
   * sf0.1 → sf1 exponent probe as a tool instead of a hand-run ritual.
   * Runs each named query against a small and a big data directory
   * (the big one typically `/tmp/sf1_synth` from [[ScaleUp]] ×10),
-  * times both (untimed warm-up + median-of-N, the Bench discipline),
-  * prints the BASELINE.md wave table, and FAILS — nonzero exit — when
-  * any query's exponent `log_factor(t_big / t_small)` exceeds the gate
-  * (default 0.8) unless the query is on the DECLARED counter-example
-  * list. A board can therefore never silently grow a super-linear
-  * query: the wave that would record it aborts instead.
+  * times both with [[Harness.median]] (the Bench discipline), prints the
+  * BASELINE.md wave table, and FAILS — nonzero exit — when any query's
+  * exponent `log_factor(t_big / t_small)` exceeds [[exponentGate]]
+  * unless the query is on the DECLARED counter-example list, or when
+  * any of its runs failed. A board can therefore never silently grow a
+  * super-linear query: the wave that would record it aborts instead.
   *
   * The default query set is the STANDING GATE: all 22 TPC-H shapes
   * (r13 verdict item 7 — so the 0.33–0.35 watch rows a20/a28/a29 get
@@ -20,8 +18,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage:
   *   runMain graft.tools.ScaleGate <smallDir> <bigDir> <factor> [q1,q2,…]
-  * Env: SPARK_GRAFT_REPEATS (default 3), SPARK_GRAFT_GATE (default 0.8),
-  *      SPARK_GRAFT_CPUS (default 32). */
+  */
 object ScaleGate {
 
   /** Declared scale counter-examples — queries KEPT on the board to
@@ -58,6 +55,9 @@ object ScaleGate {
     * declaration. */
   val computeBoundCap: Double = 1.3
 
+  /** The largest exponent an undeclared query may show. */
+  val exponentGate: Double = 0.8
+
   /** The standing gate: every TPC-H shape + the stats watch row. */
   val standingGate: Seq[String] = Seq(
     "q_a1_pricing_summary", "q_a13_shipping_priority",
@@ -86,61 +86,50 @@ object ScaleGate {
       else standingGate
     val unknown = names.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val gate = sys.env.getOrElse("SPARK_GRAFT_GATE", "0.8").toDouble
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def once(name: String, dir: String): Double = {
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, dir).count()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      graft.util.Caches.releaseAll(spark)
-      spark.catalog.clearCache()
-      System.gc()
-      elapsed
-    }
-    def median(name: String, dir: String): Double = {
-      once(name, dir) // untimed warm-up (codegen, footer cache)
-      val ts = (1 to repeats).map(_ => once(name, dir)).sorted
-      ts(ts.size / 2)
-    }
+    val spark = Harness.session()
+    def median(name: String, dir: String): Double =
+      Harness.median(spark, s"[scalegate] $name")(
+        graft.SparkEntry.queries(name)(spark, dir).count())
+    def secs(t: Double): String = if (t < 0) "failed" else f"$t%.2f"
 
     println(s"[scalegate] ${names.size} queries, factor $factor, " +
-      s"gate $gate, repeats $repeats")
+      s"gate $exponentGate, repeats ${Harness.Repeats}")
     println("| query | small s | big s | exponent | verdict |")
     println("|---|---|---|---|---|")
     val rows = names.map { n =>
       val tS = median(n, smallDir)
       val tB = median(n, bigDir)
-      val exp = math.log(tB / tS) / math.log(factor)
-      val verdict =
-        if (exp <= gate) "ok"
-        else if (declaredCounterExamples.contains(n))
+      // a failed run has no exponent: the row fails
+      val exp =
+        if (tS < 0 || tB < 0) None
+        else Some(math.log(tB / tS) / math.log(factor))
+      val verdict = exp match {
+        case None => "FAIL"
+        case Some(e) if e <= exponentGate => "ok"
+        case _ if declaredCounterExamples.contains(n) =>
           "DECLARED counter-example"
-        else if (declaredComputeBound.contains(n) && exp <= computeBoundCap)
+        case Some(e) if declaredComputeBound.contains(n) &&
+            e <= computeBoundCap =>
           "declared compute-bound (row-parallel, scales out)"
-        else "FAIL"
-      println(f"| $n | $tS%.2f | $tB%.2f | $exp%.2f | $verdict |")
+        case _ => "FAIL"
+      }
+      println(s"| $n | ${secs(tS)} | ${secs(tB)} | " +
+        s"${exp.fold("—")(e => f"$e%.2f")} | $verdict |")
       (n, tS, tB, exp, verdict)
     }
     val failed = rows.filter(_._5 == "FAIL")
     // one machine-readable line for the round log
     val json = rows.map { case (n, tS, tB, e, v) =>
-      f"""\"$n\":{\"small\":$tS%.3f,\"big\":$tB%.3f,\"exp\":$e%.3f,\"ok\":${v != "FAIL"}}"""
+      val ej = e.fold("null")(x => f"$x%.3f")
+      f"""\"$n\":{\"small\":$tS%.3f,\"big\":$tB%.3f,\"exp\":$ej,\"ok\":${v != "FAIL"}}"""
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"scalegate","gate":$gate,"factor":$factor,"failed":${failed.size},"queries":$json}""")
+    println(s"""{"metric":"scalegate","gate":$exponentGate,"factor":$factor,"failed":${failed.size},"queries":$json}""")
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[scalegate] FAIL: ${failed.size} queries " +
-        s"above exponent $gate and not declared: " +
-        failed.map(r => f"${r._1} (${r._4}%.2f)").mkString(", "))
+        s"failed a run, or above exponent $exponentGate and not declared: " +
+        failed.map(r => s"${r._1} (${r._4.fold("failed run")(e =>
+          f"$e%.2f")})").mkString(", "))
       sys.exit(1)
     }
     println("[scalegate] PASS")

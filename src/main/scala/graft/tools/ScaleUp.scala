@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale-up generator for the sf1 scale probe (BASELINE.md):
@@ -36,12 +36,7 @@ object ScaleUp {
     require(args.length == 3, "usage: ScaleUp <srcDir> <destDir> <copies>")
     val (src, dst, copies) = (args(0), args(1), args(2).toInt)
     require(copies >= 1, "copies must be >= 1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     def replicate(table: String)(copy: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$table.parquet")

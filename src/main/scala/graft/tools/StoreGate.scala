@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** THE BATCH-COUNT SCALE GATE (r15 verdict item 5): the store-lifecycle
@@ -11,12 +11,12 @@ import org.apache.spark.sql.functions._
   * and its view's listing/merge cost then grows linearly in BATCHES at
   * constant data. This tool ingests the SAME corpus as B ∈ {1, …, max}
   * micro-batches through each store-backed sink's own batch kernel,
-  * times the published view at every B (untimed warm-up +
-  * median-of-N, the Bench discipline), reads the store's batches and
-  * data files ([[graft.store.BatchStore.stats]]), and
-  * FAILS — nonzero exit — when view time at max B exceeds `gate` ×
-  * view time at B = 1. Where the store has a compaction operator the
-  * post-compaction view is re-timed as the documented fix.
+  * times the published view at every B with [[Harness.median]] (the
+  * Bench discipline), reads the store's batches and data files
+  * ([[graft.store.BatchStore.stats]]), and FAILS — nonzero exit — when
+  * view time at max B exceeds [[viewGrowthGate]] × view time at B = 1,
+  * or when any view run failed. Where the store has a compaction
+  * operator the post-compaction view is re-timed as the documented fix.
   *
   * Covered stores: the X185 k-NN graph store (increments are genuinely
   * stateful — touched-cell recompute — so its B ladder is smaller),
@@ -27,12 +27,13 @@ import org.apache.spark.sql.functions._
   *
   * Usage:
   *   runMain graft.tools.StoreGate <sfDir> [knn,dedup,valuecell,daily]
-  * Env: SPARK_GRAFT_REPEATS (default 3),
-  *      SPARK_GRAFT_STORE_GATE (default 4.0 — small fixtures carry
-  *      constant per-job overhead, so the ratio bar is loose; the
-  *      structural signal is the FILE COUNT column growing ∝ B),
-  *      SPARK_GRAFT_CPUS (default 32). */
+  */
 object StoreGate {
+
+  /** The largest view-time growth from B = 1 to max B a store may show.
+    * Small fixtures carry constant per-job overhead, so the bar is loose;
+    * the structural signal is the FILE COUNT column growing ∝ B. */
+  val viewGrowthGate: Double = 4.0
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StoreGate <sfDir> [store1,store2,...]")
@@ -40,27 +41,11 @@ object StoreGate {
     val wanted =
       if (args.length >= 2) args(1).split(",").map(_.trim).toSeq
       else Seq("knn", "dedup", "valuecell", "daily")
-    val gate = sys.env.getOrElse("SPARK_GRAFT_STORE_GATE", "4.0").toDouble
-    val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import graft.streaming.StreamingEvents
 
-    def medianOf(thunk: () => Unit): Double = {
-      thunk() // untimed warm-up (codegen, footer cache)
-      val ts = (1 to repeats).map { _ =>
-        val t0 = System.nanoTime()
-        thunk()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      ts(ts.size / 2)
-    }
+    def viewMedian(view: String => DataFrame, dir: String): Double =
+      Harness.median(spark, s"[storegate] $dir")(view(dir).collect())
 
     /** One store probe: build with B batches, return
       * (ingest sec, view median sec, store state, store dir). */
@@ -73,18 +58,17 @@ object StoreGate {
       val t0 = System.nanoTime()
       build(b, dir)
       val ingest = (System.nanoTime() - t0) / 1e9
-      val view = medianOf(() => { viewOf(dir).collect(); () })
+      val view = viewMedian(viewOf, dir)
       Probe(b, ingest, view, graft.store.BatchStore.stats(spark, dir), dir)
     }
 
+    // inputs are re-read per use, as every Bench query reads them: a
+    // persist here would be dropped by the release between runs
     val emb = graft.Tables.t(spark, sfDir, "embeddings")
-      .persist()
     val events = graft.Tables.t(spark, sfDir, "events")
-      .persist()
     val docs = graft.Tables.t(spark, sfDir, "documents")
-      .persist()
     val cents = emb.filter(col("vec_id") % 50 === 0)
-    val refValues = events.select(col("value")).persist()
+    val refValues = events.select(col("value"))
 
     // ---- store builders (each drives the sink's OWN batch kernel) ----
     val builders: Map[String, (Seq[Int], (Int, String) => Unit,
@@ -142,44 +126,51 @@ object StoreGate {
     require(unknown.isEmpty, s"unknown stores: ${unknown.mkString(",")}" +
       s" (have ${builders.keys.mkString(",")})")
 
-    println(s"[storegate] stores ${wanted.mkString(",")}, gate $gate, " +
-      s"repeats $repeats")
+    println(s"[storegate] stores ${wanted.mkString(",")}, " +
+      s"gate $viewGrowthGate, repeats ${Harness.Repeats}")
     println("| store | B | ingest s | view s | batches | files | note |")
     println("|---|---|---|---|---|---|---|")
+    def secs(t: Double): String = if (t < 0) "failed" else f"$t%.2f"
     val results = wanted.map { name =>
       val (bs, build, view, compact) = builders(name)
       val probes = bs.map { b =>
         val p = probe(build, view, b, s"graft_sg_$name")
-        println(f"| $name | ${p.b} | ${p.ingest}%.2f | ${p.view}%.2f | " +
-          f"${p.store.batches} | ${p.store.files} | |")
+        println(f"| $name | ${p.b} | ${p.ingest}%.2f | ${secs(p.view)} | " +
+          f"${p.store.batches} | ${p.store.files} | " +
+          s"${if (p.view < 0) "FAIL " else ""}|")
         p
       }
       // compaction = the documented fix: re-time the max-B store's view
       val compacted = compact.map { c =>
         val last = probes.last
         c(last.dir)
-        val v = medianOf(() => { view(last.dir).collect(); () })
+        val v = viewMedian(view, last.dir)
         val st = graft.store.BatchStore.stats(spark, last.dir)
-        println(f"| $name | ${last.b} | — | $v%.2f | ${st.batches} | " +
-          f"${st.files} | compacted |")
+        println(f"| $name | ${last.b} | — | ${secs(v)} | ${st.batches} | " +
+          f"${st.files} | compacted${if (v < 0) " FAIL" else ""} |")
         v
       }
-      val ratio = probes.last.view / probes.head.view
+      // a failed view run has no ratio: the store fails
+      val ratio =
+        if ((probes.map(_.view) ++ compacted).exists(_ < 0)) None
+        else Some(probes.last.view / probes.head.view)
       (name, probes, compacted, ratio)
     }
-    val failed = results.filter(_._4 > gate)
+    val failed = results.filter(_._4.forall(_ > viewGrowthGate))
     val json = results.map { case (n, ps, c, r) =>
       val bjson = ps.map(p =>
         f""""b${p.b}":{"ingest":${p.ingest}%.3f,"view":${p.view}%.3f,"batches":${p.store.batches},"files":${p.store.files}}""")
         .mkString(",")
       val cj = c.map(v => f""","compacted_view":$v%.3f""").getOrElse("")
-      f""""$n":{$bjson,"ratio":$r%.3f$cj,"ok":${r <= gate}}"""
+      val rj = r.fold("null")(x => f"$x%.3f")
+      s""""$n":{$bjson,"ratio":$rj$cj,"ok":${r.exists(_ <= viewGrowthGate)}}"""
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"storegate","gate":$gate,"failed":${failed.size},"stores":$json}""")
+    println(s"""{"metric":"storegate","gate":$viewGrowthGate,"failed":${failed.size},"stores":$json}""")
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[storegate] FAIL: ${failed.map(f =>
-        f"${f._1} (${f._4}%.2f×)").mkString(", ")} above ×$gate " +
+        s"${f._1} (${f._4.fold("failed run")(r => f"$r%.2f×")})")
+        .mkString(", ")} — a failed view run, or above ×$viewGrowthGate " +
         "view-time growth at max batch count")
       sys.exit(1)
     }
