@@ -12,6 +12,9 @@ import scala.collection.mutable
   * alone cannot say which pass to optimize (guide §1.1: find where the
   * time actually goes before changing anything).
   *
+  * "Accounted in jobs" is the time covered by at least one job (the
+  * union of the job intervals), so the gap is never negative.
+  *
   * Usage: `runMain graft.Profile <sfDir> <queryName...]`.
   */
 object Profile {
@@ -67,11 +70,20 @@ object Profile {
           println(f"  job ${j.id}%3d ${(j.end - j.start) / 1e3}%7.3f s  " +
             j.desc.take(100))
         }
-        val accounted = jobs.map(j => (j.end - j.start) / 1e3).sum
+        val accounted = covered(jobs.map(j => (j.start, j.end)).toSeq) / 1e3
         println(f"  accounted in jobs: ${accounted}%.3f s " +
           f"(gaps = planning/FS/driver: ${total - accounted}%.3f s)")
       }
     }
     spark.stop()
   }
+
+  /** Milliseconds covered by the union of the `(start, end)` intervals:
+    * concurrent jobs overlap, and summing their durations would count
+    * the shared time twice (and drive the gap negative). */
+  def covered(intervals: Seq[(Long, Long)]): Long =
+    intervals.sortBy(_._1).foldLeft((0L, Long.MinValue)) {
+      case ((total, reach), (s, e)) =>
+        (total + math.max(0L, e - math.max(s, reach)), math.max(reach, e))
+    }._1
 }

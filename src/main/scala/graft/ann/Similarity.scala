@@ -1520,20 +1520,20 @@ object Similarity {
     * — and composes with the community operators (X85 label
     * propagation, X93 k-core) as a similarity graph over embeddings.
     *
-    * Candidate generation is the [[lofScoresHalo]] relation: points
-    * sharing ≥ 1 of their top-`probes` cells see each other (symmetric;
-    * probe 0 alone is plain bucketing, probes = nlist is exact).
-    * Duplicate two-cell pairs collapse under `distinct` — the cosine is
-    * the same codegen'd left-to-right `graft_dot` tree both times,
-    * bit-equal. Ranking is (cos desc, neighbor id) per source point —
-    * the brute-force tie order — via a window PARTITIONED by source
-    * (m_eff-bounded, never data-global). NaN cosines (zero-norm
-    * vectors) are unrankable and dropped — the brute-force contract.
+    * Candidates are the [[lofScoresHalo]] relation: points sharing ≥ 1
+    * of their top-`probes` cells see each other (symmetric; probe 0
+    * alone is plain bucketing, probes = nlist is exact). The edges come
+    * from the cell-local kernel [[knnTopK]]: the cosine is the SQL
+    * `graft_dot(a, b) / (na * nb)` arithmetic, a neighbor met in two
+    * shared cells keeps one entry, ranking is (cos desc, neighbor id)
+    * per source — the brute-force tie order — and NaN cosines
+    * (unrankable) are dropped, the brute-force contract.
     *
-    * Scale: one centroid_id shuffle of probes×N assignment rows, the
-    * guarded per-cell join, one pair-relation distinct, one
-    * source-keyed window — no all-pairs anywhere; eager probe-inclusive
-    * census fails loud before the join (the X179 guard discipline).
+    * Scale: one centroid_id exchange of probes×N assignment rows, one
+    * cell buffered per task at a time (at most `maxBucketPoints` × dim
+    * doubles), one source exchange of ≤ probes×k rows per point — no
+    * pair relation is ever materialized; the eager probe-inclusive
+    * census fails loud before the kernel (the X179 guard discipline).
     * Output: (vec_id, rk, neighbor_id, cosine), rk ≤ k per source. */
   def knnGraph(points: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, dim: Int, k: Int, probes: Int = 2,
@@ -1541,27 +1541,8 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     val asg = probeAssignGuarded(points, idCol, vecCol, centroids,
       dim, probes, maxBucketPoints, "knnGraph")
-    val a = asg.select(col("__bk"), col("__id").as("__p"),
-      col("__v").as("__va"), col("__nm").as("__na"))
-    val b = asg.select(col("__bk"), col("__id").as("__o"),
-      col("__v").as("__vb"), col("__nm").as("__nb"))
-    // half-relation dedup (see [[lofScoresHalo]]): the codegen cosine
-    // is bit-symmetric, so only (p < o) pairs shuffle through the
-    // distinct and the swap is re-emitted exactly
-    val half = a.join(b, Seq("__bk")).filter(col("__p") < col("__o"))
-      .withColumn("__c", nCosine(col("__va"), col("__vb"), col("__na"),
-        col("__nb")))
-      .filter(!isnan(col("__c")))
-      .select(col("__p"), col("__o"), col("__c"))
-      .distinct()
-    val pairs = half.unionByName(half.select(col("__o").as("__p"),
-      col("__p").as("__o"), col("__c")))
-    pairs
-      .withColumn("rk", row_number().over(Window.partitionBy(col("__p"))
-        .orderBy(col("__c").desc, col("__o"))).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("__p").as("vec_id"), col("rk"),
-        col("__o").as("neighbor_id"), round(col("__c"), 6).as("cosine"))
+    knnEdges(asg.select(col("__id").as("vec_id"), col("__v").as("v"),
+      col("__nm").as("nrm"), col("__bk").as("centroid_id")), k)
       .orderBy(col("vec_id"), col("rk"))
   }
 
@@ -1628,16 +1609,22 @@ object Similarity {
     * 0.84): data-proportional centroids mean 10× data = 10× partition
     * DIRECTORIES of ever-smaller files, and the per-file metadata cost
     * turns the store linear-in-nlist. A capped shard keeps directory
-    * count CONSTANT as the corpus grows; cell pruning survives as shard
-    * pruning (×1/shards) plus the pushed centroid_id filter inside each
-    * shard's row groups. */
-  private val KnnShards = 64
+    * count CONSTANT as the corpus grows; cell pruning survives as a
+    * partition filter on the shards of the recomputed cells plus a
+    * broadcast left-semi join on their (shard, cell) pairs.
+    *
+    * 32, not more: Spark lists a directory with more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    * subdirectories through a listing JOB (0.3–0.6 s) each time the
+    * index is opened. Stores written with another count (64 before)
+    * still read correctly: every read keeps the `__shard` a row was
+    * written under, and only new rows are sharded here. The edge
+    * kernel's memory bound does not depend on it: one cell, at most
+    * `maxBucketPoints` × dim doubles. */
+  private val KnnShards = 32
 
   private def withShard(asg: DataFrame): DataFrame =
     asg.withColumn("__shard", pmod(col("centroid_id"), lit(KnnShards)))
-
-  private def shardsOf(cells: Array[Long]): Array[Long] =
-    cells.map(c => ((c % KnnShards) + KnnShards) % KnnShards).distinct
 
   /** Writes an assignment as the store's `index/batch_id=N/__shard=S`. */
   private def writeKnnIndex(asg: DataFrame, storeDir: String,
@@ -1660,6 +1647,239 @@ object Similarity {
     graft.store.BatchStore.batches(spark, s"$storeDir/$side", who,
       "a knnGraphIncrement store")
 
+  /** The one k-NN edge kernel, behind [[knnGraph]],
+    * [[knnGraphIncrement]], [[knnGraphDelete]] and [[knnGraphRefresh]]:
+    * the exact top-k neighbors of each point over the members of every
+    * cell it is assigned to. `slice` is an assignment (vec_id, v, nrm,
+    * centroid_id), one row per probed cell.
+    *
+    * One exchange on centroid_id, sorted by (centroid_id, vec_id), then
+    * one pass that buffers ONE cell at a time. Every pair of distinct
+    * ids in the cell gets the arithmetic of the SQL form
+    * `graft_dot(a, b) / (na * nb)`: a left-to-right dot over the shorter
+    * length, then the division, where a zero divisor is NULL, or
+    * DIVIDE_BY_ZERO when the session is ANSI, as the SQL `/` is. Each
+    * member keeps its top k in (cos desc NULLS LAST, neighbor id) order,
+    * NaN dropped. The value is symmetric bit for bit (products commute
+    * and the sum runs in index order), so each pair is scored once for
+    * both ends. Duplicate rows of one id (the compaction crash window)
+    * count once. One exchange on the source then merges the per-cell
+    * lists: a neighbor met in two shared cells carries the same bits
+    * both times and keeps one entry; the first k stay.
+    *
+    * `srcCells` names the cells whose members are re-ranked (None: all
+    * cells). A point is emitted iff one of its cells is a source cell,
+    * so the slice must hold every cell such a point probes. With
+    * `sentinel`, an emitted point left with no neighbor gets one
+    * `rk = 0` row ([[knnGraphDelete]]'s empty-recompute marker).
+    *
+    * Memory: one cell per task, at most `maxBucketPoints` × dim doubles
+    * plus k slots per member. Output: (vec_id, rk, neighbor_id, cosine)
+    * with the cosine unrounded; [[knnEdges]] publishes it. */
+  private[graft] def knnTopK(slice: DataFrame, k: Int,
+      srcCells: Option[Set[Long]] = None,
+      sentinel: Boolean = false): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val spark = slice.sparkSession
+    import spark.implicits._
+    val ansi = spark.sessionState.conf.ansiEnabled
+    slice.select(col("centroid_id"), col("vec_id"), col("v"), col("nrm"))
+      .repartition(col("centroid_id"))
+      .sortWithinPartitions(col("centroid_id"), col("vec_id"))
+      .as[(Long, Long, Array[Double], Double)]
+      .mapPartitions(KnnCell.rank(_, k, srcCells, ansi))
+      .toDF("__p", "__t", "__o", "__c")
+      .repartition(col("__p"))
+      .sortWithinPartitions(col("__p"), col("__c").desc,
+        col("__o").asc_nulls_last)
+      .as[(Long, Boolean, Option[Long], Option[Double])]
+      .mapPartitions(KnnCell.merge(_, k, sentinel))
+      .toDF("vec_id", "rk", "neighbor_id", "cosine")
+  }
+
+  /** [[knnTopK]] with the published cosine, round(·, 6). */
+  private def knnEdges(slice: DataFrame, k: Int,
+      srcCells: Option[Set[Long]] = None,
+      sentinel: Boolean = false): DataFrame =
+    knnTopK(slice, k, srcCells, sentinel)
+      .withColumn("cosine", round(col("cosine"), 6))
+
+  /** The two passes of [[knnTopK]]. */
+  private object KnnCell {
+    type Ranked = (Long, Boolean, Option[Long], Option[Double])
+
+    /** Per cell of `rows` (sorted by cell, then id): each member's
+      * top-k as (member, source cell?, neighbor, cosine) rows, and a
+      * (member, true, None, None) marker for a source-cell member with
+      * no neighbor in the cell. */
+    def rank(rows: Iterator[(Long, Long, Array[Double], Double)], k: Int,
+        srcCells: Option[Set[Long]], ansi: Boolean): Iterator[Ranked] = {
+      val in = rows.buffered
+      val ids = scala.collection.mutable.ArrayBuilder.make[Long]
+      val vs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
+      val ns = scala.collection.mutable.ArrayBuilder.make[Double]
+      Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+        val cell = in.head._1
+        ids.clear(); vs.clear(); ns.clear()
+        var last = 0L
+        while (in.hasNext && in.head._1 == cell) {
+          val (_, id, v, n) = in.next()
+          if (vs.isEmpty || id != last) { ids += id; vs += v; ns += n }
+          last = id
+        }
+        cellTopK(ids.result(), vs, ns.result(), k,
+          srcCells.forall(_.contains(cell)), ansi)
+      }
+    }
+
+    private def cellTopK(ids: Array[Long],
+        vs: scala.collection.mutable.ArrayBuffer[Array[Double]],
+        ns: Array[Double], k: Int, src: Boolean,
+        ansi: Boolean): Iterator[Ranked] = {
+      val m = ids.length
+      val cnt = new Array[Int](m)
+      val topO = new Array[Long](m * k)
+      val topC = new Array[Double](m * k)
+      val topNull = new Array[Boolean](m * k)
+      // insertion into member i's slots, (cos desc NULLS LAST, id asc)
+      def offer(i: Int, o: Long, c: Double, isNull: Boolean): Unit = {
+        val b = i * k
+        var pos = cnt(i)
+        while (pos > 0 && {
+            val q = b + pos - 1
+            if (isNull != topNull(q)) !isNull
+            else if (isNull) o < topO(q)
+            else c > topC(q) || (c == topC(q) && o < topO(q))
+          }) pos -= 1
+        if (pos < k) {
+          var q = b + math.min(cnt(i), k - 1)
+          while (q > b + pos) {
+            topO(q) = topO(q - 1); topC(q) = topC(q - 1)
+            topNull(q) = topNull(q - 1); q -= 1
+          }
+          topO(q) = o; topC(q) = c; topNull(q) = isNull
+          if (cnt(i) < k) cnt(i) += 1
+        }
+      }
+      var i = 0
+      while (i < m) {
+        var j = i + 1
+        while (j < m) {
+          val den = ns(i) * ns(j)
+          if (den == 0.0) {
+            if (ansi) divideByZero()
+            offer(i, ids(j), 0.0, isNull = true)
+            offer(j, ids(i), 0.0, isNull = true)
+          } else {
+            val a = vs(i); val b = vs(j)
+            val n = math.min(a.length, b.length)
+            var d = 0.0; var x = 0
+            while (x < n) { d += a(x) * b(x); x += 1 }
+            val c = d / den
+            if (!java.lang.Double.isNaN(c)) {
+              offer(i, ids(j), c, isNull = false)
+              offer(j, ids(i), c, isNull = false)
+            }
+          }
+          j += 1
+        }
+        i += 1
+      }
+      Iterator.range(0, m).flatMap { i =>
+        if (cnt(i) == 0)
+          if (src) Iterator.single((ids(i), true, None, None)) else Iterator.empty
+        else Iterator.range(i * k, i * k + cnt(i)).map(q =>
+          (ids(i), src, Some(topO(q)),
+            if (topNull(q)) None else Some(topC(q))))
+      }
+    }
+
+    /** Throws the error the SQL `/` raises under ANSI: the same
+      * expression, evaluated over a zero divisor. */
+    private def divideByZero(): Nothing = {
+      import org.apache.spark.sql.catalyst.expressions.{Divide, EvalMode, Literal}
+      Divide(Literal(1.0), Literal(0.0), EvalMode.ANSI).eval()
+      throw new IllegalStateException("ANSI division by zero did not throw")
+    }
+
+    /** Per source of `rows` (sorted by source, cos desc NULLS LAST,
+      * neighbor NULLS LAST): its first k distinct neighbors, ranked 1..k,
+      * when one of its lists came from a source cell. */
+    def merge(rows: Iterator[Ranked], k: Int, sentinel: Boolean)
+        : Iterator[(Long, Long, Option[Long], Option[Double])] = {
+      val in = rows.buffered
+      Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+        val p = in.head._1
+        var emit = false
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Long, Long, Option[Long], Option[Double])]
+        while (in.hasNext && in.head._1 == p) {
+          val (_, t, o, c) = in.next()
+          emit ||= t
+          if (o.isDefined && out.length < k && !out.exists(_._3 == o))
+            out += ((p, out.length + 1L, o, c))
+        }
+        if (!emit) Iterator.empty
+        else if (out.isEmpty && sentinel) Iterator.single((p, 0L, None, None))
+        else out.iterator
+      }
+    }
+  }
+
+  /** What one maintenance call re-ranks: the (shard, cell) pairs of
+    * every cell a source probes, and the touched cells whose live
+    * members are the sources. */
+  private final case class KnnFrontier(slice: Seq[(Long, Long)],
+      touched: Set[Long])
+
+  /** A maintenance call's discovery in ONE bounded collect over `meta`
+    * (vec_id, centroid_id, __shard, __t, __live) — metadata width, no
+    * vectors. A `__t` row touches its cell (a new point, or a dying
+    * one); `__live` rows are the corpus after the call. Every live
+    * point in a touched cell is a source, re-ranked over every cell it
+    * probes. The collect holds one row per (shard, cell) the store
+    * holds (≤ nlist per shard layout), with the store's own `__shard`,
+    * and the O(m²) census of the re-ranked cells fails loud from it, on
+    * the driver, before any pair is scored. */
+  private def knnFrontier(meta: DataFrame, maxBucketPoints: Long,
+      op: String): KnnFrontier = {
+    val live = col("__live")
+    val rows = meta
+      .withColumn("__tc",
+        max(col("__t")).over(Window.partitionBy(col("centroid_id"))))
+      .withColumn("__aff",
+        max(live && col("__tc")).over(Window.partitionBy(col("vec_id"))))
+      .groupBy(col("__shard"), col("centroid_id"))
+      .agg(count(when(live, 1)).as("__n"), max(col("__aff")).as("__src"),
+        max(col("__t")).as("__touched"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3),
+        r.getBoolean(4)))
+    val byCell = rows.groupBy(_._2)
+    val cells = byCell.filter(_._2.exists(_._4)).map { case (c, rs) =>
+      c -> rs.map(_._3).sum }
+    cells.find(_._2 > maxBucketPoints).foreach { case (c, n) =>
+      throw new IllegalArgumentException(s"$op: cell $c holds $n " +
+        s"probe-assigned points > maxBucketPoints=$maxBucketPoints — the " +
+        "per-cell kernel is O(m²); train more centroids, lower probes, " +
+        "or sample")
+    }
+    KnnFrontier(rows.filter(r => cells.contains(r._2)).map(r => (r._1, r._2))
+      .toSeq, byCell.filter(_._2.exists(_._5)).keySet)
+  }
+
+  /** The rows of `data` (with `__shard`) in the frontier's (shard, cell)
+    * pairs: a partition filter on the shards the pairs name (at most
+    * the shard count, whatever the corpus), then a broadcast left-semi
+    * join on the pairs — the plan carries no list of cell ids. */
+  private def knnSlice(data: DataFrame, f: KnnFrontier): DataFrame = {
+    val spark = data.sparkSession
+    import spark.implicits._
+    data.filter(col("__shard").isin(f.slice.map(_._1).distinct: _*))
+      .join(broadcast(f.slice.toDF("__shard", "centroid_id")),
+        Seq("__shard", "centroid_id"), "left_semi")
+  }
+
   /** X185: ONE increment of the MAINTAINED k-NN graph — the production
     * shape the one-shot [[knnGraph]] lacks: a growing embedding corpus
     * updates the edge list WITHOUT a full rebuild. The new batch is
@@ -1668,31 +1888,30 @@ object Similarity {
     * to a persisted assignment index under
     * `<store>/index/batch_id=N/__shard=S` (S = centroid_id mod a FIXED
     * shard count — constant directory count at any corpus size); then
-    * edges are
-    * recomputed ONLY for affected sources — every point (old or new)
-    * probing a cell the batch touched — over exactly their probed
-    * cells, and written under `<store>/edges/batch_id=N`.
+    * edges are recomputed ONLY for affected sources — every point (old
+    * or new) probing a cell the batch touched — over exactly their
+    * probed cells, and written under `<store>/edges/batch_id=N`.
     *
     * Exactness (the rebuild-parity contract, spec-proven): a source
     * outside every touched cell shares no cell with any new point, so
     * its candidate set — hence its exact top-k — is unchanged; an
     * affected source is re-ranked over its COMPLETE candidate set (the
-    * slice covers every cell it probes), with the same codegen cosine
-    * tree, the same `distinct`, the same (cos desc, id) tie order as
-    * [[knnGraph]] — so [[graft.streaming.StreamingEvents.knnGraphView]]
-    * (latest batch per source) is bit-equal to a full [[knnGraph]]
-    * rebuild over the union corpus.
+    * slice covers every cell it probes) by the same kernel as
+    * [[knnGraph]] ([[knnTopK]]) — so
+    * [[graft.streaming.StreamingEvents.knnGraphView]] (latest batch per
+    * source) is bit-equal to a full [[knnGraph]] rebuild over the union
+    * corpus.
     *
-    * Scale: the two discovery scans read ONLY (vec_id, centroid_id) —
-    * column-pruned metadata width, no vectors; vector bytes are read
-    * solely from the touched-neighborhood cells via shard partition
-    * pruning plus the pushed `centroid_id` row-group filter (cell
-    * lists collect at ≤ nlist longs — the centroid table the driver
-    * already broadcasts). Cost per batch is
-    * Σ m² over recomputed cells, not N²; the eager probe-inclusive
-    * census guard fails loud BEFORE the pair join (the X179
-    * discipline). Replays re-read only EARLIER batches and overwrite
-    * their own directories: idempotent. */
+    * Scale: discovery is one bounded collect over (vec_id, centroid_id,
+    * __shard) — column-pruned metadata width, no vectors — that also
+    * runs the probe-inclusive census guard, failing loud BEFORE any
+    * pair is scored (the X179 discipline). Vector bytes are read solely
+    * from the recomputed cells: a partition filter on their shards plus
+    * a broadcast left-semi join on their (shard, cell) pairs. The
+    * kernel holds one cell per task, at most `maxBucketPoints` × dim
+    * doubles; cost per batch is Σ m² over recomputed cells, not N².
+    * Replays re-read only EARLIER batches and overwrite their own
+    * directories: idempotent. */
   def knnGraphIncrement(newPoints: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, dim: Int, k: Int,
       storeDir: String, batchId: Long, probes: Int = 2,
@@ -1705,128 +1924,34 @@ object Similarity {
     // persisted LOCALLY and released in the finally below — the
     // streaming sink invokes this once per micro-batch with no harness
     // release point, so session-lifetime tracking
-    // (Caches.persistTracked) would pin one pair of cached plans per
-    // batch forever on a long-running stream
+    // (Caches.persistTracked) would pin one cached plan per batch
+    // forever on a long-running stream
     val newA =
       ivfAssignProbes(newPoints, idCol, vecCol, centroids, dim, probes)
         .persist()
-    var allMeta: DataFrame = null
-    var slice: DataFrame = null
     try {
-    // the resurrection guard runs BEFORE the index write: a refused
-    // batch must leave no rows for later batches to read as corpus
-    ledger.guard(newA, "vec_id", "knnGraphIncrement",
-      "compactKnnStore (or knnGraphRefresh)", Some(batchId))
-    writeKnnIndex(newA, storeDir, batchId)
-    // prior corpus = strictly earlier batches (replay-idempotent),
-    // minus earlier tombstones ([[knnGraphDelete]]); the index dir
-    // always exists — this batch just wrote to it
-    val prior = ledger.minus(readKnnIndex(spark, storeDir)
-      .filter(col("batch_id") < batchId)
-      .drop("batch_id"), Some(batchId))
-    val all = withShard(prior).unionByName(withShard(newA))
-    // touched cells stay a (≤ nlist row) DataFrame derived from the
-    // cached newA (recomputed per consumer — a distinct over the cache,
-    // not itself persisted; cheap enough that pinning it never paid in
-    // profiles) — the old
-    // collected array cost one driver round-trip per increment and was
-    // only a pruning hint on scans that now read the metadata cache
-    val touchedCells = newA.select(col("centroid_id")).distinct()
-    // discovery runs over ONE persisted metadata-width projection
-    // (vec_id, centroid_id, __shard — no vector bytes): the store is
-    // scanned once for discovery instead of once per derived question
-    allMeta = all.select(col("vec_id"), col("centroid_id"),
-      col("__shard")).persist()
-    // affected sources: any point probing a touched cell
-    val srcIds = allMeta
-      .join(touchedCells, Seq("centroid_id"), "left_semi")
-      .select(col("vec_id")).distinct()
-    // ONE discovery job replaces the old cells-collect + census-guard
-    // pair: per cell, (total points, affected points); `cells` is
-    // every cell an affected source probes, and for exactly those
-    // cells `total` IS the old slice census — so the O(m²) guard fails
-    // loud from the same bounded collect (≤ nlist rows).
-    val stats = allMeta.select(col("vec_id"), col("centroid_id"))
-      .join(srcIds.withColumn("__aff", lit(1)), Seq("vec_id"), "left")
-      .groupBy(col("centroid_id"))
-      .agg(count(lit(1)).as("__total"), count(col("__aff")).as("__naff"))
-      .filter(col("__naff") > 0)
-      .collect()
-    val over = stats.find(_.getLong(1) > maxBucketPoints)
-    require(over.isEmpty,
-      s"knnGraphIncrement: cell ${over.get.get(0)} holds " +
-        s"${over.get.getLong(1)} probe-assigned points > " +
-        s"maxBucketPoints=$maxBucketPoints — the per-cell pair join is " +
-        "O(m²); train more centroids, lower probes, or sample")
-    // the recompute slice covers EVERY cell an affected source probes,
-    // so each recomputed top-k sees its complete candidate set
-    val cells = stats.map(_.getLong(0))
-    slice = all.filter(col("__shard").isin(shardsOf(cells): _*) &&
-        col("centroid_id").isin(cells: _*))
-      .drop("__shard")
-      .persist()
-    // src served from the persisted slice (touched ⊆ cells, so the
-    // slice holds every touched-cell row): the edges job reads the
-    // cache instead of re-scanning the store
-    val src = slice.join(touchedCells, Seq("centroid_id"), "left_semi")
-      .select(col("vec_id")).distinct()
-    writeKnnEdges(recomputeKnnEdges(slice, src, k), storeDir, batchId)
-    } finally {
-      newA.unpersist(true)
-      if (allMeta != null) allMeta.unpersist(true)
-      if (slice != null) slice.unpersist(true)
-    }
+      // the resurrection guard runs BEFORE the index write: a refused
+      // batch must leave no rows for later batches to read as corpus
+      ledger.guard(newA, "vec_id", "knnGraphIncrement",
+        "compactKnnStore (or knnGraphRefresh)", Some(batchId))
+      writeKnnIndex(newA, storeDir, batchId)
+      // prior corpus = strictly earlier batches (replay-idempotent),
+      // minus earlier tombstones ([[knnGraphDelete]]), each row under
+      // the __shard it was written with; the index dir always exists —
+      // this batch just wrote to it
+      val prior = ledger.minus(readKnnIndex(spark, storeDir)
+        .filter(col("batch_id") < batchId)
+        .drop("batch_id"), Some(batchId))
+      val all = prior.withColumn("__t", lit(false))
+        .unionByName(withShard(newA).withColumn("__t", lit(true)))
+      val f = knnFrontier(all.select(col("vec_id"), col("centroid_id"),
+        col("__shard"), col("__t"), lit(true).as("__live")),
+        maxBucketPoints, "knnGraphIncrement")
+      writeKnnEdges(knnEdges(knnSlice(all, f), k, Some(f.touched)),
+        storeDir, batchId)
+    } finally newA.unpersist(true)
     ()
   }
-
-  /** Exact top-k edge rows for the `src` sources over `slice` — their
-    * COMPLETE probed-cell candidate set — shared verbatim by
-    * [[knnGraphIncrement]] and [[knnGraphDelete]]: same codegen
-    * cosine, same half-relation dedup (bit-symmetric distance, (p<o)
-    * through the `distinct`, swap re-emitted), same (cos desc, id)
-    * tie order as the one-shot [[knnGraph]]. */
-  private def recomputeKnnEdges(slice: DataFrame, src: DataFrame,
-      k: Int): DataFrame =
-    knnRankTopK(knnPairCosines(slice)
-      .join(src.select(col("vec_id").as("__p")), Seq("__p")), k)
-
-  /** The per-cell exact-cosine pair relation over an assignment slice
-    * (centroid_id, vec_id, v, nrm) — half-relation dedup (bit-symmetric
-    * distance, (p<o) through the `distinct`, swap re-emitted), shared
-    * by [[recomputeKnnEdges]] and [[knnEdgesAll]]. */
-  private def knnPairCosines(slice: DataFrame): DataFrame = {
-    val a = slice.select(col("centroid_id").as("__bk"),
-      col("vec_id").as("__p"), col("v").as("__va"),
-      col("nrm").as("__na"))
-    val b = slice.select(col("centroid_id").as("__bk"),
-      col("vec_id").as("__o"), col("v").as("__vb"),
-      col("nrm").as("__nb"))
-    val half = a.join(b, Seq("__bk")).filter(col("__p") < col("__o"))
-      .withColumn("__c", nCosine(col("__va"), col("__vb"), col("__na"),
-        col("__nb")))
-      .filter(!isnan(col("__c")))
-      .select(col("__p"), col("__o"), col("__c"))
-      .distinct()
-    half.unionByName(half.select(col("__o").as("__p"),
-      col("__p").as("__o"), col("__c")))
-  }
-
-  /** The (cos desc, id) top-k ranking of a (__p, __o, __c) pair
-    * relation — the [[knnGraph]] output contract. */
-  private def knnRankTopK(pairs: DataFrame, k: Int): DataFrame =
-    pairs
-      .withColumn("rk", row_number().over(Window.partitionBy(col("__p"))
-        .orderBy(col("__c").desc, col("__o"))).cast("long"))
-      .filter(col("rk") <= k)
-      .select(col("__p").as("vec_id"), col("rk"),
-        col("__o").as("neighbor_id"), round(col("__c"), 6).as("cosine"))
-
-  /** [[recomputeKnnEdges]] with EVERY source recomputed (no src
-    * restriction) — the [[knnGraphRefresh]] full-rebuild kernel, fed by
-    * an already-computed assignment so the refresh assigns the corpus
-    * exactly once (the index write and the edge rebuild share it). */
-  private def knnEdgesAll(asg: DataFrame, k: Int): DataFrame =
-    knnRankTopK(knnPairCosines(asg), k)
 
   // Explicit store schemas: the maintained-store layout is module-owned
   // and fixed, so every read skips the parquet footer-inference job a
@@ -1892,8 +2017,15 @@ object Similarity {
     * batches and overwrite their own directories: idempotent. The
     * ledger is written AFTER the edges commit: the view must never
     * trust state before the guarded write succeeds. Deleting an
-    * unknown id is a no-op tombstone. Scale: touched cells ≤ nlist;
-    * cost is the affected sources' cells only, never N². */
+    * unknown id is a no-op tombstone.
+    *
+    * Scale: discovery (touched cells, recomputed cells and the O(m²)
+    * census, which fails loud on the driver) is ONE bounded collect
+    * over metadata width, ≤ nlist rows; the recompute reads the
+    * affected sources' cells only (shard partition filter plus a
+    * broadcast left-semi join on (shard, cell)), never N², through the
+    * [[knnTopK]] kernel: one cell per task, at most `maxBucketPoints` ×
+    * dim doubles. */
   def knnGraphDelete(deleted: DataFrame, idCol: String,
       storeDir: String, batchId: Long, k: Int,
       maxBucketPoints: Long = 100000L): Unit = {
@@ -1901,75 +2033,25 @@ object Similarity {
     val spark = deleted.sparkSession
     val ledger = knnLedger(spark, storeDir)
     val del = ledger.keys(deleted, idCol).persist()
-    var aliveMeta: DataFrame = null
-    var slice: DataFrame = null
-    var recomputed: DataFrame = null
     try {
-      val alive0 = ledger.minus(readKnnIndex(spark, storeDir)
+      val index = ledger.minus(readKnnIndex(spark, storeDir)
         .filter(col("batch_id") < batchId)
         .drop("batch_id"), Some(batchId))
-      // discovery runs over ONE persisted metadata-width projection
-      // (vec_id, centroid_id — no vector bytes): the store is scanned
-      // once for the touched/cells/census questions instead of once
-      // per question
-      aliveMeta = alive0.select(col("vec_id"), col("centroid_id"))
-        .persist()
-      // touched cells: every cell the dying points were assigned to —
-      // bounded by the centroid table (≤ nlist ids)
-      val touched = aliveMeta.join(del, Seq("vec_id"))
-        .select(col("centroid_id")).distinct()
-        .collect().map(_.getLong(0))
-      val alive = withShard(alive0.join(del, Seq("vec_id"), "left_anti"))
-      if (touched.nonEmpty) {
-        // affected sources: surviving points probing a touched cell
-        val srcIds = aliveMeta.join(del, Seq("vec_id"), "left_anti")
-          .filter(col("centroid_id").isin(touched: _*))
-          .select(col("vec_id")).distinct()
-        // ONE discovery job replaces the old cells-collect +
-        // census-guard pair (see [[knnGraphIncrement]]): per surviving
-        // cell, (total, affected) — `cells` and the O(m²) census come
-        // from the same bounded collect (≤ nlist rows).
-        val stats = aliveMeta.join(del, Seq("vec_id"), "left_anti")
-          .join(srcIds.withColumn("__aff", lit(1)), Seq("vec_id"), "left")
-          .groupBy(col("centroid_id"))
-          .agg(count(lit(1)).as("__total"),
-            count(col("__aff")).as("__naff"))
-          .filter(col("__naff") > 0)
-          .collect()
-        val over = stats.find(_.getLong(1) > maxBucketPoints)
-        require(over.isEmpty,
-          s"knnGraphDelete: cell ${over.get.get(0)} holds " +
-            s"${over.get.getLong(1)} probe-assigned points > " +
-            s"maxBucketPoints=$maxBucketPoints — the per-cell pair " +
-            "join is O(m²); train more centroids, lower probes, or " +
-            "sample")
-        val cells = stats.map(_.getLong(0))
-        slice = alive.filter(col("__shard").isin(shardsOf(cells): _*) &&
-            col("centroid_id").isin(cells: _*))
-          .drop("__shard")
-          .persist()
-        // src served from the persisted slice (touched ⊆ cells), and
-        // the recomputed edges persisted so the sentinel anti-join
-        // below reads a cache instead of re-running the pair join
-        // inside the same write job
-        val src = slice.filter(col("centroid_id").isin(touched: _*))
-          .select(col("vec_id")).distinct()
-        recomputed = recomputeKnnEdges(slice, src, k).persist()
-        val sentinels = src
-          .join(recomputed.select(col("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti")
-          .select(col("vec_id"), lit(0L).as("rk"),
-            lit(null).cast("long").as("neighbor_id"),
-            lit(null).cast("double").as("cosine"))
-        writeKnnEdges(recomputed.unionByName(sentinels), storeDir, batchId)
-      }
+      // a dying point touches every cell it was assigned to; the
+      // survivors there are the sources
+      val f = knnFrontier(index
+        .select(col("vec_id"), col("centroid_id"), col("__shard"))
+        .join(del.withColumn("__t", lit(true)), Seq("vec_id"), "left")
+        .select(col("vec_id"), col("centroid_id"), col("__shard"),
+          coalesce(col("__t"), lit(false)).as("__t"),
+          col("__t").isNull.as("__live")),
+        maxBucketPoints, "knnGraphDelete")
+      if (f.touched.nonEmpty)
+        writeKnnEdges(knnEdges(knnSlice(index.join(del, Seq("vec_id"),
+          "left_anti"), f), k, Some(f.touched), sentinel = true),
+          storeDir, batchId)
       ledger.write(del, batchId)
-    } finally {
-      del.unpersist(true)
-      if (aliveMeta != null) aliveMeta.unpersist(true)
-      if (slice != null) slice.unpersist(true)
-      if (recomputed != null) recomputed.unpersist(true)
-    }
+    } finally del.unpersist(true)
     ()
   }
 
@@ -2030,7 +2112,7 @@ object Similarity {
     * crowd a few cells, recall erodes. A refresh re-assigns the ENTIRE
     * surviving corpus (read back from the store's own index — vectors
     * live there) to `newCentroids`, rebuilds the full edge list with
-    * the one-shot [[knnGraph]] kernel, and commits both sides through
+    * the [[knnGraph]] kernel ([[knnTopK]]), and commits both sides through
     * the [[graft.store.BatchStore]] compaction protocol (rebased
     * `batch_id=<min-1>` directories, ledger cleared). When
     * `recallSample > 0` the epoch SELF-VERIFIES: view top-k
@@ -2052,7 +2134,15 @@ object Similarity {
     * (a pre-write global orderBy is one whole extra exchange + sort for
     * a property no consumer needs: row order inside the store carries
     * no meaning, and the published views re-sort). Any future direct
-    * reader of the edge files must not rely on file order. */
+    * reader of the edge files must not rely on file order.
+    *
+    * Scale: the corpus is assigned once (a row-local scan against the
+    * broadcast centroids) and that cached assignment feeds the index
+    * write, the census guard (one bounded collect, failing loud on the
+    * driver before any pair is scored) and the edge rebuild, which is
+    * one centroid_id exchange and one source exchange through the
+    * kernel: one cell per task, at most `maxBucketPoints` × dim
+    * doubles. */
   def knnGraphRefresh(spark: org.apache.spark.sql.SparkSession,
       storeDir: String, newCentroids: DataFrame, idCol: String,
       vecCol: String, dim: Int, k: Int, probes: Int = 2,
@@ -2084,9 +2174,9 @@ object Similarity {
         require(over.isEmpty,
           s"knnGraphRefresh: cell ${over.head.get(0)} holds " +
             s"${over.head.getLong(1)} probe-assigned points > " +
-            s"maxBucketPoints=$maxBucketPoints — the per-cell pair join " +
+            s"maxBucketPoints=$maxBucketPoints — the per-cell kernel " +
             "is O(m²); train more centroids, lower probes, or sample")
-        writeKnnEdges(knnEdgesAll(asg, k), storeDir, edgeTo)
+        writeKnnEdges(knnEdges(asg, k), storeDir, edgeTo)
       }.last
       if (recallSample > 0) {
         // deterministic sample: the recallSample smallest source ids —

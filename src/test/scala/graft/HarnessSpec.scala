@@ -43,4 +43,11 @@ class HarnessSpec extends SparkSpec {
       .map(p => root.relativize(p).toString).toList
     builders shouldBe List("graft/tools/Harness.scala")
   }
+
+  "Profile.covered" should "count time shared by concurrent jobs once" in {
+    // two overlapping jobs and one disjoint: 0–10 ∪ 5–12 ∪ 20–21
+    Profile.covered(Seq((5L, 12L), (0L, 10L), (20L, 21L))) shouldBe 13L
+    Profile.covered(Seq((0L, 10L), (2L, 3L))) shouldBe 10L
+    Profile.covered(Nil) shouldBe 0L
+  }
 }

@@ -37,13 +37,15 @@ class PlanGuardSpec extends SparkSpec {
       "embedding", cents, dim = 8, k = 2, probes = 2))
     haloPlan should not include "CartesianProduct"
     haloPlan should not include "BroadcastNestedLoopJoin"
-    // X182 k-NN graph: same relation, ranking window partitioned by
-    // the source point (m_eff-bounded), codegen'd graft_dot distances
+    // X182 k-NN graph: the cell-local kernel — one exchange on the cell
+    // id feeds it, and no pair relation is ever joined or windowed
     val knnPlan = planOf(Similarity.knnGraph(vecs, "vec_id",
       "embedding", cents, dim = 8, k = 2, probes = 2))
     knnPlan should not include "CartesianProduct"
     knnPlan should not include "BroadcastNestedLoopJoin"
-    knnPlan should include("graft_dot")
+    knnPlan should include regex "Exchange hashpartitioning\\(centroid_id#\\d+L?, "
+    knnPlan should not include "Window"
+    knnPlan should not include "SortMergeJoin"
     // X183 mutual-kNN clusters: the reciprocity cut is an equi
     // intersect, the closure the CC propagation loop — still no
     // cartesian anywhere
@@ -1241,6 +1243,80 @@ class PlanGuardSpec extends SparkSpec {
         graft.store.Ledger.within(spark, store, "vec_id"))
         .foreach(_.read().isDefined shouldBe true)
     } shouldBe 0
+    graft.util.Caches.releaseAll(spark)
+  }
+
+  /** Physical plans of the queries `body` runs, in order. A marker query
+    * afterwards proves the listener bus has delivered every earlier one. */
+  private def plansDuring(body: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.put(qe.executedPlan.toString)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = plans.put(qe.executedPlan.toString)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF("graft_plan_marker").collect()
+      Iterator.continually(Option(plans.poll(60,
+          java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("the marker query never reported")))
+        .takeWhile(!_.contains("graft_plan_marker")).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private lazy val knnCents = vecs.filter(col("vec_id") % 10 === 0)
+  // a third batch of new ids for the maintenance calls under test
+  private lazy val knnMore = vecs.select((col("vec_id") + 100L).as("vec_id"),
+    col("embedding")).filter(col("vec_id") % 3 === 0)
+
+  /** A two-batch k-NN store over `vecs`. */
+  private def knnStore(name: String): String = {
+    val store = java.nio.file.Files.createTempDirectory(name).toString + "/knn"
+    for (m <- 0 to 1)
+      Similarity.knnGraphIncrement(vecs.filter(col("vec_id") % 2 === m),
+        "vec_id", "embedding", knnCents, 8, 2, store, m.toLong)
+    store
+  }
+
+  it should "slice the k-NN maintenance recompute by broadcast left-semi join, with no list of cell ids" in {
+    val store = knnStore("graft_knn_slice")
+    val cellList = "centroid_id#\\d+L? (IN \\(|INSET )".r
+    def check(plans: Seq[String]): Unit = {
+      plans.exists(_.linesIterator.exists(l =>
+        l.contains("BroadcastHashJoin") && l.contains("LeftSemi") &&
+          l.contains("__shard") && l.contains("centroid_id"))) shouldBe true
+      plans.foreach(p => cellList.findFirstIn(p) shouldBe None)
+      // shard pruning reaches the index scan as a partition filter
+      plans.exists(_.linesIterator.exists(l => l.contains("FileScan") &&
+        l.contains("index") && l.matches(".*PartitionFilters: \\[.*__shard.*"))) shouldBe true
+    }
+    check(plansDuring(Similarity.knnGraphIncrement(knnMore, "vec_id",
+      "embedding", knnCents, 8, 2, store, 2L)))
+    check(plansDuring(Similarity.knnGraphDelete(Seq(3L, 104L)
+      .toDF("vec_id"), "vec_id", store, 3L, 2)))
+    graft.util.Caches.releaseAll(spark)
+  }
+
+  it should "keep each k-NN maintenance call within its Spark job budget" in {
+    // the budgets are the counts measured when the cell-local kernel and
+    // the one-collect discovery landed (CHANGES.md; 26, 31 and 14 jobs
+    // before them); a rise means a new job per call crept back in
+    val store = knnStore("graft_knn_budget")
+    val inc = jobsDuring(Similarity.knnGraphIncrement(knnMore, "vec_id",
+      "embedding", knnCents, 8, 2, store, 2L))
+    val del = jobsDuring(Similarity.knnGraphDelete(Seq(3L, 104L)
+      .toDF("vec_id"), "vec_id", store, 3L, 2))
+    val refresh = jobsDuring(Similarity.knnGraphRefresh(spark, store,
+      vecs.filter(col("vec_id") % 10 === 5), "vec_id", "embedding", 8, 2))
+    info(s"jobs: increment $inc, delete $del, refresh $refresh")
+    inc should be <= 11
+    del should be <= 13
+    refresh should be <= 11
     graft.util.Caches.releaseAll(spark)
   }
 }
