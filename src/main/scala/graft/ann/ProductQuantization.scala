@@ -42,13 +42,6 @@ object ProductQuantization {
       .map(r => (r._2, r._3)).toArray).toArray
   }
 
-  private def requireNumericId(df: DataFrame, idCol: String,
-      op: String): Unit = {
-    val t = df.schema(idCol).dataType
-    require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"$op requires a numeric $idCol (castable to long), got $t")
-  }
-
   /** Exact squared L2 between a subvector of `v` starting at `off` and a
     * centroid — bounded by the vector's real length, so ragged or short
     * embeddings degrade (missing dims contribute nothing) instead of
@@ -140,7 +133,7 @@ object ProductQuantization {
     * quantization loss PQ evaluations report). */
   def encode(df: DataFrame, idCol: String, vecCol: String,
       codebooks: DataFrame, m: Int): DataFrame = {
-    requireNumericId(df, idCol, "encode")
+    Similarity.requireNumericId(df, idCol, "encode")
     val spark = df.sparkSession
     import spark.implicits._
     val cb = collectCodebooks(codebooks, m)
@@ -170,7 +163,6 @@ object ProductQuantization {
     * batch-of-queries contract as [[Similarity.bruteForceTopK]]. */
   def adcTopK(queries: DataFrame, encoded: DataFrame, idCol: String,
       vecCol: String, codebooks: DataFrame, m: Int, k: Int): DataFrame = {
-    requireNumericId(queries, idCol, "adcTopK")
     val spark = queries.sparkSession
     import spark.implicits._
     val cb = collectCodebooks(codebooks, m)
@@ -180,13 +172,9 @@ object ProductQuantization {
     // out of bounds or, worse, silently reading a wrong slot
     val codeSlot: Array[Map[Long, Int]] =
       cb.map(_.iterator.map(_._1).zipWithIndex.toMap)
-    val qluts: Array[(Long, Array[Array[Double]])] = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-      .sortBy(_._1)
-      .map { case (qid, qv) =>
-        require(qv != null, s"adcTopK: query id=$qid has a NULL embedding")
+    val qluts: Array[(Long, Array[Array[Double]])] =
+      Similarity.driverVectors(queries, idCol, vecCol, "adcTopK")
+      .map { case (qid, qv, _) =>
         val lut = cb.zipWithIndex.map { case (book, s) =>
           val sub = book(0)._2.length
           book.map { case (_, cv) => subDist(qv, s * sub, cv) }
@@ -268,13 +256,9 @@ object ProductQuantization {
   }
 
   private def collectCentroidMap(centroids: DataFrame, idCol: String,
-      vecCol: String): Map[Long, Array[Double]] = {
-    val spark = centroids.sparkSession
-    import spark.implicits._
-    centroids.select(col(idCol).cast("long"),
-        col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])].collect().toMap
-  }
+      vecCol: String, op: String): Map[Long, Array[Double]] =
+    Similarity.driverVectors(centroids, idCol, vecCol, op)
+      .map(c => c._1 -> c._2).toMap
 
   /** Build the IVFADC index (Jégou et al. 2011 §IV): every vector is
     * assigned to its probe-0 IVF bucket by [[Similarity.ivfAssign]]'s
@@ -297,7 +281,8 @@ object ProductQuantization {
     import spark.implicits._
     val cb = collectCodebooks(codebooks, m)
     val bc = spark.sparkContext.broadcast(
-      (cb, if (residual) collectCentroidMap(centroids, idCol, vecCol)
+      (cb, if (residual)
+        collectCentroidMap(centroids, idCol, vecCol, "ivfEncode")
         else Map.empty[Long, Array[Double]]))
     val res = residual
     Similarity.ivfAssign(df, idCol, vecCol, centroids, dim)
@@ -326,7 +311,7 @@ object ProductQuantization {
     val spark = df.sparkSession
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(
-      collectCentroidMap(centroids, idCol, vecCol))
+      collectCentroidMap(centroids, idCol, vecCol, "trainResidualCodebooks"))
     val residuals = Similarity.ivfAssign(df, idCol, vecCol, centroids, dim)
       .select(col("vec_id"), col("v"), col("centroid_id"))
       .as[(Long, Array[Double], Long)]
@@ -360,23 +345,14 @@ object ProductQuantization {
   def ivfAdcTopK(queries: DataFrame, encoded: DataFrame, idCol: String,
       vecCol: String, centroids: DataFrame, codebooks: DataFrame,
       m: Int, k: Int, probes: Int, residual: Boolean = false): DataFrame = {
-    requireNumericId(queries, idCol, "ivfAdcTopK")
     require(probes >= 1, s"probes must be >= 1, got $probes")
     val spark = queries.sparkSession
     import spark.implicits._
     val cb = collectCodebooks(codebooks, m)
     val codeSlot: Array[Map[Long, Int]] =
       cb.map(_.iterator.map(_._1).zipWithIndex.toMap)
-    val cents: Array[(Long, Array[Double], Double)] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-      .sortBy(_._1)
-      .map { case (id, v) =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        (id, v, math.sqrt(s))
-      }
+    val cents = Similarity.driverVectors(centroids, idCol, vecCol,
+      "ivfAdcTopK")
     require(cents.nonEmpty, "centroid set must be non-empty")
     val centMap: Map[Long, Array[Double]] =
       if (residual) cents.map(c => c._1 -> c._2).toMap
@@ -386,19 +362,13 @@ object ProductQuantization {
     // number — then centroid id asc, exactly ivfAssignProbes) + one ADC
     // LUT per probed bucket (the SAME shared array in non-residual mode;
     // the query's bucket-residual LUT in residual mode)
-    val qs: Array[(Long, Array[(Long, Array[Array[Double]])])] = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-      .sortBy(_._1)
-      .map { case (qid, qv) =>
-        require(qv != null, s"ivfAdcTopK: query id=$qid has a NULL embedding")
+    val qs: Array[(Long, Array[(Long, Array[Array[Double]])])] =
+      Similarity.driverVectors(queries, idCol, vecCol, "ivfAdcTopK")
+      .map { case (qid, qv, qn) =>
         // probe ranking via the SHARED Similarity.topProbes — the same
         // code ivfAssignProbes runs, so the broadcast and distributed
         // forms can never drift apart
-        var s0 = 0.0; var qi = 0
-        while (qi < qv.length) { s0 += qv(qi) * qv(qi); qi += 1 }
-        val probed = Similarity.topProbes(qv, math.sqrt(s0), cents, p)
+        val probed = Similarity.topProbes(qv, qn, cents, p)
         def lutFor(base: Array[Double]): Array[Array[Double]] =
           cb.zipWithIndex.map { case (book, s) =>
             val sub = book(0)._2.length
@@ -506,7 +476,7 @@ object ProductQuantization {
       cb.map(_.iterator.map(_._1).zipWithIndex.toMap)
     val bcAll = spark.sparkContext.broadcast(
       (cb, codeSlot, if (residual)
-        collectCentroidMap(centroids, idCol, vecCol)
+        collectCentroidMap(centroids, idCol, vecCol, "ivfAdcTopKDistributed")
       else Map.empty[Long, Array[Double]]))
     val kk = k
     val probed = Similarity

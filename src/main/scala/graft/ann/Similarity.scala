@@ -42,16 +42,6 @@ object Similarity {
   def nativeDot(a: Column, b: Column): Column =
     call_function(graft.functions.DotProductExpr.Name, a, b)
 
-  /** Fallback fold for unknown dimension (interpreted, slower). */
-  def dotFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column, dim: Int): Column = sqrt(dot(a, a, dim))
-
-  def cosine(a: Column, b: Column, normA: Column, normB: Column,
-      dim: Int): Column =
-    dot(a, b, dim) / (normA * normB)
-
   // Native-expression forms used by the operator entry points (which
   // guarantee registration via ensureNative).
   private def nNorm(a: Column): Column = sqrt(nativeDot(a, a))
@@ -73,6 +63,38 @@ object Similarity {
     df.select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("v"))
       .withColumn("nrm", nNorm(col("v")))
+  }
+
+  /** Fails loud, naming `op`, unless `idCol` of `df` is numeric: the
+    * typed kernels key on LONG ids, and `cast("long")` of any other type
+    * yields NULLs that fail deep inside Dataset decoding. */
+  private[ann] def requireNumericId(df: DataFrame, idCol: String,
+      op: String): Unit = {
+    val t = df.schema(idCol).dataType
+    require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
+      s"$op requires a numeric $idCol (castable to long), got $t")
+  }
+
+  /** The driver-side vector table of a small frame (centroids, a query
+    * batch, a broadcast index): (id, vector, norm) rows sorted by id, the
+    * order every strict-superiority scan over them relies on. Fails loud,
+    * naming `op`, on a non-numeric id or a NULL vector. */
+  private[ann] def driverVectors(df: DataFrame, idCol: String,
+      vecCol: String, op: String): Array[(Long, Array[Double], Double)] = {
+    requireNumericId(df, idCol, op)
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+      .as[(Long, Array[Double])]
+      .collect()
+      .sortBy(_._1)
+      .map { case (id, v) =>
+        require(v != null, s"$op: vector id=$id has a NULL embedding — " +
+          "filter or impute null vectors first")
+        var s = 0.0; var i = 0
+        while (i < v.length) { s += v(i) * v(i); i += 1 }
+        (id, v, math.sqrt(s))
+      }
   }
 
   /** Brute-force exact cosine top-k of `candidates` per row of `queries`
@@ -98,24 +120,9 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    // same long-id contract as ivfAssign — reject other id types up front
-    for (d <- Seq(queries, candidates)) {
-      val t = d.schema(idCol).dataType
-      require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"bruteForceTopK requires a numeric $idCol (castable to long), got $t")
-    }
-    val index: Array[(Long, Array[Double], Double)] = candidates
-      .select(col(idCol).cast("long"),
-        col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-      .sortBy(_._1)
-      .map { case (id, v) =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        (id, v, math.sqrt(s))
-      }
-    val bc = spark.sparkContext.broadcast(index)
+    requireNumericId(queries, idCol, "bruteForceTopK")
+    val bc = spark.sparkContext.broadcast(
+      driverVectors(candidates, idCol, vecCol, "bruteForceTopK"))
     queries
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .as[(Long, Array[Double])]
@@ -188,18 +195,9 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    for (d <- Seq(queries, candidates)) {
-      val t = d.schema(idCol).dataType
-      require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"bruteForceTopKL2 requires a numeric $idCol (castable to long), got $t")
-    }
-    val index: Array[(Long, Array[Double])] = candidates
-      .select(col(idCol).cast("long"),
-        col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-      .sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(index)
+    requireNumericId(queries, idCol, "bruteForceTopKL2")
+    val bc = spark.sparkContext.broadcast(
+      driverVectors(candidates, idCol, vecCol, "bruteForceTopKL2"))
     queries
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .as[(Long, Array[Double])]
@@ -211,7 +209,7 @@ object Similarity {
           var n = 0
           var ci = 0
           while (ci < cands.length) {
-            val (cid, cv) = cands(ci)
+            val (cid, cv, _) = cands(ci)
             if (cid != qid) {
               var s = 0.0; var j = 0
               val dn = math.min(qv.length, cv.length)
@@ -314,24 +312,9 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, dim: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    for (d <- Seq(queries, candidates)) {
-      val t = d.schema(idCol).dataType
-      require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"bruteForceTopKStreamed requires a numeric $idCol, got $t")
-    }
-    val qbatch: Array[(Long, Array[Double], Double)] = queries
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-      .sortBy(_._1)
-      .map { case (id, v) =>
-        require(v != null,
-          s"bruteForceTopKStreamed: query id=$id has a NULL embedding")
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        (id, v, math.sqrt(s))
-      }
-    val bc = spark.sparkContext.broadcast(qbatch)
+    requireNumericId(candidates, idCol, "bruteForceTopKStreamed")
+    val bc = spark.sparkContext.broadcast(
+      driverVectors(queries, idCol, vecCol, "bruteForceTopKStreamed"))
     val kk = k
     val partials = candidates
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
@@ -397,71 +380,17 @@ object Similarity {
     * works.
     *
     * The nearest centroid is a ROW-LOCAL argmax over the broadcast centroid
-    * set: a primitive-array scan inside `mapPartitions`, zero shuffle. The
-    * former crossJoin + `row_number` window formulation shuffled and sorted
-    * n×c rows — with a production centroid count (√n, thousands) that is
-    * thousands× corpus traffic for a decision each row can make alone.
-    * The scan iterates centroids in ascending id and replaces only on a
-    * strictly better cosine (NaN ranked above any number, as Spark orders
-    * it), reproducing the window's (cos desc, centroid_id asc) tie-break
-    * bit-for-bit: dots accumulate left-to-right like the codegen'd
-    * `graft_dot`. */
+    * set: [[ivfAssignProbes]]' primitive-array scan with one probe, zero
+    * shuffle. The former crossJoin + `row_number` window formulation
+    * shuffled and sorted n×c rows — with a production centroid count (√n,
+    * thousands) that is thousands× corpus traffic for a decision each row
+    * can make alone. The scan reproduces the window's (cos desc,
+    * centroid_id asc) tie-break bit-for-bit, NaN ranked above any number
+    * as Spark orders it: dots accumulate left-to-right like the codegen'd
+    * `graft_dot`. Output: (vec_id, v, nrm, centroid_id). */
   def ivfAssign(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, dim: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // the typed argmax path keys on LONG ids (same contract as
-    // bruteForceTopK); reject other id types up front instead of letting
-    // cast("long") produce NULLs that fail deep inside Dataset decoding
-    for (d <- Seq(df, centroids)) {
-      val t = d.schema(idCol).dataType
-      require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"ivfAssign requires a numeric $idCol (castable to long), got $t")
-    }
-    val cents: Array[(Long, Array[Double], Double)] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-      .sortBy(_._1)
-      .map { case (id, v) =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        (id, v, math.sqrt(s))
-      }
-    require(cents.nonEmpty, "centroid set must be non-empty")
-    val bc = spark.sparkContext.broadcast(cents)
-    df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { rows =>
-        val cs = bc.value
-        rows.map { case (id, v) =>
-          if (v == null) throw new IllegalArgumentException(
-            s"ivfAssign: vector id=$id has a NULL embedding — filter or " +
-              "impute null vectors before assignment")
-          var s = 0.0; var i = 0
-          while (i < v.length) { s += v(i) * v(i); i += 1 }
-          val nrm = math.sqrt(s)
-          var best = Double.NegativeInfinity
-          var bestNaN = false
-          var bestId = cs(0)._1
-          var ci = 0
-          while (ci < cs.length) {
-            val (cid, cv, cn) = cs(ci)
-            var d = 0.0; var j = 0
-            val dn = math.min(v.length, cv.length)
-            while (j < dn) { d += v(j) * cv(j); j += 1 }
-            val cos = d / (nrm * cn)
-            val isNaN = java.lang.Double.isNaN(cos)
-            if (!bestNaN && (isNaN || cos > best)) {
-              best = cos; bestNaN = isNaN; bestId = cid
-            }
-            ci += 1
-          }
-          (id, v, nrm, bestId)
-        }
-      }
-      .toDF("vec_id", "v", "nrm", "centroid_id")
-  }
+      centroids: DataFrame, dim: Int): DataFrame =
+    probeScan(df, idCol, vecCol, centroids, 1, "ivfAssign").drop("probe")
 
   /** Top-`p` centroids of one vector by cosine — cos desc, NaN ranked
     * above any number (as Spark orders it), strict-superiority insertion
@@ -511,25 +440,18 @@ object Similarity {
     * the top 1 costs only the p-slot insertion — still zero shuffle.
     * Output: (vec_id, v, nrm, probe, centroid_id), one row per probe. */
   def ivfAssignProbes(df: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, dim: Int, probes: Int): DataFrame = {
+      centroids: DataFrame, dim: Int, probes: Int): DataFrame =
+    probeScan(df, idCol, vecCol, centroids, probes, "ivfAssignProbes")
+
+  /** The one cosine assignment scan behind [[ivfAssign]] and
+    * [[ivfAssignProbes]]; `op` names the entry point in its failures. */
+  private def probeScan(df: DataFrame, idCol: String, vecCol: String,
+      centroids: DataFrame, probes: Int, op: String): DataFrame = {
     require(probes >= 1, s"probes must be >= 1, got $probes")
     val spark = df.sparkSession
     import spark.implicits._
-    for (d <- Seq(df, centroids)) {
-      val t = d.schema(idCol).dataType
-      require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"ivfAssignProbes requires a numeric $idCol (castable to long), got $t")
-    }
-    val cents: Array[(Long, Array[Double], Double)] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-      .sortBy(_._1)
-      .map { case (id, v) =>
-        var s = 0.0; var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        (id, v, math.sqrt(s))
-      }
+    requireNumericId(df, idCol, op)
+    val cents = driverVectors(centroids, idCol, vecCol, op)
     require(cents.nonEmpty, "centroid set must be non-empty")
     val bc = spark.sparkContext.broadcast(cents)
     val p0 = probes
@@ -539,7 +461,7 @@ object Similarity {
         val cs = bc.value
         rows.flatMap { case (id, v) =>
           if (v == null) throw new IllegalArgumentException(
-            s"ivfAssignProbes: vector id=$id has a NULL embedding — filter " +
+            s"$op: vector id=$id has a NULL embedding — filter " +
               "or impute null vectors before assignment")
           var s = 0.0; var i = 0
           while (i < v.length) { s += v(i) * v(i); i += 1 }
@@ -640,32 +562,66 @@ object Similarity {
   /** X76: the PERSISTED IVF index projection — (vec_id, centroid_id,
     * embedding), each row's bucket from the zero-shuffle broadcast-
     * centroid argmax ([[ivfAssign]]). The production contract mirrors
-    * the X22 dedup index: write this once (partitioned by
-    * `centroid_id`, see [[writeIvfIndex]]), then index NEW embedding
-    * batches by calling this same function on the batch and APPENDING —
-    * assignment is per-row against the FROZEN centroid table
-    * ([[trainCentroids]]' persist-once contract), so increments never
-    * retrain, never re-read history, and a two-batch build is
-    * row-identical to one-shot (spec-proven). */
+    * the X22 dedup index: write this once ([[writeIvfIndex]]), then
+    * index NEW embedding batches by calling this same function on the
+    * batch and APPENDING — assignment is per-row against the FROZEN
+    * centroid table ([[trainCentroids]]' persist-once contract), so
+    * increments never retrain, never re-read history, and a two-batch
+    * build is row-identical to one-shot (spec-proven). */
   def buildIvfIndex(df: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, dim: Int): DataFrame =
     ivfAssign(df, idCol, vecCol, centroids, dim)
       .select(col("vec_id"), col("centroid_id"),
         col("v").as("embedding"))
 
-  /** Write (or append) an X76 index, `partitionBy(centroid_id)` — the
-    * layout that lets a query batch's bucket join dynamically prune
-    * index files: with the probe side broadcast, Spark's dynamic
-    * partition pruning reads ONLY the probed buckets' files, so query
-    * cost scales with buckets touched, not index size. The write
-    * repartitions on `centroid_id` first: without it every task writes
-    * a file into every bucket directory (tasks × buckets files — 64k
-    * tiny files at sf1 with 2k buckets, and the measured dominant cost),
-    * with it each bucket gets ONE file per append. */
+  /** Write (or append) an X76 index as a new batch of the IVF store at
+    * `path`. Its id counts down from the store's minimum (-1 for a new
+    * store), as [[graft.store.BatchStore.compact]]'s targets do, so it
+    * never meets a sink's stream ids, which count up from 0: seed a
+    * store here, then stream into it. `overwrite` writes the new batch
+    * first, then deletes the other batches and the tombstone ledger, so
+    * `index` may read the store it replaces. Re-appending a vector
+    * deleted by [[deleteFromIvfIndex]] fails loud until
+    * [[compactIvfIndex]] has run. Run one writeIvfIndex or compaction
+    * on a store at a time: two would take the same id. */
   def writeIvfIndex(index: DataFrame, path: String,
-      mode: String = "append"): Unit =
-    index.repartition(col("centroid_id"))
-      .write.mode(mode).partitionBy("centroid_id").parquet(path)
+      mode: String = "append"): Unit = {
+    require(mode == "append" || mode == "overwrite",
+      s"writeIvfIndex: mode must be append or overwrite, got $mode")
+    val spark = index.sparkSession
+    val old =
+      if (!graft.store.BatchStore.exists(spark, path)) None
+      else Some(graft.store.BatchStore.batches(spark, path,
+        "writeIvfIndex", IvfStoreWhat))
+    val to = old.fold(-1L)(_.ids.min - 1)
+    if (mode == "append")
+      ivfAppend(index, path, to, guardAs = Some("writeIvfIndex"))
+    else {
+      ivfAppend(index, path, to, guardAs = None)
+      old.foreach(_.deleteBatches())
+      ivfLedger(spark, path).clear()
+    }
+  }
+
+  /** Lands `index` as batch `batchId` of the IVF store: the one on-disk
+    * layout, `batch_id=N/centroid_id=C/`. Partitioning by `centroid_id`
+    * lets a query batch's bucket join dynamically prune index files:
+    * with the probe side broadcast, Spark's dynamic partition pruning
+    * reads ONLY the probed buckets' files, so query cost scales with
+    * buckets touched, not index size. The write repartitions on
+    * `centroid_id` first: without it every task writes a file into every
+    * bucket directory (tasks × buckets files — 64k tiny files at sf1
+    * with 2k buckets, and the measured dominant cost), with it each
+    * bucket gets ONE file per batch. `guardAs` names the public writer
+    * whose resurrection guard runs first; compaction passes `None`, its
+    * rows having already been through the ledger. */
+  private[graft] def ivfAppend(index: DataFrame, indexDir: String,
+      batchId: Long, guardAs: Option[String]): Unit = {
+    guardAs.foreach(ivfLedger(index.sparkSession, indexDir)
+      .guard(index, "vec_id", _, "compactIvfIndex"))
+    graft.store.BatchStore.append(index.repartition(col("centroid_id")),
+      indexDir, batchId, "centroid_id")
+  }
 
   /** X80: MAXIMAL-MARGINAL-RELEVANCE diversified top-k (Carbonell &
     * Goldstein 1998 — public knowledge): re-rank each query's `topN`
@@ -811,25 +767,22 @@ object Similarity {
       .unionByName(negs)
   }
 
-  /** Compact a `batch_id=`-partitioned streamed IVF index
-    * ([[graft.streaming.StreamingEvents.ivfIndexSink]]'s layout) back to
-    * ONE batch directory with one file per bucket: a long-running sink
-    * grows one file per bucket per batch, and listing cost eventually
-    * dominates queries. Crash window, target id and ledger handling
-    * follow [[graft.store.BatchStore]]; crash-window duplicates do not
-    * change query results (duplicate candidates rank identically;
-    * row_number keeps one) and this compaction's `distinct` absorbs
-    * them. Returns the consolidated batch id. */
+  /** Compact an IVF index back to ONE batch directory with one file
+    * per bucket: a long-running sink grows one file per bucket per
+    * batch, and listing cost eventually dominates queries. Crash window,
+    * target id and ledger handling follow [[graft.store.BatchStore]];
+    * crash-window duplicates do not change query results (duplicate
+    * candidates rank identically; row_number keeps one) and this
+    * compaction's `distinct` absorbs them. Returns the consolidated
+    * batch id. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): Long = {
     val side = graft.store.BatchStore.batches(spark, indexDir,
-      "compactIvfIndex",
-      "a streamed IVF index (write batches via ivfIndexSink)")
+      "compactIvfIndex", IvfStoreWhat)
     val ledger = ivfLedger(spark, indexDir)
     graft.store.BatchStore.compact(ledger, Seq(side)) { case Seq(to) =>
-      writeIvfIndex(ledger.minus(spark.read.schema(ivfBatchedSchema)
-          .parquet(indexDir).drop("batch_id")).distinct(),
-        side.batchDir(to), mode = "overwrite")
+      ivfAppend(ledger.minus(spark.read.schema(ivfSchema).parquet(indexDir)
+          .drop("batch_id")).distinct(), indexDir, to, guardAs = None)
     }.head
   }
 
@@ -839,47 +792,32 @@ object Similarity {
       indexDir: String) =
     graft.store.Ledger.beside(spark, indexDir, "vec_id")
 
-  // Explicit IVF store schemas — the same footer-inference-skipping
-  // discipline as the k-NN store's readKnnIndex/readKnnEdges (guide §6:
-  // the layout is module-owned, so a bare spark.read.parquet pays a
-  // schema-inference job per re-open for information the module already
-  // knows). TWO layouts exist and both are module-written: the
-  // [[writeIvfIndex]] batch table (`centroid_id=C/` at the top level)
-  // and the [[graft.streaming.StreamingEvents.ivfIndexSink]] streamed
-  // form (`batch_id=B/centroid_id=C/`). The first-level directory name
-  // IS the layout tag — one listing at open (no manifest file, no
-  // migration of existing stores) picks the pinned schema. Partition
-  // columns are declared LONG, so the int-narrowing of inferred
-  // partition values never reaches consumers.
-  private val ivfDataFields = {
-    import org.apache.spark.sql.types._
-    Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(DoubleType, containsNull = false)))
-  }
-  private val ivfFlatSchema = org.apache.spark.sql.types.StructType(
-    ivfDataFields :+ org.apache.spark.sql.types.StructField(
-      "centroid_id", org.apache.spark.sql.types.LongType))
-  private val ivfBatchedSchema = org.apache.spark.sql.types.StructType(
-    ivfDataFields ++ Seq(
-      org.apache.spark.sql.types.StructField(
-        "batch_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(
-        "centroid_id", org.apache.spark.sql.types.LongType)))
+  private val IvfStoreWhat =
+    "an IVF index written by writeIvfIndex or ivfIndexSink"
 
-  /** Schema-pinned open of an IVF index directory: reads the layout tag
-    * (the first-level partition directory name) and applies the matching
-    * module-owned schema; an unrecognized layout falls back to plain
-    * inference rather than failing a foreign table. */
+  // The IVF store schema is module-owned, so it is pinned — the same
+  // footer-inference-skipping discipline as the k-NN store's
+  // readKnnIndex/readKnnEdges: a bare spark.read.parquet pays a
+  // schema-inference job per re-open for what the module already knows.
+  // Partition columns are declared LONG, so the int-narrowing of
+  // inferred partition values never reaches consumers.
+  private val ivfSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(DoubleType, containsNull = false)),
+      StructField("batch_id", LongType), StructField("centroid_id", LongType)))
+  }
+
+  /** Schema-pinned open of an IVF index directory; fails loud, naming
+    * the missing `batch_id=*` layout, on anything else — the flat
+    * `centroid_id=C/` tables of older commits included. */
   private[graft] def openIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame =
-    graft.store.BatchStore.firstPartition(spark, indexDir) match {
-      case Some(n) if n.startsWith("centroid_id=") =>
-        spark.read.schema(ivfFlatSchema).parquet(indexDir)
-      case Some(n) if graft.store.BatchStore.isBatch(n) =>
-        spark.read.schema(ivfBatchedSchema).parquet(indexDir)
-      case _ => spark.read.parquet(indexDir)
-    }
+      indexDir: String): DataFrame = {
+    graft.store.BatchStore.batches(spark, indexDir, "readIvfIndex",
+      IvfStoreWhat)
+    spark.read.schema(ivfSchema).parquet(indexDir)
+  }
 
   /** X191: TOMBSTONE DELETES in the persisted IVF embedding index —
     * the X188/X190 lifecycle leg for the retrieval store: a taken-down
@@ -888,9 +826,7 @@ object Similarity {
     * rows are independent), so a delete is ONE ledger write under the
     * [[graft.store.BatchStore]] contract: [[readIvfIndex]] anti-joins
     * it, the streaming sink fails loud on re-ingesting a tombstoned id,
-    * and [[compactIvfIndex]] applies + clears it. Works for both index
-    * layouts (the [[writeIvfIndex]] bucket-partitioned table and the
-    * streamed `batch_id=N` form). */
+    * and [[compactIvfIndex]] applies + clears it. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, deleted: DataFrame, idCol: String,
       batchId: Long): Unit = {
@@ -913,7 +849,7 @@ object Similarity {
     * are probe-assigned row-locally (same broadcast-centroid scan —
     * zero shuffle), then BROADCAST into the bucket join so the index is
     * scanned once and NEVER shuffled, with partition-pruned file reads
-    * under the [[writeIvfIndex]] layout. Candidate norms are computed
+    * under the IVF store's `centroid_id` partitions. Candidate norms are computed
     * in the scan projection (norms are derivable, so the index stays
     * minimal and append cheap). Output matches [[ivfTopK]]:
     * (vec_id, centroid_id, rk, neighbor_id, cosine); self-matches (a
@@ -973,16 +909,8 @@ object Similarity {
       centroids: DataFrame, dim: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    for (d <- Seq(df, centroids)) {
-      val t = d.schema(idCol).dataType
-      require(t.isInstanceOf[org.apache.spark.sql.types.NumericType],
-        s"ivfAssignL2 requires a numeric $idCol (castable to long), got $t")
-    }
-    val cents: Array[(Long, Array[Double])] = centroids
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .collect()
-      .sortBy(_._1)
+    requireNumericId(df, idCol, "ivfAssignL2")
+    val cents = driverVectors(centroids, idCol, vecCol, "ivfAssignL2")
     require(cents.nonEmpty, "centroid set must be non-empty")
     val bc = spark.sparkContext.broadcast(cents)
     df.select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
@@ -997,7 +925,7 @@ object Similarity {
           var bestId = cs(0)._1
           var ci = 0
           while (ci < cs.length) {
-            val (cid, cv) = cs(ci)
+            val (cid, cv, _) = cs(ci)
             var s = 0.0; var j = 0
             val dn = math.min(v.length, cv.length)
             while (j < dn) {
@@ -1398,15 +1326,11 @@ object Similarity {
       ivfAssign(points, idCol, vecCol, centroids, dim)
         .select(col("vec_id").as("__id"), col("v").as("__v"),
           col("centroid_id").as("__bk")))
-    val oversize = asg.groupBy(col("__bk"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucketPoints)
-      .limit(1).collect()
-    require(oversize.isEmpty,
-      s"lofScoresBucketed: bucket ${oversize.head.get(0)} holds " +
-        s"${oversize.head.getLong(1)} points > maxBucketPoints=" +
+    requireCellsWithin(asg, "__bk", maxBucketPoints) { (c, n) =>
+      s"lofScoresBucketed: bucket $c holds $n points > maxBucketPoints=" +
         s"$maxBucketPoints — the per-bucket pair join is O(m²); train " +
-        "more centroids or sample the corpus")
+        "more centroids or sample the corpus"
+    }
     val a = asg.select(col("__bk"), col("__id").as("__p"),
       col("__v").as("__va"))
     val b = asg.select(col("__bk"), col("__id").as("__o"),
@@ -1499,16 +1423,22 @@ object Similarity {
         .select(col("vec_id").as("__id"), col("v").as("__v"),
           col("nrm").as("__nm"), col("probe").as("__pr"),
           col("centroid_id").as("__bk")))
-    val oversize = asg.groupBy(col("__bk"))
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucketPoints)
-      .limit(1).collect()
-    require(oversize.isEmpty,
-      s"$op: cell ${oversize.head.get(0)} holds " +
-        s"${oversize.head.getLong(1)} probe-assigned points > " +
+    requireCellsWithin(asg, "__bk", maxBucketPoints) { (c, n) =>
+      s"$op: cell $c holds $n probe-assigned points > " +
         s"maxBucketPoints=$maxBucketPoints — the per-cell pair join is " +
-        "O(m²); train more centroids, lower probes, or sample")
+        "O(m²); train more centroids, lower probes, or sample"
+    }
     asg
+  }
+
+  /** The eager cell census: one bounded job (`limit 1`) over `asg` that
+    * fails loud with `msg(cell, count)` when a `cell` value holds more
+    * than `maxPoints` rows. */
+  private def requireCellsWithin(asg: DataFrame, cell: String,
+      maxPoints: Long)(msg: (Any, Long) => String): Unit = {
+    val over = asg.groupBy(col(cell)).agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > maxPoints).limit(1).collect()
+    require(over.isEmpty, msg(over.head.get(0), over.head.getLong(1)))
   }
 
   /** X182: k-NN GRAPH PER IVF CELL — the production graph-ANN building
@@ -2167,15 +2097,11 @@ object Similarity {
         writeKnnIndex(asg, storeDir, idxTo)
         // the one-shot knnGraph's O(m²) census guard, over the shared
         // assignment (one job on the cache); same failure contract
-        val over = asg.groupBy(col("centroid_id"))
-          .agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > maxBucketPoints)
-          .limit(1).collect()
-        require(over.isEmpty,
-          s"knnGraphRefresh: cell ${over.head.get(0)} holds " +
-            s"${over.head.getLong(1)} probe-assigned points > " +
+        requireCellsWithin(asg, "centroid_id", maxBucketPoints) { (c, n) =>
+          s"knnGraphRefresh: cell $c holds $n probe-assigned points > " +
             s"maxBucketPoints=$maxBucketPoints — the per-cell kernel " +
-            "is O(m²); train more centroids, lower probes, or sample")
+            "is O(m²); train more centroids, lower probes, or sample"
+        }
         writeKnnEdges(knnEdges(asg, k), storeDir, edgeTo)
       }.last
       if (recallSample > 0) {

@@ -396,8 +396,6 @@ object AnnQueries {
       val b2 = emb.filter(col("vec_id") % 4 === 3)
       val path = s"${System.getProperty("java.io.tmpdir")}/" +
         s"graft_ivf_index_x191_${s.sparkContext.applicationId}"
-      BatchStore.delete(s, path)
-      Similarity.ivfLedger(s, path).clear()
       Similarity.writeIvfIndex(
         Similarity.buildIvfIndex(b1, "vec_id", "embedding", centroids,
           Dim), path, mode = "overwrite")

@@ -89,12 +89,6 @@ private[graft] object BatchStore {
     Stats(ids.size, files.size, ledgers.exists(exists(spark, _)))
   }
 
-  /** The name of the first `column=value` directory under `dir`: the
-    * layout tag of a partitioned table. */
-  def firstPartition(spark: SparkSession, dir: String): Option[String] =
-    fs(spark, dir).listStatus(new Path(dir)).filter(_.isDirectory)
-      .map(_.getPath.getName).find(_.contains("="))
-
   /** The batch ids stored under `dir`; fails loud, naming `who` and what
     * the store is, when `dir` is missing or holds no batch. */
   def batches(spark: SparkSession, dir: String, who: String,

@@ -232,13 +232,11 @@ object StreamingEvents {
   /** X76 streaming: IVF embedding-index maintenance over micro-batches —
     * each batch is bucket-assigned against the FROZEN centroid table
     * (the [[graft.ann.Similarity.trainCentroids]] persist-once contract)
-    * and written to `indexDir/batch_id=<id>/centroid_id=<c>/` — the
-    * [[graft.ann.Similarity.writeIvfIndex]] layout nested one level, so
-    * `spark.read.parquet(indexDir)` is directly consumable by
-    * [[graft.ann.Similarity.ivfTopKFromIndex]] (the extra batch_id
-    * partition column rides along harmlessly) and per-bucket files grow
-    * by ONE per batch. The streaming arm of the X76 lifecycle: seed with a batch build, stream
-    * appends, query any time. */
+    * and written to `indexDir/batch_id=<id>/centroid_id=<c>/`, the one
+    * IVF store layout [[graft.ann.Similarity.writeIvfIndex]] also
+    * writes, so per-bucket files grow by ONE per batch. The streaming
+    * arm of the X76 lifecycle: seed with a batch build, stream appends,
+    * query any time through [[graft.ann.Similarity.readIvfIndex]]. */
   def ivfIndexSink(embs: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, dim: Int, indexDir: String,
       checkpointDir: String): StreamingQuery =
@@ -247,17 +245,10 @@ object StreamingEvents {
 
   private[graft] def ivfIndexBatch(batch: DataFrame, batchId: Long,
       idCol: String, vecCol: String, centroids: DataFrame, dim: Int,
-      indexDir: String): Unit = {
-    val spark = batch.sparkSession
-    // the [[graft.store.BatchStore]] resurrection guard: a vector
-    // deleted by deleteFromIvfIndex must not return before
-    // compactIvfIndex
-    graft.ann.Similarity.ivfLedger(spark, indexDir).guard(batch, idCol,
-      "ivfIndexSink", "compactIvfIndex")
-    graft.ann.Similarity.writeIvfIndex(graft.ann.Similarity
-      .buildIvfIndex(batch, idCol, vecCol, centroids, dim),
-      BatchStore.batchDir(indexDir, batchId), mode = "overwrite")
-  }
+      indexDir: String): Unit =
+    graft.ann.Similarity.ivfAppend(graft.ann.Similarity
+      .buildIvfIndex(batch, idCol, vecCol, centroids, dim), indexDir,
+      batchId, guardAs = Some("ivfIndexSink"))
 
   /** X45 streaming: CCNet line dedup maintained over micro-batches —
     * each batch's lines are deduplicated against every line hash claimed

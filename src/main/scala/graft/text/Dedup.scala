@@ -793,18 +793,17 @@ object Dedup {
       vecCol: String, shingleN: Int = 3, k: Int = 16, bands: Int = 4,
       minMatch: Int = 8, minCosine: Double = 0.0): DataFrame = {
     graft.functions.DotProductExpr.register(docs.sparkSession)
-    def dot(a: Column, b: Column): Column =
-      call_function(graft.functions.DotProductExpr.Name, a, b)
+    import graft.ann.Similarity.nativeDot
     val emb = embeddings.select(col(embIdCol).cast("long").as("__eid"),
         col(vecCol).cast("array<double>").as("__v"))
-      .withColumn("__nrm", sqrt(dot(col("__v"), col("__v"))))
+      .withColumn("__nrm", sqrt(nativeDot(col("__v"), col("__v"))))
     minhashNearDuplicates(docs, idCol, textCol, shingleN, k, bands, minMatch)
       .join(emb.select(col("__eid").as("doc_a"), col("__v").as("__va"),
         col("__nrm").as("__na")), "doc_a")
       .join(emb.select(col("__eid").as("doc_b"), col("__v").as("__vb"),
         col("__nrm").as("__nb")), "doc_b")
       .withColumn("cosine",
-        dot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
+        nativeDot(col("__va"), col("__vb")) / (col("__na") * col("__nb")))
       // NaN guard is load-bearing: Spark (and DuckDB) order NaN ABOVE
       // every number, so a zero-norm embedding would pass ANY threshold
       // — a pair with no semantic signal must fail verification, not

@@ -1206,13 +1206,14 @@ class PlanGuardSpec extends SparkSpec {
       Similarity.knnGraphIncrement(vecs.filter(col("vec_id") % 2 === m),
         "vec_id", "embedding", cents, 8, 2, store, m.toLong)
     Similarity.knnGraphDelete(Seq(3L).toDF("vec_id"), "vec_id", store, 2L, 2)
+    // the IVF store's two writers land the one batch_id=N layout
     val streamed = s"$tmp/ivf_streamed"
     StreamingEvents.ivfIndexBatch(vecs, 0L, "vec_id", "embedding", cents,
       8, streamed)
-    val flat = s"$tmp/ivf_flat"
+    val written = s"$tmp/ivf_written"
     Similarity.writeIvfIndex(Similarity.buildIvfIndex(vecs, "vec_id",
-      "embedding", cents, 8), flat)
-    for (d <- Seq(streamed, flat))
+      "embedding", cents, 8), written)
+    for (d <- Seq(streamed, written))
       Similarity.deleteFromIvfIndex(spark, d, Seq(3L).toDF("vec_id"),
         "vec_id", 0L)
     val idx = s"$tmp/dedup"
@@ -1227,7 +1228,7 @@ class PlanGuardSpec extends SparkSpec {
         l.contains("LeftAnti")) shouldBe true
     antiJoinsByBroadcast(Dedup.readDedupIndex(spark, idx))
     antiJoinsByBroadcast(Similarity.readIvfIndex(spark, streamed))
-    antiJoinsByBroadcast(Similarity.readIvfIndex(spark, flat))
+    antiJoinsByBroadcast(Similarity.readIvfIndex(spark, written))
     antiJoinsByBroadcast(StreamingEvents.knnGraphView(spark, store))
     antiJoinsByBroadcast(Similarity.knnStoreCorpus(spark, store))
     // pinned schemas: opening a k-NN store, an IVF index or a ledger
@@ -1238,8 +1239,8 @@ class PlanGuardSpec extends SparkSpec {
       StreamingEvents.knnGraphView(spark, store)
       Similarity.knnStoreCorpus(spark, store)
       Similarity.readIvfIndex(spark, streamed)
-      Similarity.readIvfIndex(spark, flat)
-      Seq(Dedup.dedupLedger(spark, idx), Similarity.ivfLedger(spark, flat),
+      Similarity.readIvfIndex(spark, written)
+      Seq(Dedup.dedupLedger(spark, idx), Similarity.ivfLedger(spark, written),
         graft.store.Ledger.within(spark, store, "vec_id"))
         .foreach(_.read().isDefined shouldBe true)
     } shouldBe 0

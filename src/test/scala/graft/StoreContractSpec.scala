@@ -109,13 +109,19 @@ class StoreContractSpec extends SparkSpec {
       Dedup.buildDedupIndex(docs(ids), "doc_id", "text")
   }
 
+  // ingest alternates between the two public writers of the one layout:
+  // the sink's batch (at the stream's batch id) and writeIvfIndex (at an
+  // id counting down from the store's minimum)
   private final class IvfStore extends Store {
     private val idx = s"$root/idx"
     val sides = Seq(idx)
     val ledger = s"${idx}__tombstones"
     def ingest(ids: Seq[Long], batchId: Long): Unit =
-      StreamingEvents.ivfIndexBatch(vectors(ids), batchId, "vec_id",
-        "embedding", centroids, 4, idx)
+      if (batchId % 2 == 0)
+        StreamingEvents.ivfIndexBatch(vectors(ids), batchId, "vec_id",
+          "embedding", centroids, 4, idx)
+      else Similarity.writeIvfIndex(Similarity.buildIvfIndex(vectors(ids),
+        "vec_id", "embedding", centroids, 4), idx)
     def delete(ids: Seq[Long], batchId: Long): Unit =
       Similarity.deleteFromIvfIndex(spark, idx, ids.toDF("vec_id"),
         "vec_id", batchId)
@@ -270,6 +276,82 @@ class StoreContractSpec extends SparkSpec {
 
   "The IVF index" should "keep the tombstone-ledger store contract" in {
     holdsContract(() => new IvfStore)
+  }
+
+  "writeIvfIndex" should "refuse a deleted vector until compaction, then take it back" in {
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_back")
+      .toString + "/idx"
+    def write(ids: Seq[Long], mode: String = "append"): Unit =
+      Similarity.writeIvfIndex(Similarity.buildIvfIndex(vectors(ids),
+        "vec_id", "embedding", centroids, 4), idx, mode)
+    def ids(): Seq[Long] = Similarity.readIvfIndex(spark, idx)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    write(0L until 20L, "overwrite")
+    Similarity.deleteFromIvfIndex(spark, idx, Seq(3L).toDF("vec_id"),
+      "vec_id", 0L)
+    val refused = intercept[IllegalArgumentException](write(Seq(3L)))
+    refused.getMessage should include("writeIvfIndex")
+    refused.getMessage should include("compactIvfIndex")
+    ids() shouldBe (0L until 20L).filterNot(_ == 3L)
+    Similarity.compactIvfIndex(spark, idx)
+    write(Seq(3L))
+    ids() shouldBe (0L until 20L)
+    // overwrite starts a new store: no old batch, no ledger
+    Similarity.deleteFromIvfIndex(spark, idx, Seq(5L).toDF("vec_id"),
+      "vec_id", 1L)
+    write(Seq(5L, 6L), "overwrite")
+    ids() shouldBe Seq(5L, 6L)
+    batchDirs(idx) should have size 1
+    fs.exists(new Path(s"${idx}__tombstones")) shouldBe false
+  }
+
+  it should "seed a store that a sink then streams into, losing no batch" in {
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_seed")
+      .toString + "/idx"
+    Similarity.writeIvfIndex(Similarity.buildIvfIndex(vectors(0L until 4L),
+      "vec_id", "embedding", centroids, 4), idx)
+    // the stream's batch ids count up from 0
+    StreamingEvents.ivfIndexBatch(vectors(4L until 8L), 0L, "vec_id",
+      "embedding", centroids, 4, idx)
+    StreamingEvents.ivfIndexBatch(vectors(8L until 12L), 1L, "vec_id",
+      "embedding", centroids, 4, idx)
+    Similarity.writeIvfIndex(Similarity.buildIvfIndex(vectors(12L until 14L),
+      "vec_id", "embedding", centroids, 4), idx)
+    Similarity.readIvfIndex(spark, idx).select("vec_id").as[Long].collect()
+      .sorted.toSeq shouldBe (0L until 14L)
+    batchDirs(idx) should have size 4
+  }
+
+  it should "overwrite a store from its own read" in {
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivf_self")
+      .toString + "/idx"
+    Similarity.writeIvfIndex(Similarity.buildIvfIndex(vectors(0L until 10L),
+      "vec_id", "embedding", centroids, 4), idx)
+    Similarity.writeIvfIndex(Similarity.buildIvfIndex(vectors(10L until 12L),
+      "vec_id", "embedding", centroids, 4), idx)
+    Similarity.deleteFromIvfIndex(spark, idx, Seq(3L).toDF("vec_id"),
+      "vec_id", 0L)
+    val kept = Similarity.readIvfIndex(spark, idx)
+      .filter(col("vec_id") % 2 === 1).drop("batch_id")
+    Similarity.writeIvfIndex(kept, idx, mode = "overwrite")
+    Similarity.readIvfIndex(spark, idx)
+      .select("vec_id", "centroid_id", "embedding").collect()
+      .map(_.toString).sorted.toSeq shouldBe
+      Similarity.buildIvfIndex(vectors(Seq(1L, 5L, 7L, 9L, 11L)), "vec_id",
+        "embedding", centroids, 4).collect().map(_.toString).sorted.toSeq
+    batchDirs(idx) should have size 1
+    fs.exists(new Path(s"${idx}__tombstones")) shouldBe false
+  }
+
+  "readIvfIndex" should "fail loud on a flat centroid_id table, naming the batch layout" in {
+    val flat = java.nio.file.Files.createTempDirectory("graft_ivf_flat")
+      .toString + "/idx"
+    Similarity.buildIvfIndex(vectors(0L until 6L), "vec_id", "embedding",
+      centroids, 4).write.partitionBy("centroid_id").parquet(flat)
+    val e = intercept[IllegalArgumentException](
+      Similarity.readIvfIndex(spark, flat))
+    e.getMessage should include("readIvfIndex")
+    e.getMessage should include("batch_id=*")
   }
 
   "The k-NN store" should "keep the tombstone-ledger store contract" in {
